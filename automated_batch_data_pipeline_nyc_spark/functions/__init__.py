@@ -7,26 +7,22 @@ cost nothing extra at 100 TB.
 Reference parity:
 - F1 time_bucket CASE   (dags/nyc_taxi_pipeline_dag.py:256-260)
 - F2 EXTRACT(HOUR)      (dags/nyc_taxi_pipeline_dag.py:257-258)
-- F3 month()/year()     (spark-apps/clean_nyc_taxi_pipeline.py:2,13)
+- F3 month()            (spark-apps/clean_nyc_taxi_pipeline.py:2,13)
 - F4 coerce-to-datetime (dags/nyc_taxi_pipeline_dag.py:91-92)
-- F5 strftime           (dags/__pycache__/elt_dag.cpython-311.pyc transform_data)
-- F6 strip/trim         (dags/nyc_taxi_pipeline_dag.py:84)
+
+F5 strftime and F6 strip/trim need no helper: Spark's built-in
+``date_format`` and ``trim`` are the whole expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
     "time_bucket",
-    "hour_of_day",
     "month_of_year",
-    "year_of",
     "to_timestamp_coerce",
-    "format_date",
-    "trim_columns",
-    "stable_row_fingerprint",
 ]
 
 #: F1 bucket labels, verbatim from the reference UPDATE ... CASE.
@@ -52,19 +48,9 @@ def time_bucket(ts: Column | str) -> Column:
     )
 
 
-def hour_of_day(ts: Column | str) -> Column:
-    """F2."""
-    return F.hour(ts)
-
-
 def month_of_year(ts: Column | str) -> Column:
     """F3 — the reference's one derived column, ``pickup_month``."""
     return F.month(ts)
-
-
-def year_of(ts: Column | str) -> Column:
-    """F3 (year imported by the reference but unused)."""
-    return F.year(ts)
 
 
 def to_timestamp_coerce(s: Column | str, fmt: str | None = None) -> Column:
@@ -73,23 +59,3 @@ def to_timestamp_coerce(s: Column | str, fmt: str | None = None) -> Column:
     if fmt is None:
         return F.try_to_timestamp(F.col(s) if isinstance(s, str) else s)
     return F.try_to_timestamp(F.col(s) if isinstance(s, str) else s, F.lit(fmt))
-
-
-def format_date(ts: Column | str, fmt: str = "yyyy-MM-dd") -> Column:
-    """F5: strftime('%Y-%m-%d') equivalent."""
-    return F.date_format(ts, fmt)
-
-
-def trim_columns(df: DataFrame) -> DataFrame:
-    """F6/P7: strip whitespace from *header names* (the reference trims
-    CSV headers, dags/nyc_taxi_pipeline_dag.py:84)."""
-    return df.toDF(*[c.strip() for c in df.columns])
-
-
-def stable_row_fingerprint(*cols: Column | str) -> Column:
-    """Deterministic 128-bit row fingerprint (md5 over a canonical
-    concatenation) — used by exact dedup and by tests to hash results.
-    md5 (not xxhash64) so a SQL oracle can reproduce it bit-for-bit.
-    """
-    parts = [F.coalesce(F.col(c).cast("string") if isinstance(c, str) else c.cast("string"), F.lit("\x00")) for c in cols]
-    return F.md5(F.concat_ws("\x1f", *parts))

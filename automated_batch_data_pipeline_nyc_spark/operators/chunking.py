@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .tokenize import space_tokens
+
 __all__ = ["chunk_documents", "pack_token_windows"]
 
 
@@ -40,7 +42,7 @@ def chunk_documents(
     if not 0 <= overlap < chunk_tokens:
         raise ValueError(f"need 0 <= overlap < chunk_tokens, got {overlap}/{chunk_tokens}")
     stride = chunk_tokens - overlap
-    toks = F.split(F.col(text_col), " ")
+    toks = space_tokens(text_col)
     n = F.size(toks)
     # chunk starts: 1, 1+stride, 1+2*stride, ... while start <= n - overlap
     # (so no chunk is pure overlap of the previous one); always >= 1 chunk.

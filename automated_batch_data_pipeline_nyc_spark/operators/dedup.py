@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .tokenize import space_tokens, whitespace_tokens, word_ngrams
 from .util import spread
 from ..plans.capture import checkpoint as _ckpt
 
@@ -41,7 +42,6 @@ __all__ = [
     "lsh_candidate_pairs",
     "minhash_pairs",
     "minhash_dedup",
-    "simhash_signature",
     "with_simhash",
     "with_minhash_portable",
     "simhash_candidate_pairs",
@@ -53,7 +53,6 @@ __all__ = [
     "containment_prefix_pairs",
     "jaccard_prefix_pairs",
     "duplicated_ngram_spans",
-    "keep_canonical",
 ]
 
 
@@ -87,27 +86,24 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 def shingle(text: Column | str, n: int = 5, word_grams: bool = True) -> Column:
     """Distinct shingle array for a text column.
 
-    ``word_grams``: n-token word shingles (robust for natural text);
+    ``word_grams``: n-token word shingles over the lowercased
+    :func:`~.tokenize.whitespace_tokens` (robust for natural text);
     otherwise character n-grams.  Built entirely from array expressions
     (split / transform / slice / array_distinct) — codegen'd, map-only.
     """
     t = F.col(text) if isinstance(text, str) else text
     if word_grams:
-        toks = F.split(F.lower(t), "\\s+")
-        k = F.size(toks) - (n - 1)
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
+        toks = whitespace_tokens(F.lower(t))
         # texts shorter than n tokens: fall back to the whole text as
         # one shingle so they can still be compared.
-        grams = F.when(k >= 1, grams).otherwise(F.array(F.lower(t)))
+        grams = F.when(F.size(toks) >= n, word_ngrams(toks, n))
+        grams = grams.otherwise(F.array(F.lower(t)))
     else:
         chars = F.lower(t)
         k = F.length(chars) - (n - 1)
         grams = F.transform(
             F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: F.substring(chars, 1, n).alias("g") if False else chars.substr(i, F.lit(n)),
+            lambda i: chars.substr(i, F.lit(n)),
         )
         grams = F.when(k >= 1, grams).otherwise(F.array(chars))
     return F.array_distinct(grams)
@@ -310,8 +306,9 @@ def minhash_pairs(
     them, and the set-arithmetic verify (``array_intersect`` + staged
     distinct sizes) are all order- and duplicate-insensitive, so the
     emitted pair set is identical to the internally-shingled form
-    whenever the gram SETS match :func:`shingle`'s (the audit relies on
-    the fixture single-space invariant for that).  The caller owns the
+    whenever the gram SETS match :func:`shingle`'s — as they do for
+    :func:`_word_gram_hashes`, which hashes ``shingle`` itself (the
+    frame :func:`minhash_audit` passes).  The caller owns the
     frame's persistence and release; the exact-family collapse still
     reads raw text from ``df`` for its md5 fingerprints.
     """
@@ -545,7 +542,7 @@ def with_simhash(
         raise ValueError(
             f"portable simhash uses a 32-bit hash family; bits={bits} > 32"
         )
-    toks = F.array_distinct(F.split(F.lower(F.col(text_col)), "\\s+"))
+    toks = F.array_distinct(whitespace_tokens(F.lower(F.col(text_col))))
     hashes = F.transform(
         toks, _md5_hash32 if portable else (lambda tok: F.xxhash64(tok))
     )
@@ -569,7 +566,7 @@ def with_minhash_portable(
     MinHash ALGORITHM (the suite hash-checks it against DuckDB) — the
     hot path stays on xxhash64 shingles.
     """
-    toks = F.array_distinct(F.split(F.lower(F.col(text_col)), "\\s+"))
+    toks = F.array_distinct(whitespace_tokens(F.lower(F.col(text_col))))
     staged = df.withColumn("__mh_h32", F.transform(toks, _md5_hash32))
     out = staged.withColumn(
         out_col, _minhash_from_h32(F.col("__mh_h32"), num_hashes)
@@ -702,17 +699,6 @@ def minhash_pairs_portable(
         with_sig.unpersist()
 
 
-def simhash_signature(text: Column | str, bits: int = 64) -> Column:
-    """Column-expression SimHash — prefer ``with_simhash`` in real
-    plans (this inline form re-evaluates the token hashing per bit when
-    Catalyst inlines it; kept for expression-level composition)."""
-    t = F.col(text) if isinstance(text, str) else text
-    hashes = F.transform(
-        F.array_distinct(F.split(F.lower(t), "\\s+")), lambda tok: F.xxhash64(tok)
-    )
-    return _simhash_from_hashes(hashes, F.size(hashes), bits)
-
-
 def simhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -813,17 +799,16 @@ def minhash_audit(
       registration); determinism of the production pair set for fixed
       data makes the flags flake-proof.
 
-    Gram convention: :func:`jaccard_prefix_pairs` splits on a single
-    space while production :func:`shingle` splits on ``\\s+`` — gram
-    sets coincide under the fixture single-space invariant
-    (tests/test_suite_contract.py pins it).  That invariant is what
-    makes the r14 SHARED gram stage sound: the corpus is tokenized and
-    gram-hashed ONCE (:func:`_word_gram_hashes`, one persisted frame)
-    and both pair pipelines consume it — the census needs the lex order
-    for its prefix filter, the production signature/verify are order-
-    and duplicate-insensitive over the same gram SETS, so both emit
-    exactly what their internally-shingled forms would (VERDICT r13
-    item 1; previously each pipeline re-shingled the corpus).
+    Gram sets: both sides use production :func:`shingle`'s — word
+    n-grams over whitespace-run tokens, and the whole lowercased text
+    as the one gram of a doc shorter than ``n`` tokens.  The corpus is
+    tokenized and gram-hashed ONCE (:func:`_word_gram_hashes`, one
+    persisted frame, r14) and both pair pipelines consume it: the
+    census needs the lex order for its prefix filter, and the
+    production signature/verify are order- and duplicate-insensitive
+    over the same gram SETS.  So production emits exactly what
+    standalone :func:`minhash_pairs` emits, and the census is the exact
+    Jaccard census over those same sets, on any input whitespace.
 
     Plan: one shared gram stage, the two pair pipelines
     (candidate-bounded, never O(n^2)), one lazily-checkpointed
@@ -989,7 +974,7 @@ def simhash_audit(
     toksets = df.select(
         F.col(id_col),
         F.array_sort(
-            F.array_distinct(F.split(F.lower(F.col(text_col)), "\\s+"))
+            F.array_distinct(whitespace_tokens(F.lower(F.col(text_col))))
         ).alias("__ts"),
     )
     # identical-token-set census: family-bucket self-join on the md5 of
@@ -1087,13 +1072,10 @@ def ngram_jaccard_pairs(
     (split / distinct / intersect / union sizes) so a DuckDB oracle can
     verify it bit-for-bit.
     """
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(F.split(F.lower(text_col), " ")) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(F.split(F.lower(text_col), " "), i, n)),
-        )
+    g = df.select(
+        F.col(id_col), F.col(block_col).alias("__blk"),
+        _space_grams(text_col, n).alias("__grams"),
     )
-    g = df.select(F.col(id_col), F.col(block_col).alias("__blk"), grams.alias("__grams"))
     a, b = g.alias("a"), g.alias("b")
     return (
         a.join(
@@ -1135,19 +1117,9 @@ def containment_pairs(
     column bounds the quadratic term (feed an LSH bucket id at scale);
     fully SQL-expressible so a DuckDB oracle verifies it exactly.
     """
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(
-                F.lit(1),
-                F.greatest(
-                    F.size(F.split(F.lower(text_col), " ")) - (n - 1), F.lit(1)
-                ),
-            ),
-            lambda i: F.concat_ws(" ", F.slice(F.split(F.lower(text_col), " "), i, n)),
-        )
-    )
     g = df.select(
-        F.col(id_col), F.col(block_col).alias("__blk"), grams.alias("__grams")
+        F.col(id_col), F.col(block_col).alias("__blk"),
+        _space_grams(text_col, n).alias("__grams"),
     )
     a, b = g.alias("a"), g.alias("b")
     inter = F.size(F.array_intersect("a.__grams", "b.__grams")).cast("double")
@@ -1206,16 +1178,11 @@ def containment_prefix_pairs(
     grams with tiny df.  The global order is the gram hash value
     itself (array_sort over xxhash64), so no string re-sort pass.
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
     g = spread(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
         F.col(id_col),
-        F.array_sort(F.transform(grams, lambda s: F.xxhash64(s))).alias("__h"),
+        F.array_sort(
+            F.transform(_space_grams(text_col, n), lambda s: F.xxhash64(s))
+        ).alias("__h"),
     )
     g = g.persist()
     try:
@@ -1336,17 +1303,10 @@ def containment_count_pairs(
     cannot inflate a count (same guarantee as the r13 union-skip
     verify in :func:`jaccard_prefix_pairs`).
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        )
-    )
     g = spread(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
         F.col(id_col),
         F.array_distinct(
-            F.transform(grams, lambda s: F.xxhash64(s))
+            F.transform(_space_grams(text_col, n), lambda s: F.xxhash64(s))
         ).alias("__h"),
     )
     g = g.persist()
@@ -1401,30 +1361,32 @@ def containment_count_pairs(
         g.unpersist()
 
 
-def _word_gram_hashes(text_col: str, n: int) -> Column:
-    """Lex-sorted DISTINCT word-``n``-gram xxhash64 array for one text
-    column — the gram stage of :func:`jaccard_prefix_pairs`, factored
-    out (r14) so :func:`minhash_audit` can build it ONCE and feed both
-    the census prefix-join and the production signature pipeline.
-
-    Convention: single-space tokenizer (``split(lower(text), ' ')``),
-    docs shorter than ``n`` tokens collapse to one whole-text gram (the
-    slice-capped concat) — coincides with :func:`shingle`'s ``\\s+``
-    convention under the fixture single-space invariant (pinned by
-    tests/test_suite_contract.py).  The array is ordered by gram-STRING
-    lex order (sorted before hashing): a corpus-global total order, as
-    the prefix-filter theorem requires.
-    """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    grams = F.array_sort(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        )
+def _space_grams(text_col: str, n: int) -> Column:
+    """DISTINCT word-``n``-grams of the lowercased
+    :func:`~.tokenize.space_tokens` — the gram set of the SQL-replayed
+    pair operators (the oracles' ``string_split(lower(text), ' ')``).
+    A doc shorter than ``n`` tokens is one gram, its tokens joined."""
+    return F.array_distinct(
+        word_ngrams(space_tokens(F.lower(F.col(text_col))), n)
     )
-    return F.transform(grams, lambda s: F.xxhash64(s))
+
+
+def _lex_hashes(grams: Column) -> Column:
+    """xxhash64 of each gram, in gram-STRING lex order (sorted before
+    hashing): a corpus-global total order, as the prefix-filter theorem
+    of :func:`jaccard_prefix_pairs` requires."""
+    return F.transform(F.array_sort(grams), lambda s: F.xxhash64(s))
+
+
+def _word_gram_hashes(text_col: str, n: int) -> Column:
+    """Lex-ordered hashes of :func:`shingle`'s distinct word-``n``-gram
+    set — the gram frame :func:`minhash_audit` builds ONCE (r14) and
+    feeds to both the census prefix-join and the production signature
+    pipeline, so both see exactly the grams standalone
+    :func:`minhash_pairs` shingles: whitespace-run tokens, and the whole
+    lowercased text as the one gram of a doc shorter than ``n`` tokens.
+    """
+    return _lex_hashes(shingle(text_col, n))
 
 
 def jaccard_prefix_pairs(
@@ -1482,13 +1444,15 @@ def jaccard_prefix_pairs(
     an exact integer t·|X|, or the prefix/length/positional filters
     tighten by one and the lossless guarantee breaks.
 
-    ``gram_frame`` (r14, VERDICT r13 item 1): a pre-built, pre-PERSISTED
-    ``(id_col, __h)`` frame whose ``__h`` is each document's
-    :func:`_word_gram_hashes` array (same ``n``) — lets a caller that
-    needs the gram stage for something else too (:func:`minhash_audit`)
-    build it once.  The caller owns persistence and release; the arrays
-    must be in ONE corpus-global total order (the internal form's
-    gram-string lex order) or the prefix theorem's losslessness breaks.
+    Grams are :func:`_space_grams` (single-space tokens, as the SQL
+    oracles replay them).  ``gram_frame`` (r14, VERDICT r13 item 1): a
+    pre-built, pre-PERSISTED ``(id_col, __h)`` frame of per-document
+    distinct gram-hash arrays replacing that stage — lets a caller that
+    needs the grams for something else too (:func:`minhash_audit`,
+    which passes :func:`_word_gram_hashes`) build them once.  The
+    caller owns persistence and release; the arrays must be in ONE
+    corpus-global total order (the internal form's gram-string lex
+    order) or the prefix theorem's losslessness breaks.
     """
     if order not in ("lex", "freq"):
         raise ValueError(f"order must be 'lex' or 'freq', got {order!r}")
@@ -1508,7 +1472,7 @@ def jaccard_prefix_pairs(
     if own_g:
         g = spread(df.select(F.col(id_col), F.col(text_col)), key=id_col).select(
             F.col(id_col),
-            _word_gram_hashes(text_col, n).alias("__h"),
+            _lex_hashes(_space_grams(text_col, n)).alias("__h"),
         )
         g = g.persist()
     else:
@@ -1630,13 +1594,6 @@ def jaccard_prefix_pairs(
             p.unpersist()
 
 
-def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Drop the higher-id member of every duplicate pair (expects
-    columns id_a < id_b in *pairs*)."""
-    doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(doomed, on=id_col, how="left_anti")
-
-
 def _staged_gram_frames(df, id_col: str, text_col: str, n: int,
                         keep_text: bool = True):
     """Shared shingle staging for the two ExactSubstr halves
@@ -1661,10 +1618,9 @@ def _staged_gram_frames(df, id_col: str, text_col: str, n: int,
     cache/spill footprint at the corpus scale this targets (ADVICE
     r10).  The TRANSFORM half re-tokenizes from text, so it keeps it.
     """
-    ltoks = F.split(F.lower(F.col(text_col)), " ")
     ghs = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(ltoks) - (n - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(ltoks, i, n))),
+        word_ngrams(space_tokens(F.lower(F.col(text_col))), n),
+        lambda s: F.xxhash64(s),
     )
     safe = F.when(F.col(text_col).isNotNull(), ghs).otherwise(
         F.expr("CAST(array() AS ARRAY<BIGINT>)")
@@ -1807,7 +1763,7 @@ def remove_duplicated_spans(
         # cost structure explicit rather than CSE-dependent.
         j = (
             g.join(hits, id_col, "left")
-            .withColumn("__otoks", F.split(F.col(text_col), " "))
+            .withColumn("__otoks", space_tokens(text_col))
             .withColumn("__ntok", F.size("__otoks"))
         )
 

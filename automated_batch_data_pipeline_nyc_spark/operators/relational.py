@@ -26,7 +26,6 @@ __all__ = [
     "union_all",
     "intersect",
     "except_all",
-    "add_row_ids",
 ]
 
 
@@ -94,16 +93,3 @@ def intersect(a: DataFrame, b: DataFrame, distinct: bool = True) -> DataFrame:
 
 def except_all(a: DataFrame, b: DataFrame, distinct: bool = False) -> DataFrame:
     return a.exceptAll(b) if not distinct else a.subtract(b)
-
-
-def add_row_ids(df: DataFrame, name: str = "row_id", order: Sequence[Column] | None = None) -> DataFrame:
-    """The reference's SERIAL / chunk-index ordinal patterns.  With
-    ``order``: a global ``row_number()`` (single-partition window — only
-    for small exports).  Without: ``monotonically_increasing_id()``,
-    distributed and non-contiguous (documented reference deviation,
-    SURVEY.md §1.4)."""
-    if order is None:
-        return df.withColumn(name, F.monotonically_increasing_id())
-    from pyspark.sql import Window
-
-    return df.withColumn(name, F.row_number().over(Window.orderBy(*order)))

@@ -28,6 +28,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .tokenize import space_tokens
+
 __all__ = [
     "hash_bucket",
     "hash_sample",
@@ -530,9 +532,7 @@ def dsir_log_weights(
     """
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "), lambda x: x != ""
-    )
+    toks = F.filter(space_tokens(F.lower(F.col(text_col))), lambda x: x != "")
     staged = df.select(
         F.col(id_col),
         F.col(target_col).cast("boolean").alias("__tgt"),

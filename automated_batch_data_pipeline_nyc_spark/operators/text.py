@@ -16,9 +16,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.capture import checkpoint as _ckpt
+from .tokenize import (
+    alnum_words,
+    alpha_words,
+    collapse_whitespace,
+    lines,
+    space_tokens,
+    word_ngrams,
+)
 
 __all__ = [
-    "tokens",
     "token_count",
     "bpe_token_estimate",
     "punct_ratio",
@@ -27,11 +34,8 @@ __all__ = [
     "language_id",
     "with_language_id",
     "fingerprint_md5",
-    "rolling_hash_fingerprint",
     "redact_pii",
     "tf_idf_top_terms",
-    "text_stats",
-    "ngram_array",
     "repetition_metrics",
     "contamination_flags",
     "url_host",
@@ -71,15 +75,8 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization (single-space split to stay bit-exact
-    with the SQL oracle's string_split)."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.split(t, " ")
-
-
 def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
+    return F.size(space_tokens(text))
 
 
 def bpe_token_estimate(text: Column | str) -> Column:
@@ -88,9 +85,8 @@ def bpe_token_estimate(text: Column | str) -> Column:
     charged ceil(len/6) for long words) plus standalone punctuation.
     Deterministic, SQL-reproducible."""
     t = F.col(text) if isinstance(text, str) else text
-    words = F.filter(F.split(F.lower(t), "[^a-z0-9]+"), lambda w: w != "")
     word_pieces = F.aggregate(
-        words,
+        alnum_words(t),
         F.lit(0).cast("bigint"),
         lambda acc, w: acc + F.ceil(F.length(w) / 6.0).cast("bigint"),
     )
@@ -105,7 +101,7 @@ def punct_ratio(text: Column | str) -> Column:
 
 
 def stopword_ratio(text: Column | str) -> Column:
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
+    toks = space_tokens(F.lower(F.col(text) if isinstance(text, str) else text))
     sw = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(sw, x)))
     return n_stop.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
@@ -136,7 +132,7 @@ def language_id(text: Column | str, out_score: bool = False) -> Column:
     Expression form — the argmax references each count several times,
     so Catalyst re-tokenizes per reference; prefer ``with_language_id``
     (staged counts) in real plans."""
-    toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
+    toks = space_tokens(F.lower(F.col(text) if isinstance(text, str) else text))
 
     def _marker_hits(markers: tuple[str, ...]) -> Column:
         arr = F.array(*[F.lit(w) for w in markers])
@@ -168,7 +164,7 @@ def with_language_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -
     count ~4 times, and inline expressions would re-tokenize the text
     per reference (see the staging note in operators/dedup.py).
     Prefer this over ``language_id`` in real plans."""
-    toks = tokens(F.lower(F.col(text_col)))
+    toks = space_tokens(F.lower(F.col(text_col)))
 
     def _hits(markers: tuple[str, ...]) -> Column:
         arr = F.array(*[F.lit(w) for w in markers])
@@ -187,19 +183,7 @@ def fingerprint_md5(text: Column | str) -> Column:
     """Normalized content fingerprint: md5 of lowercased,
     whitespace-collapsed text.  md5 (not xxhash) so the oracle matches."""
     t = F.col(text) if isinstance(text, str) else text
-    return F.md5(F.regexp_replace(F.lower(F.trim(t)), "\\s+", " "))
-
-
-def rolling_hash_fingerprint(text: Column | str, modulus: int = 1_000_000_007, base: int = 131) -> Column:
-    """Polynomial rolling hash over UTF-8 code units — the classic
-    Rabin-Karp document fingerprint, as a pure array expression."""
-    t = F.col(text) if isinstance(text, str) else text
-    codes = F.transform(F.split(t, ""), lambda ch: F.ascii(ch).cast("bigint"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda acc, c: (acc * base + c) % modulus,
-    )
+    return F.md5(collapse_whitespace(F.lower(F.trim(t))))
 
 
 #: RE2-safe PII patterns (no backrefs / lookaround) so the identical
@@ -247,7 +231,7 @@ def tf_idf_top_terms(
         F.col(id_col),
         F.explode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), " "),
+                space_tokens(F.lower(F.col(text_col))),
                 lambda t: F.length(t) >= min_term_len,
             )
         ).alias("term"),
@@ -277,26 +261,6 @@ def tf_idf_top_terms(
     )
 
 
-def ngram_array(tokens_col: Column | str, n: int) -> Column:
-    """Word n-grams from a STAGED token-array column, as space-joined
-    strings (so the identical gram is reproducible in SQL with
-    ``array_to_string(t[i:i+n-1], ' ')``).
-
-    Pass a *column reference* to an already-projected token array, not
-    an inline ``split(...)`` expression — the transform references the
-    array once per gram position and Catalyst inlines expression trees
-    per use site (see the staging note in operators/dedup.py).
-    Guarded for short documents: fewer than ``n`` tokens yields an
-    empty array (Spark's ``sequence(1, 0)`` would otherwise descend).
-    """
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-    )
-    return F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
 def repetition_metrics(
     df: DataFrame, id_col: str, text_col: str, n: int = 2
 ) -> DataFrame:
@@ -320,7 +284,7 @@ def repetition_metrics(
     divisions of exact BIGINT counts, so the SQL oracle matches
     bit-for-bit.
     """
-    toks = df.select(id_col, F.split(F.lower(F.col(text_col)), " ").alias("__t"))
+    toks = df.select(id_col, space_tokens(F.lower(F.col(text_col))).alias("__t"))
     tok_stats = (
         toks.select(id_col, F.explode("__t").alias("tok"))
         .groupBy(id_col)
@@ -329,8 +293,11 @@ def repetition_metrics(
             F.countDistinct("tok").alias("n_distinct_tokens"),
         )
     )
+    # docs shorter than n tokens have no grams
+    grams = F.when(F.size("__t") >= n, word_ngrams("__t", n))
+    grams = grams.otherwise(F.array().cast("array<string>"))
     gram_counts = (
-        toks.select(id_col, F.explode(ngram_array("__t", n)).alias("gram"))
+        toks.select(id_col, F.explode(grams).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count("*").alias("c"))
     )
@@ -373,14 +340,17 @@ def contamination_flags(
     ids, bounded by corpus row count.  Gram extraction stages the token
     array once (Catalyst inlining).
     """
+    # docs shorter than n tokens have no grams
+    grams = F.when(F.size("__t") >= n, word_ngrams("__t", n))
+    grams = F.explode(grams.otherwise(F.array().cast("array<string>"))).alias("gram")
     bench_grams = (
-        bench_df.select(F.split(F.lower(F.col(text_col)), " ").alias("__t"))
-        .select(F.explode(ngram_array("__t", n)).alias("gram"))
+        bench_df.select(space_tokens(F.lower(F.col(text_col))).alias("__t"))
+        .select(grams)
         .distinct()
     )
     doc_grams = df.select(
-        id_col, F.split(F.lower(F.col(text_col)), " ").alias("__t")
-    ).select(id_col, F.explode(ngram_array("__t", n)).alias("gram"))
+        id_col, space_tokens(F.lower(F.col(text_col))).alias("__t")
+    ).select(id_col, grams)
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
         .select(id_col)
@@ -440,20 +410,6 @@ def domain_stats(df: DataFrame, url_col: str, weight_col: str | None = None) -> 
     return staged.groupBy(F.col("__domain").alias("domain")).agg(*aggs)
 
 
-def text_stats(df: DataFrame, text_col: str) -> DataFrame:
-    """One-pass per-document stat panel (all map-only)."""
-    return df.withColumns({
-        "n_chars_computed": F.length(text_col),
-        "n_tokens": token_count(text_col),
-        "bpe_tokens": bpe_token_estimate(text_col),
-        "punct_ratio": punct_ratio(text_col),
-        "stopword_ratio": stopword_ratio(text_col),
-        "quality": quality_score(text_col),
-        "lang_pred": language_id(text_col),
-        "fingerprint": fingerprint_md5(text_col),
-    })
-
-
 def token_divergence_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document token-distribution statistics: Shannon entropy and
     KL divergence against the corpus unigram distribution —
@@ -476,7 +432,7 @@ def token_divergence_stats(df: DataFrame, id_col: str, text_col: str) -> DataFra
 
     tc = (
         df.select(
-            F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+            F.col(id_col), F.explode(space_tokens(F.lower(F.col(text_col)))).alias("tok")
         )
         .groupBy(id_col, "tok")
         .agg(F.count("*").alias("c"))
@@ -525,7 +481,7 @@ def zipf_fit(df: DataFrame, text_col: str) -> DataFrame:
     from pyspark.sql import Window
 
     freq = (
-        df.select(F.explode(tokens(text_col)).alias("word"))
+        df.select(F.explode(space_tokens(text_col)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -598,9 +554,7 @@ def normalize_text(df: DataFrame, text_col: str, out_col: str = "norm_text") -> 
         )
 
     cleaned = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.col(text_col), _CONTROL_RE, ""), "\\s+", " "
-        )
+        collapse_whitespace(F.regexp_replace(F.col(text_col), _CONTROL_RE, ""))
     )
     return df.withColumn(out_col, _nfc(cleaned))
 
@@ -676,7 +630,7 @@ def hashed_linear_score(
     the token array — zero shuffles, zero Python.
     """
     t = F.col(text) if isinstance(text, str) else text
-    toks = F.split(t, " ")
+    toks = space_tokens(t)
     half = hash_dim // 2
     w_sum = F.aggregate(
         toks,
@@ -754,7 +708,7 @@ def gopher_rules(df: DataFrame, text_col: str) -> DataFrame:
     the final double division, so DuckDB replays them bit-for-bit.
     """
     t = F.col(text_col)
-    staged = df.withColumn("__w", F.split(t, " "))
+    staged = df.withColumn("__w", space_tokens(t))
     n = F.size("__w")
     nd = n.cast("double")
     mean_len = (
@@ -828,11 +782,11 @@ def c4_rules(df: DataFrame, text_col: str) -> DataFrame:
     """
     t = F.col(text_col)
     staged = df.withColumn(
-        "__ln", F.transform(F.split(t, "\n"), lambda l: F.trim(l))
+        "__ln", F.transform(lines(t), lambda l: F.trim(l))
     )
 
     def _keep(l):
-        words = F.filter(F.split(l, " "), lambda w: w != "")
+        words = F.filter(space_tokens(l), lambda w: w != "")
         return (
             F.substring(l, -1, 1).isin(".", "!", "?", '"')
             & (F.size(words) >= 5)
@@ -897,17 +851,17 @@ def remove_boilerplate_lines(
     into a left-anti probe, and one groupBy(id) shuffle reassembles.
     Never a self-join, never corpus × corpus.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col("line"), r"\s+", " ")))
-    lines = df.select(
+    norm = F.lower(F.trim(collapse_whitespace("line")))
+    rows = df.select(
         F.col(id_col),
         F.col(group_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(lines(text_col)).alias("pos", "line"),
     ).withColumn("norm", norm)
 
     group_docs = df.groupBy(group_col).agg(
         F.countDistinct(id_col).alias("g_docs")
     )
-    line_docs = lines.groupBy(group_col, "norm").agg(
+    line_docs = rows.groupBy(group_col, "norm").agg(
         F.countDistinct(id_col).alias("l_docs")
     )
     boilerplate = (
@@ -919,7 +873,7 @@ def remove_boilerplate_lines(
         .select(group_col, "norm")
     )
 
-    kept = lines.join(
+    kept = rows.join(
         F.broadcast(boilerplate), [group_col, "norm"], "left_anti"
     )
     reassembled = kept.groupBy(id_col).agg(
@@ -935,7 +889,7 @@ def remove_boilerplate_lines(
     base = df.select(
         F.col(id_col),
         F.col(group_col),
-        F.size(F.split(F.col(text_col), "\n")).cast("bigint").alias("n_lines"),
+        F.size(lines(text_col)).cast("bigint").alias("n_lines"),
     )
     return base.join(reassembled, id_col, "left").select(
         id_col,
@@ -982,7 +936,7 @@ def strip_html(text: Column | str) -> Column:
                 "&gt;", ">"),
             "&quot;", "\""),
         "&amp;", "&")
-    return F.trim(F.regexp_replace(decoded, r"\s+", " "))
+    return F.trim(collapse_whitespace(decoded))
 
 
 def inverted_index(
@@ -1008,8 +962,7 @@ def inverted_index(
     stopword mass here.
     """
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), " "),
-        lambda x: F.length(x) >= min_len,
+        space_tokens(F.lower(F.col(text_col))), lambda x: F.length(x) >= min_len
     )
     pairs = df.select(F.col(id_col).alias("_id"), F.explode(toks).alias("term"))
     if max_df is not None:
@@ -1059,7 +1012,7 @@ def bpe_word_freq(df: DataFrame, text_col: str) -> DataFrame:
     they iterate a word-count dict, not the text)."""
     return (
         df.select(
-            F.explode(F.split(F.lower(F.col(text_col)), "[^a-z]+")).alias("w")
+            F.explode(alpha_words(text_col)).alias("w")
         )
         .filter(F.length("w") >= 2)
         .groupBy("w")
@@ -1221,12 +1174,7 @@ def bpe_encode(
     """
     words = df.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), "[^a-z]+"),
-                lambda w: F.length(w) >= 1,
-            )
-        ).alias("__pos", "__w"),
+        F.posexplode(alpha_words(text_col)).alias("__pos", "__w"),
     )
     vocab = words.select(F.col("__w").alias("w")).distinct().withColumn(
         "syms",
@@ -1284,7 +1232,7 @@ def log_odds_keyness(
     """
     toks = df.select(
         F.col(slice_col).cast("long").alias("__s"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"),
+        F.explode(space_tokens(F.lower(F.col(text_col)))).alias("word"),
     ).filter(F.col("word") != "")
     words = (
         toks.groupBy("word")
@@ -1325,10 +1273,7 @@ def _bigram_pairs(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
     ``[^a-z]+`` split — the BPE-oracle tokenization), one row per
     occurrence, carrying the ``keep`` columns.  Documents with fewer
     than two tokens contribute nothing."""
-    t = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"), lambda w: w != ""
-    )
-    toks = df.select(*keep, t.alias("__t")).filter(F.size("__t") >= 2)
+    toks = df.select(*keep, alpha_words(text_col).alias("__t")).filter(F.size("__t") >= 2)
     return toks.select(
         *keep, F.explode(_adjacent_pairs(F.col("__t"))).alias("p")
     ).select(*keep, F.col("p.a").alias("w1"), F.col("p.b").alias("w2"))

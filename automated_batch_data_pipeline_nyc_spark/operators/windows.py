@@ -19,10 +19,7 @@ from .util import epoch_micros
 
 __all__ = [
     "ranked",
-    "top_k_per_group",
     "with_lag",
-    "moving_avg",
-    "running_sum",
     "rolling_time_window",
     "distributed_percent_rank",
     "global_row_number",
@@ -47,19 +44,6 @@ def ranked(
     return df.withColumn(out_col, fn().over(_spec(partition_by, order_by)))
 
 
-def top_k_per_group(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    k: int,
-) -> DataFrame:
-    """Per-group top-k via row_number + filter; Spark pushes the rank
-    filter into the window sort (WindowGroupLimit) so each group only
-    materializes k rows."""
-    out = ranked(df, partition_by, order_by, out_col="__rn", method="row_number")
-    return out.filter(F.col("__rn") <= k).drop("__rn")
-
-
 def with_lag(
     df: DataFrame,
     col: str,
@@ -70,20 +54,6 @@ def with_lag(
 ) -> DataFrame:
     out_col = out_col or f"{col}_lag{offset}"
     return df.withColumn(out_col, F.lag(col, offset).over(_spec(partition_by, order_by)))
-
-
-def moving_avg(
-    df: DataFrame,
-    col: str,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    window_rows: int = 3,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Sliding average over the previous *window_rows* rows (inclusive)."""
-    out_col = out_col or f"{col}_mavg{window_rows}"
-    spec = _spec(partition_by, order_by).rowsBetween(-(window_rows - 1), 0)
-    return df.withColumn(out_col, F.avg(col).over(spec))
 
 
 def rolling_time_window(
@@ -327,18 +297,6 @@ def sessionize(
     return out.withColumn(
         "session_id", F.sum("__new_session").over(run).cast("long")
     ).drop("__new_session")
-
-
-def running_sum(
-    df: DataFrame,
-    col: str,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    out_col: str | None = None,
-) -> DataFrame:
-    out_col = out_col or f"{col}_running"
-    spec = _spec(partition_by, order_by).rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(out_col, F.sum(col).over(spec))
 
 
 def merge_intervals(

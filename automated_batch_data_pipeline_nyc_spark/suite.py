@@ -42,6 +42,7 @@ from .operators import quality as Q
 from .operators import relational as R
 from .operators import similarity as sim
 from .operators import text as tx
+from .operators import tokenize as tk
 from .operators import util as U
 from .operators import windows as W
 from .operators.cleaning import clean_pipeline
@@ -1591,9 +1592,9 @@ def _langid(spark, sf_dir):
 
 @_q(
     "text_fingerprint",
-    """
+    f"""
     SELECT doc_id,
-      md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+      md5(regexp_replace(lower(trim(text)), '{tk.WHITESPACE}', ' ', 'g')) AS fingerprint
     FROM documents
     """,
     doc="document fingerprinting (md5 of normalized text; oracle-identical)",
@@ -1606,6 +1607,31 @@ def _fp(spark, sf_dir):
 # ===========================================================================
 # LLM-pipeline: dedup
 # ===========================================================================
+
+def _sql_ngram_window(n: int) -> str:
+    """DuckDB replay of ``tokenize.word_ngrams`` over a token list bound
+    to ``t``, as a DISTINCT, SORTED gram list (sorting is required by
+    the prefix filter and a harmless set-identity elsewhere).  Callers
+    bind ``t`` with ``list_transform([<tokens>], t -> ...)[1]`` so the
+    text is split once per row, not once per gram position."""
+    parts = ", ".join(f"t[i + {k}]" for k in range(n))
+    return f"""list_sort(list_distinct(list_transform(
+        generate_series(1, greatest(len(t) - {n - 1}, 1)),
+        i -> concat_ws(' ', {parts}))))"""
+
+
+#: A document's word 2-grams over the lowercased single-space tokens
+#: (``tokenize.space_tokens``; a doc of one token is one gram) — the
+#: gram set of ngram_jaccard_pairs, jaccard_prefix_pairs and the
+#: containment operators, consumed by their oracles and
+#: _SQL_PREFIX_PAIRS.  The dedup_minhash_transitive oracle uses it too,
+#: while its operator (minhash_pairs_portable) shingles whitespace-run
+#: tokens: the two agree only on single-space text, which the fixture
+#: texts are (tests/test_suite_contract.py
+#: ::test_fixture_texts_are_single_space_normalized).
+_SQL_DOC_2GRAMS = (
+    f"list_transform([string_split(lower(text), ' ')], t -> {_sql_ngram_window(2)})[1]"
+)
 
 @_q(
     "dedup_exact",
@@ -1638,23 +1664,15 @@ def _dexact(spark, sf_dir):
 
 @_q(
     "dedup_ngram_jaccard",
-    """
+    f"""
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
         / CAST(len(list_distinct(list_concat(a.grams, b.grams))) AS DOUBLE) AS jaccard
     FROM (SELECT doc_id, lang,
-            list_distinct(list_transform(
-              generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-              i -> concat_ws(' ',
-                     list_extract(string_split(lower(text),' '), i),
-                     list_extract(string_split(lower(text),' '), i + 1)))) AS grams
+            {_SQL_DOC_2GRAMS} AS grams
           FROM documents) a
     JOIN (SELECT doc_id, lang,
-            list_distinct(list_transform(
-              generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-              i -> concat_ws(' ',
-                     list_extract(string_split(lower(text),' '), i),
-                     list_extract(string_split(lower(text),' '), i + 1)))) AS grams
+            {_SQL_DOC_2GRAMS} AS grams
           FROM documents) b
       ON a.lang = b.lang AND a.doc_id < b.doc_id
     WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -1670,13 +1688,9 @@ def _djac(spark, sf_dir):
 
 @_q(
     "dedup_ngram_jaccard_prefix",
-    """
+    f"""
     WITH g AS (
-      SELECT doc_id, list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-        i -> concat_ws(' ',
-               list_extract(string_split(lower(text),' '), i),
-               list_extract(string_split(lower(text),' '), i + 1))))) AS grams
+      SELECT doc_id, {_SQL_DOC_2GRAMS} AS grams
       FROM documents
     ),
     p AS (
@@ -1707,13 +1721,9 @@ def _djacpre(spark, sf_dir):
 
 @_q(
     "dedup_ngram_jaccard_freq",
-    """
+    f"""
     WITH g AS (
-      SELECT doc_id, list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-        i -> concat_ws(' ',
-               list_extract(string_split(lower(text),' '), i),
-               list_extract(string_split(lower(text),' '), i + 1))))) AS grams
+      SELECT doc_id, {_SQL_DOC_2GRAMS} AS grams
       FROM documents
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1961,20 +1971,6 @@ def _knn(spark, sf_dir):
     return sim.knn_join(emb, queries, "embedding", k=10)
 
 
-#: Shared DuckDB expression for a document's DISTINCT, SORTED word
-#: 2-gram list (whitespace-split, lowercased) — the single source of
-#: the gram convention, consumed by _SQL_PREFIX_PAIRS and the portable
-#: MinHash oracle (sorting is required by the prefix filter and a
-#: harmless set-identity for hashing, so both share the sorted form).
-#: Splits on a SINGLE SPACE while the Spark side's shingle() splits on
-#: \s+ — identical gram sets only because fixture texts are single-
-#: space normalized, an invariant pinned by tests/test_suite_contract
-#: ::test_fixture_texts_are_single_space_normalized (ADVICE r12).
-_SQL_DOC_2GRAMS = """list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-        i -> concat_ws(' ',
-               list_extract(string_split(lower(text),' '), i),
-               list_extract(string_split(lower(text),' '), i + 1)))))"""
 
 
 def _simhash_vote_terms(bits: int) -> str:
@@ -1990,19 +1986,14 @@ def _simhash_vote_terms(bits: int) -> str:
 
 
 def _sql_doc_ngrams(n: int) -> str:
-    """The _SQL_DOC_2GRAMS convention generalized to word n-grams —
-    same single-space split, same greatest(...,1) short-text handling
-    (a doc shorter than n tokens yields its whole text as one gram,
-    the slice-capped concat, which coincides with shingle()'s
-    whole-text fallback under the fixture single-space invariant)."""
-    parts = ",\n               ".join(
-        f"list_extract(string_split(lower(text),' '), i + {k})"
-        for k in range(n)
-    )
-    return f"""list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(string_split(lower(text),' ')) - {n - 1}, 1)),
-        i -> concat_ws(' ',
-               {parts}))))"""
+    """``dedup.shingle``'s word-``n``-gram set in DuckDB: grams over the
+    lowercased whitespace-run tokens (``tokenize.WHITESPACE``, the
+    pattern the Spark side splits on), and the whole lowercased text as
+    the one gram of a doc shorter than ``n`` tokens."""
+    return f"""list_transform(
+        [regexp_split_to_array(lower(text), '{tk.WHITESPACE}')],
+        t -> CASE WHEN len(t) >= {n} THEN {_sql_ngram_window(n)}
+             ELSE [lower(text)] END)[1]"""
 
 
 @_q(
@@ -2181,7 +2172,7 @@ def _dmincc(spark, sf_dir):
     f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '\\s+'))) AS w
+        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t),
@@ -2189,7 +2180,7 @@ def _dmincc(spark, sf_dir):
           FROM h GROUP BY doc_id),
     tok AS (
       SELECT doc_id,
-        list_sort(list_distinct(regexp_split_to_array(lower(text), '\\s+'))) AS ts
+        list_sort(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS ts
       FROM documents)
     SELECT
       CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs,
@@ -3316,7 +3307,7 @@ def _fillna(spark, sf_dir):
 def _wordcount(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        docs.select(F.explode(tk.space_tokens(F.lower("text"))).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -3695,7 +3686,7 @@ def _chunk(spark, sf_dir):
 def _pack(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
     with_counts = docs.select(
-        "doc_id", "source", F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens")
+        "doc_id", "source", F.size(tk.space_tokens("text")).cast("long").alias("n_tokens")
     )
     out = ch.pack_token_windows(
         with_counts, "doc_id", "n_tokens", budget=2000, pack_by="source"
@@ -4914,7 +4905,7 @@ _NFC_SUFFIX = "\tCafé  beep\x07 ok "
       nfc_normalize(trim(regexp_replace(regexp_replace(
         substring(text, 1, 60) || '{_NFC_SUFFIX}',
         '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'),
-        '\\s+', ' ', 'g'))) AS norm_text
+        '{tk.WHITESPACE}', ' ', 'g'))) AS norm_text
     FROM documents
     """,
     doc="Unicode canonicalization for dedup keys (control-strip, whitespace "
@@ -5965,7 +5956,7 @@ def _idle_rich(spark, sf_dir):
 
 @_q(
     "dedup_incremental_batch",
-    """
+    f"""
     WITH base AS (SELECT doc_id, text FROM documents),
     corpus AS (SELECT doc_id, text FROM base WHERE doc_id % 5 <> 0),
     reposts AS (
@@ -5983,11 +5974,7 @@ def _idle_rich(spark, sf_dir):
       SELECT doc_id, text, 0 AS side FROM corpus
       UNION ALL SELECT doc_id, text, 1 AS side FROM rest),
     g AS (
-      SELECT doc_id, list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-        i -> concat_ws(' ',
-               list_extract(string_split(lower(text),' '), i),
-               list_extract(string_split(lower(text),' '), i + 1))))) AS grams
+      SELECT doc_id, {_SQL_DOC_2GRAMS} AS grams
       FROM u
     ),
     p AS (
@@ -6477,7 +6464,7 @@ def _quality_classifier(spark, sf_dir):
 
 @_q(
     "line_boilerplate_removal",
-    r"""
+    rf"""
     WITH docs2 AS (
       SELECT doc_id, source,
         'home | about | contact | ' || source || chr(10) || text || chr(10)
@@ -6491,7 +6478,7 @@ def _quality_classifier(spark, sf_dir):
       FROM parts),
     sel AS (
       SELECT doc_id, source, pos, p[pos] AS line,
-        lower(trim(regexp_replace(p[pos], '\s+', ' ', 'g'))) AS norm
+        lower(trim(regexp_replace(p[pos], '{tk.WHITESPACE}', ' ', 'g'))) AS norm
       FROM lines),
     gd AS (SELECT source, COUNT(DISTINCT doc_id) AS g_docs
            FROM docs2 GROUP BY source),
@@ -6548,10 +6535,10 @@ def _line_boilerplate(spark, sf_dir):
 
 @_q(
     "html_text_extraction",
-    r"""
+    rf"""
     WITH seeded AS (
       SELECT doc_id,
-        '<html><head><style>p { color: red }</style><title>t</title></head>'
+        '<html><head><style>p {{ color: red }}</style><title>t</title></head>'
           || '<body><h1>' || source || '</h1><p>' || text
           || '</p><script type="text/javascript">var x = 1 < 2;</script>'
           || '<div>&amp; &lt;tail&gt;&nbsp;&quot;end&quot;</div></body></html>'
@@ -6575,7 +6562,7 @@ def _line_boilerplate(spark, sf_dir):
               '&gt;', '>', 'g'),
             '&quot;', '"', 'g'),
           '&amp;', '&', 'g'),
-        '\s+', ' ', 'g')) AS extracted
+        '{tk.WHITESPACE}', ' ', 'g')) AS extracted
     FROM seeded
     """,
     doc="WET-style HTML text extraction ahead of cleaning/dedup: script and "
@@ -7274,7 +7261,7 @@ _SQL_BM25_CONTRIB = """base AS (
 def _bm25(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
     toks = F.filter(
-        F.split(F.lower(F.col("text")), " "), lambda x: F.length(x) >= 4
+        tk.space_tokens(F.lower(F.col("text"))), lambda x: F.length(x) >= 4
     )
     base = docs.select("doc_id", toks.alias("toks"))
     lens = base.select("doc_id", F.size("toks").cast("long").alias("dl"))
@@ -7357,10 +7344,13 @@ def _bm25(spark, sf_dir):
 )
 def _bigram_lm(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
-    base = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    bg = base.select(
-        "doc_id", F.explode(tx.ngram_array(F.col("toks"), 2)).alias("g")
-    ).withColumn("w1", F.substring_index("g", " ", 1))
+    base = docs.select("doc_id", tk.space_tokens("text").alias("toks"))
+    # docs with fewer than 2 tokens have no bigrams
+    grams = F.when(F.size("toks") >= 2, tk.word_ngrams("toks", 2))
+    grams = grams.otherwise(F.array().cast("array<string>"))
+    bg = base.select("doc_id", F.explode(grams).alias("g")).withColumn(
+        "w1", F.substring_index("g", " ", 1)
+    )
     c12 = bg.groupBy("g").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     lp = F.round(
@@ -7569,7 +7559,7 @@ _SQL_WEIGHTS = "[" + ", ".join(str(w) for w in _BUCKET_WEIGHTS) + "]"
 def _quality_bucketed(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
     arr = F.array(*[F.lit(w) for w in _BUCKET_WEIGHTS])
-    toks = F.split(F.col("text"), " ")
+    toks = tk.space_tokens("text")
     w_sum = F.aggregate(
         toks,
         F.lit(0).cast("bigint"),
@@ -8348,14 +8338,10 @@ def _kfold(spark, sf_dir):
 
 @_q(
     "containment_pairs_blocked",
-    """
+    f"""
     WITH g AS (
       SELECT doc_id, lang,
-        list_distinct(list_transform(
-          generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-          i -> concat_ws(' ',
-                 list_extract(string_split(lower(text),' '), i),
-                 list_extract(string_split(lower(text),' '), i + 1)))) AS grams
+        {_SQL_DOC_2GRAMS} AS grams
       FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -8389,14 +8375,10 @@ def _containment(spark, sf_dir):
 
 @_q(
     "containment_pairs_prefix",
-    """
+    f"""
     WITH g AS (
       SELECT doc_id,
-        list_distinct(list_transform(
-          generate_series(1, greatest(len(string_split(lower(text),' ')) - 1, 1)),
-          i -> concat_ws(' ',
-                 list_extract(string_split(lower(text),' '), i),
-                 list_extract(string_split(lower(text),' '), i + 1)))) AS grams
+        {_SQL_DOC_2GRAMS} AS grams
       FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -8522,7 +8504,7 @@ def _pmi(spark, sf_dir):
     from .operators.util import spread
 
     (docs,) = _load(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
+    toks = tk.space_tokens(F.lower(F.col("text")))
     ex = spread(docs.select(toks.alias("ws")))
     uni = (
         ex.select(F.explode("ws").alias("w"))
@@ -8788,7 +8770,7 @@ def _cmheavy(spark, sf_dir):
     from .operators.util import spread
 
     (docs,) = _load(spark, sf_dir, "documents")
-    toks = spread(docs.select(F.explode(F.split(F.lower("text"), " ")).alias("w")))
+    toks = spread(docs.select(F.explode(tk.space_tokens(F.lower("text"))).alias("w")))
     # r13: hash the VOCABULARY, not the occurrences — one tokenize pass
     # into the (token, count) table (map-side combinable, staged through
     # a lazy localCheckpoint for its two consumers), then the sketch's
@@ -8897,7 +8879,7 @@ def _simhash_portable_oracle(bits: int = 32) -> str:
     return f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '\\s+'))) AS w
+        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t)
@@ -8937,7 +8919,7 @@ def _minhash_portable_oracle(num_hashes: int = 16) -> str:
     return f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '\\s+'))) AS w
+        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t),
@@ -10855,19 +10837,25 @@ def _kcore_peel_sql(k: int, rounds: int) -> str:
     ``rounds=6`` leaves a 5-round margin, and the Spark side iterates
     to the true fixpoint regardless, so a mismatch would be loud, not
     silent.
+
+    Every CTE is ``AS MATERIALIZED``: each round reads the previous
+    edge set three times, and DuckDB 1.0 would otherwise inline the
+    chain into ~3^rounds copies of the pair graph (it filled the disk).
     """
     ctes = [
-        "e0 AS (SELECT id_a AS a, id_b AS b FROM pairs"
+        "e0 AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs"
         " UNION SELECT id_b, id_a FROM pairs)"
     ]
     for r in range(rounds):
         ctes.append(
-            f"d{r} AS (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS degree"
+            f"d{r} AS MATERIALIZED (SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS degree"
             f" FROM e{r} GROUP BY a)"
         )
-        ctes.append(f"s{r} AS (SELECT node, degree FROM d{r} WHERE degree >= {k})")
         ctes.append(
-            f"e{r + 1} AS (SELECT e.a, e.b FROM e{r} e"
+            f"s{r} AS MATERIALIZED (SELECT node, degree FROM d{r} WHERE degree >= {k})"
+        )
+        ctes.append(
+            f"e{r + 1} AS MATERIALIZED (SELECT e.a, e.b FROM e{r} e"
             f" JOIN s{r} x ON e.a = x.node JOIN s{r} y ON e.b = y.node)"
         )
     return (

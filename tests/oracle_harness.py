@@ -11,14 +11,25 @@ WARNING so drift is visible before it breaks the driver's hash).
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 from dataclasses import dataclass, field
 
 import duckdb
 import pandas as pd
 
+#: DuckDB spill bounds for one oracle: a runaway plan fails its own
+#: test with an out-of-memory/out-of-temp error instead of filling the
+#: disk under every test that runs after it.
+_DUCKDB_LIMITS = {
+    "temp_directory": os.path.join(tempfile.gettempdir(), "oracle_harness_duckdb"),
+    "max_temp_directory_size": "4GB",
+    "memory_limit": "3GB",
+}
+
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
-    con = duckdb.connect()
+    con = duckdb.connect(config=_DUCKDB_LIMITS)
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"
     ).split():

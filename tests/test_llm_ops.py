@@ -2697,12 +2697,13 @@ def test_span_ops_null_text_semantics(spark):
 
 
 def test_gram_frame_paths_match_internal_shingling(spark):
-    """r14 shared gram stage (VERDICT r13 item 1): minhash_pairs and
-    jaccard_prefix_pairs fed the pre-built _word_gram_hashes frame must
-    emit exactly the pair sets their internally-shingled forms emit —
-    the signature/verify are order- and duplicate-insensitive and the
-    census prefix order matches, given the single-space tokenizer
-    convention the fixture pins."""
+    """r14 shared gram stage (VERDICT r13 item 1): minhash_pairs fed the
+    _word_gram_hashes frame minhash_audit builds must emit exactly the
+    pair set its internally-shingled form emits, on any whitespace —
+    tabs, CRLF, space runs, \\x0B, NBSP, leading/trailing space, empty
+    text, and docs that differ only in their separators.
+    jaccard_prefix_pairs fed the same frame matches its own
+    single-space grams on single-space text."""
     from automated_batch_data_pipeline_nyc_spark.operators.dedup import (
         _word_gram_hashes,
     )
@@ -2715,7 +2716,22 @@ def test_gram_frame_paths_match_internal_shingling(spark):
     # two exact-dup families + a near-dup pair
     rows.append((100, rows[0][1]))
     rows.append((101, rows[0][1]))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    words = "kappa lambda mu nu xi omicron pi rho".split()
+    adversarial = [
+        (200, " ".join(words)),
+        (201, "\t".join(words)),           # same words, every separator a tab
+        (202, "  ".join(words)),            # ... every separator two spaces
+        (203, "sigma\r\ntau\r\nupsilon phi chi"),
+        (204, "sigma tau upsilon phi chi"),
+        (205, "  psi omega  alef bet gimel "),
+        (206, "dalet\x0bhe vav zayin"),
+        (207, "dalet he vav zayin"),
+        (208, "heth\u00a0teth yod kaph"),
+        (209, "heth teth yod kaph"),
+        (210, ""),
+        (211, "lamed \t mem\n\nnun"),
+    ]
+    df = spark.createDataFrame(rows + adversarial, ["doc_id", "text"])
 
     g = spread(df.select("doc_id", "text"), key="doc_id").select(
         F.col("doc_id"), _word_gram_hashes("text", 3).alias("__h")
@@ -2728,13 +2744,16 @@ def test_gram_frame_paths_match_internal_shingling(spark):
             df, "text", "doc_id", shingle_size=3, jaccard_threshold=0.5,
             gram_frame=g,
         ).collect()}
-        assert mh_shared == mh_int and mh_int
+        assert mh_shared == mh_int
+        assert {(200, 201), (200, 202), (201, 202), (203, 204)} <= mh_int
 
+        single_space = df.filter(F.col("doc_id") < 200)
+        g_single = g.filter(F.col("doc_id") < 200)
         jp_int = {(r.id_a, r.id_b, r.jaccard) for r in dd.jaccard_prefix_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5
+            single_space, "doc_id", "text", n=3, threshold=0.5
         ).collect()}
         jp_shared = {(r.id_a, r.id_b, r.jaccard) for r in dd.jaccard_prefix_pairs(
-            df, "doc_id", "text", n=3, threshold=0.5, gram_frame=g
+            single_space, "doc_id", "text", n=3, threshold=0.5, gram_frame=g_single
         ).collect()}
         assert jp_shared == jp_int and jp_int
     finally:

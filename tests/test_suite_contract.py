@@ -197,13 +197,16 @@ def test_queries_md_is_current():
 
 
 def test_fixture_texts_are_single_space_normalized():
-    """The shared gram convention (suite._SQL_DOC_2GRAMS splits on a
-    single space; operators/dedup.shingle splits on \\s+) produces
-    identical gram sets only when fixture texts contain no tabs,
-    newlines, runs of spaces, or leading/trailing whitespace (ADVICE
-    r12).  The driver-generated documents fixtures satisfy this; pin
-    it so a regenerated fixture that breaks the invariant fails HERE
-    instead of silently diverging the two engines' gram sets."""
+    """The dedup_minhash_transitive oracle replays operators/dedup.shingle
+    (word n-grams over whitespace-run tokens, the whole lowercased text
+    as the one gram of a doc shorter than n tokens) with
+    suite._SQL_DOC_2GRAMS (word 2-grams over single-space tokens, the
+    tokens joined for a one-token doc).  The two gram sets are equal
+    only on text with no tabs, newlines, runs of spaces, or
+    leading/trailing whitespace (ADVICE r12).  The documents fixtures
+    satisfy this; pin it so a regenerated fixture that breaks the
+    invariant fails HERE instead of silently diverging the two engines'
+    gram sets."""
     import re
 
     import pyarrow.parquet as pq

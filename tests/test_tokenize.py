@@ -1,0 +1,105 @@
+"""Pin the single token definitions of operators/tokenize.py.
+
+Each tokenizer runs in Spark and, in its documented SQL form, in
+DuckDB on strings built to split differently under near-miss
+definitions (tabs, CRLF, runs of spaces, ``\\x0B``, NBSP, leading and
+trailing space, the empty string); the arrays must be equal.  The
+oracle fragments in suite.py are pinned the same way against the
+operators they replay.  A source check keeps every split in the one
+module.
+"""
+
+from __future__ import annotations
+
+import pathlib
+
+import duckdb
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from automated_batch_data_pipeline_nyc_spark import suite
+from automated_batch_data_pipeline_nyc_spark.operators import dedup as dd
+from automated_batch_data_pipeline_nyc_spark.operators import tokenize as tk
+
+ADVERSARIAL = [
+    "alpha beta gamma delta",
+    "alpha  beta   gamma",
+    " alpha beta ",
+    "alpha\tbeta\tgamma delta",
+    "alpha\r\nbeta\r\ngamma",
+    "alpha\x0bbeta gamma delta",
+    "alpha\x0cbeta\x0dgamma",
+    "alpha\u00a0beta gamma delta",
+    "",
+    " ",
+    "one",
+    "Hello, World! 42x is-it_ok?",
+    "line one\n\nline  three\n",
+    "Ünïcode café 9lives x",
+]
+
+#: DuckDB forms of the tokenizers, over a VARCHAR column ``t``.
+SQL_FORMS = {
+    "space_tokens": "string_split(t, ' ')",
+    "whitespace_tokens": f"regexp_split_to_array(t, '{tk.WHITESPACE}')",
+    "alnum_words": "list_filter(regexp_split_to_array(lower(t), '[^a-z0-9]+'), w -> w <> '')",
+    "alpha_words": "list_filter(regexp_split_to_array(lower(t), '[^a-z]+'), w -> w <> '')",
+    "lines": "string_split(t, chr(10))",
+    "collapse_whitespace": f"regexp_replace(t, '{tk.WHITESPACE}', ' ', 'g')",
+}
+
+
+def _both(spark, spark_expr, sql_expr, col="t"):
+    """(Spark values, DuckDB values) of the two expressions over
+    ADVERSARIAL, in input order."""
+    rows = list(enumerate(ADVERSARIAL))
+    sp = (
+        spark.createDataFrame(rows, f"i INT, {col} STRING")
+        .select("i", spark_expr.alias("v"))
+        .orderBy("i")
+        .collect()
+    )
+    src = pd.DataFrame(rows, columns=["i", col])  # noqa: F841 - read by DuckDB
+    db = duckdb.sql(f"SELECT i, {sql_expr} AS v FROM src ORDER BY i").fetchall()
+    return [r.v for r in sp], [v for _, v in db]
+
+
+@pytest.mark.parametrize("name", sorted(SQL_FORMS))
+def test_tokenizer_matches_its_sql_form(spark, name):
+    sp, db = _both(spark, getattr(tk, name)("t"), SQL_FORMS[name])
+    assert sp == db
+
+
+@pytest.mark.parametrize("split", ["space_tokens", "whitespace_tokens"])
+@pytest.mark.parametrize("n", [1, 2, 3])
+def test_word_ngrams_matches_oracle_window(spark, split, n):
+    grams = tk.word_ngrams(getattr(tk, split)("t"), n)
+    sql = f"list_transform([{SQL_FORMS[split]}], t -> {suite._sql_ngram_window(n)})[1]"
+    sp, db = _both(spark, F.array_sort(F.array_distinct(grams)), sql)
+    assert sp == db
+
+
+def test_oracle_gram_fragments_match_their_operators(spark):
+    """_SQL_DOC_2GRAMS replays the single-space pair operators' grams;
+    _sql_doc_ngrams replays shingle(), the MinHash gram set."""
+    sp, db = _both(spark, F.array_sort(dd._space_grams("text", 2)), suite._SQL_DOC_2GRAMS, "text")
+    assert sp == db
+    for n in (2, 5):
+        sp, db = _both(spark, F.array_sort(dd.shingle("text", n)), suite._sql_doc_ngrams(n), "text")
+        assert sp == db
+
+
+def test_token_splits_live_only_in_tokenize():
+    pkg = pathlib.Path(dd.__file__).resolve().parents[1]
+    found = {
+        (path.relative_to(pkg).as_posix(), line.strip())
+        for path in pkg.rglob("*.py")
+        if path.name != "tokenize.py"
+        for line in path.read_text().splitlines()
+        if "F.split(" in line
+    }
+    # canonical_url's query-string split is not a tokenizer
+    assert found == {("operators/text.py", 'F.split(query, "&"),')}
+    suite_src = (pkg / "suite.py").read_text()
+    assert "\\s+" not in suite_src
