@@ -98,6 +98,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     ``spark.sql.legacy.parquet.nanosAsLong`` before the read, so the
     scan surfaces them as ns-since-epoch longs instead of throwing
     PARQUET_TYPE_ILLEGAL, and then repair them to proper timestamps.
+
+    The conf is session-global and is left set: every later parquet
+    read in the same session, by any caller, also surfaces
+    TIMESTAMP(NANOS) columns as longs.
     """
     nanos_cols = _nanos_timestamp_columns(path)
     if nanos_cols:

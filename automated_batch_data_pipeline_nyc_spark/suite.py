@@ -1624,11 +1624,8 @@ def _sql_ngram_window(n: int) -> str:
 #: (``tokenize.space_tokens``; a doc of one token is one gram) — the
 #: gram set of ngram_jaccard_pairs, jaccard_prefix_pairs and the
 #: containment operators, consumed by their oracles and
-#: _SQL_PREFIX_PAIRS.  The dedup_minhash_transitive oracle uses it too,
-#: while its operator (minhash_pairs_portable) shingles whitespace-run
-#: tokens: the two agree only on single-space text, which the fixture
-#: texts are (tests/test_suite_contract.py
-#: ::test_fixture_texts_are_single_space_normalized).
+#: _SQL_PREFIX_PAIRS.  The shingle() gram set (whitespace-run tokens)
+#: is _sql_doc_ngrams.
 _SQL_DOC_2GRAMS = (
     f"list_transform([string_split(lower(text), ' ')], t -> {_sql_ngram_window(2)})[1]"
 )
@@ -2051,8 +2048,9 @@ def _dmin(spark, sf_dir):
 #: JOIN their doc spine against comp and COALESCE singletons to
 #: themselves.  (One definition on purpose — this closure used to be
 #: copy-pasted per oracle, so a fix to the closure had four places to
-#: miss.)
-_SQL_CC_CLOSURE = """und AS (
+#: miss.)  ``und`` is ``AS MATERIALIZED`` so the recursive step joins a
+#: stored edge list instead of re-deriving ``pairs`` each round.
+_SQL_CC_CLOSURE = """und AS MATERIALIZED (
       SELECT id_a AS a, id_b AS b FROM pairs
       UNION SELECT id_b, id_a FROM pairs
     ),
@@ -2072,8 +2070,8 @@ def _minhash_transitive_portable_oracle(
 ) -> str:
     """WITH-RECURSIVE replay of the FULL portable MinHash transitive
     pipeline: md5-32 word-2-gram signatures (the
-    ``_minhash_portable_oracle`` permutation family over the
-    ``_SQL_DOC_2GRAMS`` gram construction) → band keys as
+    ``_minhash_portable_oracle`` permutation family over
+    ``shingle``'s gram set, ``_sql_doc_ngrams(2)``) → band keys as
     signature-slice strings → candidate equality join → exact hash-set
     Jaccard verify → transitive closure (``_SQL_CC_CLOSURE``) →
     survivor census."""
@@ -2086,7 +2084,7 @@ def _minhash_transitive_portable_oracle(
     return f"""
     WITH RECURSIVE
     g AS (
-      SELECT doc_id, {_SQL_DOC_2GRAMS} AS grams
+      SELECT doc_id, {_sql_doc_ngrams(2)} AS grams
       FROM documents),
     t AS (SELECT doc_id, unnest(grams) AS w FROM g),
     h AS (SELECT doc_id,
@@ -2132,7 +2130,7 @@ def _minhash_transitive_portable_oracle(
         "computed by the full pipeline over the ENGINE-PORTABLE hash "
         "family (operators/dedup.py minhash_pairs_portable: md5-32 "
         "word-2-gram signatures — the dedup_minhash_portable permutation "
-        "family over the _SQL_PREFIX_PAIRS gram space — band keys as raw "
+        "family over shingle's whitespace-run word 2-grams — band keys as raw "
         "signature-slice strings, exact hash-set Jaccard verify at 0.8) "
         "→ iterative min-label connected components "
         "(operators/graph.py assign_components) → cluster-min survivor.  "
@@ -3699,8 +3697,12 @@ def _pack(spark, sf_dir):
 # ===========================================================================
 
 #: gram/prefix CTE shared with dedup_ngram_jaccard_prefix's oracle.
+#: ``g``, ``cand`` and ``pairs`` are ``AS MATERIALIZED``: DuckDB 1.0
+#: inlines a plain CTE at every use, and ``g`` and ``pairs`` are each
+#: read more than once (``pairs`` by both halves of _SQL_CC_CLOSURE's
+#: ``und``), which re-ran the gram and candidate joins per reference.
 _SQL_PREFIX_PAIRS = f"""
-    g AS (
+    g AS MATERIALIZED (
       SELECT doc_id, {_SQL_DOC_2GRAMS} AS grams
       FROM documents
     ),
@@ -3709,11 +3711,11 @@ _SQL_PREFIX_PAIRS = f"""
         unnest(grams[1:(len(grams) - CAST(ceil(0.8 * len(grams)) AS BIGINT) + 1)]) AS gram
       FROM g
     ),
-    cand AS (
+    cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM p a JOIN p b ON a.gram = b.gram AND a.doc_id < b.doc_id
     ),
-    pairs AS (
+    pairs AS MATERIALIZED (
       SELECT c.id_a, c.id_b
       FROM cand c
       JOIN g ga ON ga.doc_id = c.id_a

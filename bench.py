@@ -8,18 +8,16 @@ Usage: ``python bench.py`` (driver contract)
   "queries" timing map) goes to STDERR; stdout carries the same full
   line FIRST and then ends with ONE SHORT summary line
   {"metric": "suite_wall_seconds", "value": <total>,
-   "value_calibrated": <total normalized to the anchor host speed>,
+   "value_calibrated": <total * STEADY_ANCHOR_S / calib_s>,
    "value_production": <total minus verification-only forms>,
    "unit": "sec", "queries": {name: sec, ...all timed queries},
-   "sf": <sf>, "calib_s": <host calibration>,
-   "n_runs": N, "picked_run": N, "n_queries": N, "n_failed": N,
+   "sf": <sf>, "calib_s": <this run's steady probe>,
+   "n_runs": 1, "picked_run": 1, "n_queries": N, "n_failed": N,
    "slowest": {...top5}}
-  When the cold calib probe exceeds 1.15x the anchor OR any warm
-  (mid-run/final) probe exceeds the steady gate, the whole suite
-  re-measures in a fresh subprocess (up to 3 runs); the record is the
-  run with the best (clean, min value_calibrated, min calib_steady_s)
-  pick key — see _RERUN_GATE/_pick_key below (VERDICT r9 item 6 +
-  r10 item 1).
+  One run, in-process: the host-speed probe is sampled mid-run and
+  after the last query, and calib_s is the faster sample, so the
+  normalization divides by the same run's steady probe (see
+  STEADY_ANCHOR_S).
   The driver keeps only a ~2 KB tail of stdout, which truncated round
   2's single 4 KB line and lost the head "value" field — the short
   LAST line always survives tail capture and parses on its own.
@@ -28,6 +26,8 @@ Each query is executed to completion with the noop sink (full pipeline
 runs — scan, shuffle, aggregate — but nothing is collected to the
 driver, so the timing measures the engine, not result transfer).
 Failures are recorded as -1 for that query instead of killing the run.
+``time_query`` is that measurement; ``--sweep`` and
+``tools/profile_query.py`` time through it too.
 
 Three suite entries are deliberately NOT timed: the unblocked O(n^2)
 forms that exist purely as small-sf oracle cross-checks for their
@@ -47,19 +47,40 @@ import re
 import sys
 import time
 
-#: calib_s measured on the round-3 driver host (the cleanest run so
-#: far) — the anchor for cross-round normalization.  value_calibrated
-#: = value * (CALIB_ANCHOR_S / calib_s): >1x means the run's host was
-#: slower than the anchor host, and the query times scale accordingly.
-CALIB_ANCHOR_S = 0.55
+#: The steady probe of the sf0.1 record in BENCH_full.json when the
+#: cold-probe anchor was retired (its ``calib_steady_s``, the faster
+#: warm sample).  value_calibrated = value * (STEADY_ANCHOR_S /
+#: calib_s): >1x means the run's host was slower than that host, and
+#: query times scale with it.
+STEADY_ANCHOR_S = 0.239
+
+
+def time_query(spark, name: str, sf_dir: str) -> float:
+    """Wall seconds to run suite query ``name`` on ``sf_dir`` to
+    completion with the noop sink; -1.0 (and a stderr line) if it
+    fails, so one broken query never kills a measurement run."""
+    from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
+
+    t0 = time.perf_counter()
+    try:
+        QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    except Exception as exc:
+        print(
+            f"bench: {name}@{os.path.basename(sf_dir)} FAILED: {exc!r}",
+            file=sys.stderr,
+        )
+        return -1.0
+    return time.perf_counter() - t0
 
 
 def _warm_session(spark, sf_dirs: list[str]) -> None:
-    """One warm-up recipe for BOTH measurement paths (_run and _sweep):
-    the block has been re-tuned three times (r5 added the Arrow pool,
-    r10 the parquet/cache/checkpoint machinery), and a tuning applied
-    to one path but not the other skews whichever column that path
-    measures cold.
+    """One warm-up recipe for every measurement path (_run, _sweep and
+    tools/profile_query.py): the block has been re-tuned three times
+    (r5 added the Arrow pool, r10 the parquet/cache/checkpoint
+    machinery), and a tuning applied to one path but not the other
+    skews whichever column that path measures cold.
 
     - JVM/codegen path, so the first timed query doesn't absorb
       session bring-up;
@@ -102,9 +123,9 @@ def _run() -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     _warm_session(spark, [sf_dir])
 
-    # Host-speed calibration anchor: a fixed CPU-bound workload timed on
-    # the warmed session.  This host's effective CPU allocation varies
-    # run-to-run (round-4 measured 2-8x inflation from outside load), so
+    # Host-speed probe: a fixed CPU-bound workload timed on the warmed
+    # session.  This host's effective CPU allocation varies run-to-run
+    # (round-4 measured 2-8x inflation from outside load), so
     # cross-round query-time comparisons should be read relative to
     # calib_s, not as absolutes.
     def _calib_compute() -> float:
@@ -136,21 +157,6 @@ def _run() -> dict:
             ).save()
         return time.perf_counter() - t0
 
-    # INTERLEAVED probes (VERDICT r7 item 2a): one sample before the
-    # loop, one mid-loop, one after, all recorded — a host-load shift
-    # mid-run is then visible in the record itself.  IMPORTANT
-    # (measured r8): the probe has a JVM warm-up curve — the identical
-    # job measures ~0.58 s on first execution and ~0.17-0.23 s once the
-    # codegen/JIT paths are hot — so the FIRST sample is the only one
-    # comparable to CALIB_ANCHOR_S (every r3-r7 record was a first-shot
-    # probe), and it alone feeds value_calibrated.  The later samples
-    # are steady-state: compare them to EACH OTHER (calib_steady_s =
-    # their min) to detect mid-run load shifts; never mix the two
-    # regimes in one median (an r8 draft did, inflating the calibrated
-    # total 1.6x on a quiet host).
-    calib_samples = [_calib_compute()]
-    calib_jobs_samples = [_calib_jobs()]
-
     # Oracle-only O(n^2) cross-check forms; their scale-safe twins
     # (dedup_ngram_jaccard_prefix / dedup_embedding_cosine_lsh /
     # containment_pairs_prefix) are the timed production paths.
@@ -167,10 +173,7 @@ def _run() -> dict:
     # per-query deltas cross-round (r13: ks_drift_price 3.8 record vs
     # 1.97 warm).  Alphabetical order never changes, so from r14 on the
     # cold region taxes the SAME queries every round and per-query
-    # times compare like-for-like across rotations.  Timing methodology
-    # per query (noop sink, same loop) is untouched; the one-time
-    # reordering artifact vs the r13 record is disclosed in
-    # OPTIMIZATION_r14.md with warm A/Bs for the new head queries.
+    # times compare like-for-like across rotations.
     run_list = sorted(n for n in QUERIES if n not in excluded)
 
     # Sacrificial slot-1 warmup (VERDICT r11 item 4): whichever query
@@ -181,125 +184,101 @@ def _run() -> dict:
     # vs 5.9 s out-of-slot, manufacturing the round's apparent worst
     # regression.  Run the slot-1 query ONCE, unrecorded, so its timed
     # execution sits in the same JIT-hot regime as every other slot.
-    # Placed AFTER the first-shot calib probes: those are the only
-    # samples comparable to CALIB_ANCHOR_S, and extra work before them
-    # would shift their regime and skew value_calibrated cross-round.
     if run_list:
-        try:
-            QUERIES[run_list[0]].spark(spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        except Exception as exc:
-            print(
-                f"bench: slot-1 warmup {run_list[0]} FAILED: {exc!r}",
-                file=sys.stderr,
-            )
+        time_query(spark, run_list[0], sf_dir)
 
+    # The probes run mid-loop and after the last query, both on a
+    # JIT-hot session: a host-load shift mid-run shows as two samples
+    # that disagree, and the faster one is the run's calib_s.  (A
+    # first-shot probe before the loop measures JVM warm-up, ~2x the
+    # steady time, and is not taken.)
     midpoint = len(run_list) // 2
+    calib_samples: list[float] = []
+    calib_jobs_samples: list[float] = []
     timings: dict[str, float] = {}
-    total = 0.0
     for i, name in enumerate(run_list):
-        if i == midpoint:  # mid-run calibration sample
+        if i == midpoint:
             calib_samples.append(_calib_compute())
             calib_jobs_samples.append(_calib_jobs())
-        q = QUERIES[name]
-        t0 = time.perf_counter()
-        try:
-            q.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-        except Exception as exc:  # keep benching; surface the failure
-            print(f"bench: {name} FAILED: {exc!r}", file=sys.stderr)
-            dt = -1.0
-        timings[name] = round(dt, 4)
-        if dt > 0:
-            total += dt
+        timings[name] = round(time_query(spark, name, sf_dir), 4)
     calib_samples.append(_calib_compute())
     calib_jobs_samples.append(_calib_jobs())
-    # first-shot = anchor-comparable; warm tail = intra-run drift signal
-    calib_s = round(calib_samples[0], 3)
-    calib_jobs_s = round(calib_jobs_samples[0], 3)
-    calib_steady_s = round(sorted(calib_samples[1:])[0], 3)
-    calib_jobs_steady_s = round(sorted(calib_jobs_samples[1:])[0], 3)
-
-    # Production-path subtotal (VERDICT r7 item 5): these timed entries
-    # exist to cross-verify a production twin rather than as the path a
-    # user would run at 100 TB — portable md5-32 signature twins of the
-    # engine-hash dedups, single-step/probe verification forms of the
-    # iterative clustering ops, and the between-batch O(increment x
-    # corpus-candidate) verification shape of incremental dedup.  They
-    # stay timed (a regression there is still a regression) but are
-    # reported separately so a swing in a verification form cannot
-    # drown a regression in a real path, and vice versa.
-    verification_forms = [
-        "dedup_minhash_portable",   # md5-32 twin of dedup_minhash
-        "dedup_simhash_portable",   # md5-32 twin of dedup_simhash
-        "kmeans_step_verified",     # one-step twin of embedding_centroids
-        "ivf_probe_verified",       # seed-centroid probe shape
-        "dedup_incremental_batch",  # between-batch verification shape
-        # r12 conversions: these two registered forms now run the
-        # portable-hash pipelines end to end (md5-32 2-gram MinHash;
-        # rounded-Lloyd quantizer) — the xxhash64 / Spark ML KMeans
-        # production paths stay timed via dedup_minhash and pinned by
-        # pytest respectively.
-        "dedup_minhash_transitive",
-        "similarity_ivf_topk",
-    ]
-    verification_s = sum(
-        t for n, t in timings.items() if n in verification_forms and t > 0
+    record = _record(timings, calib_samples, calib_jobs_samples)
+    # warmup_query: the slot-1 absorber, timed only once JIT-hot
+    record.update(
+        excluded=excluded, sf=sf, warmup_query=run_list[0] if run_list else None
     )
-    production_total = total - verification_s
+    return record
+
+
+#: Production-path subtotal (VERDICT r7 item 5): these timed entries
+#: exist to cross-verify a production twin rather than as the path a
+#: user would run at 100 TB — portable md5-32 signature twins of the
+#: engine-hash dedups, single-step/probe verification forms of the
+#: iterative clustering ops, and the between-batch O(increment x
+#: corpus-candidate) verification shape of incremental dedup.  They
+#: stay timed (a regression there is still a regression) but are
+#: reported separately so a swing in a verification form cannot drown
+#: a regression in a real path, and vice versa.
+VERIFICATION_FORMS = [
+    "dedup_minhash_portable",   # md5-32 twin of dedup_minhash
+    "dedup_simhash_portable",   # md5-32 twin of dedup_simhash
+    "kmeans_step_verified",     # one-step twin of embedding_centroids
+    "ivf_probe_verified",       # seed-centroid probe shape
+    "dedup_incremental_batch",  # between-batch verification shape
+    # r12 conversions: these two registered forms now run the
+    # portable-hash pipelines end to end (md5-32 2-gram MinHash;
+    # rounded-Lloyd quantizer) — the xxhash64 / Spark ML KMeans
+    # production paths stay timed via dedup_minhash and pinned by
+    # pytest respectively.
+    "dedup_minhash_transitive",
+    "similarity_ivf_topk",
+]
+
+
+def _record(
+    timings: dict[str, float],
+    calib_samples: list[float],
+    calib_jobs_samples: list[float],
+) -> dict:
+    """The full bench record from one run's measurements: per-query
+    seconds (-1 = failed) and the steady probe samples.  calib_s is
+    the fastest probe sample, and every calibrated figure is scaled by
+    STEADY_ANCHOR_S / calib_s (None when calib_s is 0)."""
+    calib_s = round(min(calib_samples), 3)
+    total = sum(t for t in timings.values() if t > 0)
+    production_total = total - sum(
+        t for n, t in timings.items() if n in VERIFICATION_FORMS and t > 0
+    )
+
+    def calibrated(seconds: float) -> float | None:
+        if calib_s <= 0:
+            return None
+        return round(seconds * STEADY_ANCHOR_S / calib_s, 3)
 
     return {
         "metric": "suite_wall_seconds",
         "value": round(total, 3),
         "unit": "sec",
-        # Wall time normalized to the reference host speed (VERDICT r4
-        # item 5): CALIB_ANCHOR_S is the round-3 driver host's calib_s,
-        # so value_calibrated is directly comparable across rounds even
-        # when the host's effective CPU allocation swings 2-8x.
-        "value_calibrated": round(total * (CALIB_ANCHOR_S / calib_s), 3)
-        if calib_s > 0
-        else None,
+        "value_calibrated": calibrated(total),
         "queries": timings,
-        # Per-query calibrated timings (VERDICT r5 item 8): cross-round
-        # per-query diffs read these directly instead of re-normalizing
-        # by hand.  Failures stay -1 (never scaled).
-        "queries_calibrated": {
-            n: (round(t * (CALIB_ANCHOR_S / calib_s), 4) if t > 0 else t)
-            for n, t in timings.items()
-        }
-        if calib_s > 0
-        else None,
-        "excluded": excluded,
-        # Slot-1 JIT absorber: this query ran once UNRECORDED before
-        # the timed loop (VERDICT r11 item 4), so its timed entry is
-        # JIT-hot like every other slot.
-        "warmup_query": run_list[0] if run_list else None,
-        "sf": sf,
         "calib_s": calib_s,
-        "calib_anchor_s": CALIB_ANCHOR_S,
-        # Per-job scheduling-latency probe (20 tiny two-stage jobs);
-        # no anchor yet — record and compare across rounds to attribute
-        # swings in iterative/streaming queries to scheduler latency
-        # rather than plan changes.
-        "calib_jobs_s": calib_jobs_s,
-        # All three interleaved samples (start / mid / end), so a
-        # mid-run load shift is visible in the record itself; the
-        # *_steady_s fields are the min of the two WARM samples (the
-        # first sample is the anchor-comparable cold shot).
+        # Per-job scheduling-latency probe (20 tiny two-stage jobs):
+        # compare across rounds to attribute swings in iterative/
+        # streaming queries to scheduler latency rather than plan
+        # changes.
+        "calib_jobs_s": round(min(calib_jobs_samples), 3),
+        # Both samples (mid-run, end of run), so a mid-run load shift
+        # is visible in the record itself.
         "calib_samples": [round(s, 3) for s in calib_samples],
         "calib_jobs_samples": [round(s, 3) for s in calib_jobs_samples],
-        "calib_steady_s": calib_steady_s,
-        "calib_jobs_steady_s": calib_jobs_steady_s,
         # Production-path subtotal: full total minus the verification-
         # only forms listed under "verification_forms".
         "value_production": round(production_total, 3),
-        "value_production_calibrated": round(
-            production_total * (CALIB_ANCHOR_S / calib_s), 3
-        )
-        if calib_s > 0
-        else None,
-        "verification_forms": verification_forms,
+        "value_production_calibrated": calibrated(production_total),
+        "verification_forms": VERIFICATION_FORMS,
+        "n_runs": 1,
+        "picked_run": 1,
     }
 
 
@@ -405,7 +384,6 @@ def _sweep(sf_dirs: list[str], sf1_dir: str | None = None) -> dict:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from automated_batch_data_pipeline_nyc_spark.session import get_session
-    from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
 
     spark = get_session("automated_batch_data_pipeline_nyc_spark-sweep")
     spark.sparkContext.setLogLevel("ERROR")
@@ -433,16 +411,7 @@ def _sweep(sf_dirs: list[str], sf1_dir: str | None = None) -> dict:
             if d not in fam_dirs(fam):
                 continue
             for qname, _ in members:
-                q = QUERIES[qname]
-                t0 = time.perf_counter()
-                try:
-                    q.spark(spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    dt = time.perf_counter() - t0
-                except Exception as exc:
-                    print(f"sweep: {qname}@{d} FAILED: {exc!r}", file=sys.stderr)
-                    dt = -1.0
+                dt = time_query(spark, qname, d)
                 times[qname][d] = round(dt, 3)
                 print(f"sweep: {qname}@{os.path.basename(d)} {dt:.2f}s",
                       file=sys.stderr)
@@ -572,90 +541,6 @@ def _write_sweep_md(record: dict) -> None:
         fh.write(md)
 
 
-#: Auto-rerun noise gate (VERDICT r9 item 6; picker rebuilt per VERDICT
-#: r10 item 1): a run is presumed host-load-contaminated — and the suite
-#: re-measured in a fresh subprocess, up to _MAX_BENCH_RUNS total — when
-#: EITHER probe regime shows load:
-#:   - the cold first-shot probe exceeds _RERUN_GATE x CALIB_ANCHOR_S
-#:     (session bring-up on a loaded host), or
-#:   - ANY warm sample (mid-run / final) exceeds _STEADY_RERUN_GATE_S —
-#:     a load burst DURING the run that the cold probe predates.  Warm
-#:     samples are JIT-hot so they live in their own regime: quiet-host
-#:     warm shots measure 0.17-0.31 s (r8-r10 records); the r10 driver
-#:     artifact's loaded run read 0.427/0.376 while its COLD probe
-#:     happened to land quiet (0.5) and slipped the old gate.
-#: Each run executes in a FRESH subprocess — reusing one JVM would hand
-#: rerun N a warm JIT/codegen path, making its "cold" calib_s
-#: anchor-incomparable and biasing the pick toward whichever run went
-#: last.
-_RERUN_GATE = 1.15
-_STEADY_RERUN_GATE_S = 0.35
-_MAX_BENCH_RUNS = 3
-
-
-def _run_looks_loaded(r: dict) -> str | None:
-    """Reason string when a run's probes show host load, else None."""
-    if r["calib_s"] > _RERUN_GATE * CALIB_ANCHOR_S:
-        return (
-            f"cold calib_s={r['calib_s']} exceeds "
-            f"{_RERUN_GATE}x anchor ({CALIB_ANCHOR_S})"
-        )
-    warm = r.get("calib_samples", [])[1:]
-    # The steady gate scales with the run's own cold probe on hosts
-    # slower than the anchor (allocation swings 2-8x are documented):
-    # an absolute 0.35 s would flag EVERY run on a persistently slow
-    # host and burn all 3 suite runs per bench for nothing.  On a
-    # quiet-or-anchor-speed host the factor is 1 and the gate is the
-    # measured 0.35 s regime split.
-    gate = _STEADY_RERUN_GATE_S * max(1.0, r["calib_s"] / CALIB_ANCHOR_S)
-    if warm and max(warm) > gate:
-        return (
-            f"warm calib samples {warm} exceed "
-            f"{round(gate, 3)}s — mid-run load burst"
-        )
-    return None
-
-
-def _pick_key(r: dict):
-    """Pick order among measured runs (VERDICT r10 item 1 + ADVICE r10):
-    clean runs beat runs with failures (a failed query contributes no
-    time, so a dirty run can LOOK fastest), then gate-passing runs beat
-    loaded ones — value_calibrated DIVIDES by the cold probe, so a run
-    whose cold probe caught a load burst gets a systematically DEFLATED
-    calibrated wall and would otherwise beat a genuinely quiet run —
-    then min calibrated suite wall (the number the record reports),
-    then min steady probe, then raw wall.  NEVER the cold probe alone:
-    a 0.5 s cold shot cannot represent a 7-minute suite (the r10 driver
-    session picked the louder run exactly that way)."""
-    n_failed = sum(1 for t in r["queries"].values() if t < 0)
-    calib = r["value_calibrated"]
-    return (
-        n_failed > 0,
-        _run_looks_loaded(r) is not None,
-        calib if calib is not None else float("inf"),
-        r["calib_steady_s"],
-        r["value"],
-    )
-
-
-def _run_child() -> dict:
-    """One full suite measurement in a fresh python+JVM."""
-    import subprocess
-
-    env = dict(os.environ, SPARK_GRAFT_BENCH_CHILD="1")
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)],
-        env=env,
-        stdout=subprocess.PIPE,
-        stderr=None,  # live progress passes through
-        text=True,
-    )
-    if proc.returncode != 0:
-        raise RuntimeError(f"bench child exited {proc.returncode}")
-    # child stdout is exactly one JSON line
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
 def _make_summary(result: dict) -> dict:
     """The driver-contract summary line (kept in one function so tests
     pin its fields — notably the full "queries" map, VERDICT r13
@@ -685,8 +570,8 @@ def _make_summary(result: dict) -> dict:
         "sf": result["sf"],
         "calib_s": result["calib_s"],
         "calib_jobs_s": result["calib_jobs_s"],
-        "n_runs": result.get("n_runs", 1),
-        "picked_run": result.get("picked_run", 1),
+        "n_runs": result["n_runs"],
+        "picked_run": result["picked_run"],
         "n_queries": len(result["queries"]),
         "n_failed": len(failed),
         "failed": failed[:10],
@@ -696,7 +581,7 @@ def _make_summary(result: dict) -> dict:
 
 
 if __name__ == "__main__":
-    if "--sweep" in sys.argv or "--families" in sys.argv:
+    if "--sweep" in sys.argv:
         _repo = os.path.dirname(os.path.abspath(__file__))
         dirs = [
             "/root/testdata/sf0.001",
@@ -759,44 +644,7 @@ if __name__ == "__main__":
             {"metric": "family_scale_sweep", "families": record["families"]}
         ))
         sys.exit(0)
-    if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "1":
-        print(json.dumps(_run()))
-        sys.exit(0)
-
-    runs = [_run_child()]
-    while len(runs) < _MAX_BENCH_RUNS and (reason := _run_looks_loaded(runs[-1])):
-        print(
-            f"bench: run {len(runs)} {reason} — host looks loaded, "
-            f"re-measuring ({len(runs) + 1}/{_MAX_BENCH_RUNS})",
-            file=sys.stderr,
-        )
-        runs.append(_run_child())
-    picked = min(range(len(runs)), key=lambda i: _pick_key(runs[i]))
-    result = runs[picked]
-    # Run metadata IN the record (VERDICT r9 item 6): the committed
-    # numbers carry how many measurements were taken and what every
-    # run's probes saw, so a noise artifact can't masquerade as the
-    # round's truth.
-    result["n_runs"] = len(runs)
-    result["picked_run"] = picked + 1
-    result["rerun_gate"] = _RERUN_GATE
-    result["steady_rerun_gate_s"] = _STEADY_RERUN_GATE_S
-    result["pick_key"] = (
-        "(n_failed>0, loaded, value_calibrated, calib_steady_s, value)"
-    )
-    result["runs_summary"] = [
-        {
-            "calib_s": r["calib_s"],
-            "calib_steady_s": r["calib_steady_s"],
-            "calib_samples": r.get("calib_samples"),
-            "calib_jobs_s": r["calib_jobs_s"],
-            "value": r["value"],
-            "value_calibrated": r["value_calibrated"],
-            "n_failed": sum(1 for t in r["queries"].values() if t < 0),
-            "loaded": _run_looks_loaded(r),
-        }
-        for r in runs
-    ]
+    result = _run()
     full = json.dumps(result)
     # Full detail: stderr (always) + first stdout line (for direct runs).
     print(full, file=sys.stderr)

@@ -1,14 +1,9 @@
-"""Bench run-picker unit tests (VERDICT r10 item 1 + ADVICE r10).
+"""Bench record and summary-line unit tests (no Spark).
 
-The r10 driver session exposed the failure mode these pin: among two
-full-suite measurements, ``min(calib_s)`` — the COLD 0.5 s probe —
-picked the run whose steady probes showed the host was loaded, then
-calibration multiplied that run's load-inflated wall by anchor/0.5 > 1
-and manufactured a +51 % phantom regression.  The rebuilt picker
-chooses by ``(n_failed>0, value_calibrated, calib_steady_s, value)``
-and the rerun gate now also fires on warm (mid-run/final) probe
-samples, so a burst DURING a run forces a re-measure instead of
-silently becoming the record.
+``bench._record`` turns one run's measurements into the full record:
+calib_s is the run's fastest steady probe sample and every calibrated
+figure is scaled by ``STEADY_ANCHOR_S / calib_s``.  ``_make_summary``
+cuts that record down to the short last stdout line that parsers read.
 """
 
 from __future__ import annotations
@@ -18,110 +13,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import (  # noqa: E402
-    CALIB_ANCHOR_S,
-    _STEADY_RERUN_GATE_S,
-    _pick_key,
-    _run_looks_loaded,
-)
+from bench import STEADY_ANCHOR_S, _make_summary, _record  # noqa: E402
 
 
-def _mk(calib_s, steady, samples, value, calibrated, n_failed=0):
+def _mk(calib_samples, n_failed=0):
     q = {f"q{i}": 1.0 for i in range(10)}
     for i in range(n_failed):
         q[f"q{i}"] = -1.0
-    return {
-        "calib_s": calib_s,
-        "calib_steady_s": steady,
-        "calib_samples": samples,
-        "calib_jobs_s": 4.0,
-        "value": value,
-        "value_calibrated": calibrated,
-        "queries": q,
-    }
-
-
-# The two actual runs of the r10 driver session (BENCH_full_r10_driver).
-# Run 1: cold probe loaded (0.747) but warm samples quiet; run 2: cold
-# probe quiet (0.5 — slipped the old gate) but warm samples loaded.
-R10_RUN1 = _mk(0.747, 0.312, [0.747, 0.330, 0.312], 365.267, 268.938)
-R10_RUN2 = _mk(0.500, 0.376, [0.500, 0.427, 0.376], 424.451, 466.896)
-
-
-def test_r10_regression_picks_the_quiet_run():
-    runs = [R10_RUN1, R10_RUN2]
-    picked = min(range(len(runs)), key=lambda i: _pick_key(runs[i]))
-    # The old key (calib_s, value) picked run 2 — the artifact.
-    assert picked == 0
-
-
-def test_warm_burst_triggers_rerun_gate():
-    # Run 2's cold probe passes the cold gate...
-    assert R10_RUN2["calib_s"] <= 1.15 * CALIB_ANCHOR_S
-    # ...but its warm samples betray the mid-run load burst.
-    assert _run_looks_loaded(R10_RUN2) is not None
-    assert "warm" in _run_looks_loaded(R10_RUN2)
-
-
-def test_quiet_run_passes_both_gates():
-    quiet = _mk(0.55, 0.21, [0.55, 0.23, 0.21], 310.0, 310.0)
-    assert _run_looks_loaded(quiet) is None
-
-
-def test_cold_gate_still_fires():
-    assert _run_looks_loaded(R10_RUN1) is not None
-    assert "cold" in _run_looks_loaded(R10_RUN1)
-
-
-def test_clean_run_beats_faster_dirty_run():
-    # A failed query contributes no time, shrinking value/calibrated —
-    # a dirty run can LOOK fastest (ADVICE r10).  Clean must win.
-    dirty_fast = _mk(0.55, 0.21, [0.55, 0.22, 0.21], 250.0, 250.0, n_failed=2)
-    clean_slow = _mk(0.55, 0.22, [0.55, 0.24, 0.22], 320.0, 320.0)
-    runs = [dirty_fast, clean_slow]
-    picked = min(range(len(runs)), key=lambda i: _pick_key(runs[i]))
-    assert picked == 1
-
-
-def test_none_calibrated_sorts_last():
-    broken = _mk(0.0, 0.21, [0.0, 0.22, 0.21], 300.0, None)
-    ok = _mk(0.55, 0.25, [0.55, 0.26, 0.25], 320.0, 320.0)
-    runs = [broken, ok]
-    picked = min(range(len(runs)), key=lambda i: _pick_key(runs[i]))
-    assert picked == 1
-
-
-def test_deflated_calibrated_loaded_run_loses_to_clean_quiet_run():
-    # value_calibrated DIVIDES by the cold probe: a run whose cold
-    # probe caught a load burst (r10 run 1: 0.747 -> x0.736 deflation)
-    # reports a calibrated wall BELOW the host-quiet truth.  The pick
-    # must prefer the gate-passing run even when its calibrated wall
-    # reads higher.
-    deflated = _mk(0.747, 0.312, [0.747, 0.330, 0.312], 365.267, 268.938)
-    quiet = _mk(0.619, 0.301, [0.619, 0.301, 0.310], 306.514, 272.347)
-    assert _run_looks_loaded(deflated) is not None
-    assert _run_looks_loaded(quiet) is None
-    runs = [deflated, quiet]
-    picked = min(range(len(runs)), key=lambda i: _pick_key(runs[i]))
-    assert picked == 1
-
-
-def test_steady_gate_scales_on_slower_hosts():
-    # cold 0.60 passes the cold gate (< 1.15x anchor); warm probes at
-    # 0.37 reflect the same modest slowness, not a mid-run burst — the
-    # scaled gate (0.35 * 0.60/0.55 = 0.382) must let the run pass
-    # instead of burning all 3 suite runs on a slightly slow host.
-    slowish = _mk(0.60, 0.37, [0.60, 0.375, 0.37], 330.0, 302.5)
-    assert _run_looks_loaded(slowish) is None
-    # ...but a genuine burst on the same host still trips it
-    burst = _mk(0.60, 0.37, [0.60, 0.55, 0.37], 380.0, 348.3)
-    assert _run_looks_loaded(burst) is not None
-
-
-def test_steady_gate_sits_between_regimes():
-    # Quiet-host warm probes measured 0.17-0.31 s across r8-r10; the
-    # r10 loaded run read 0.376-0.427.  The gate must split them.
-    assert 0.312 < _STEADY_RERUN_GATE_S < 0.376
+    r = _record(q, calib_samples, [2.1, 2.3])
+    r.update(sf=0.1)
+    return r
 
 
 def test_summary_line_carries_full_queries_map():
@@ -129,17 +30,7 @@ def test_summary_line_carries_full_queries_map():
     # must carry a "queries" {name: sec} map covering EVERY timed
     # query, or the driver's per_query/scaling analysis comes back
     # empty (PERF_r13.per_query == {}).  Existing fields stay.
-    from bench import _make_summary
-
-    r = _mk(0.55, 0.21, [0.55, 0.23, 0.21], 310.0, 310.0)
-    r.update(
-        metric="suite_wall_seconds",
-        unit="sec",
-        sf=0.1,
-        value_production=300.0,
-        value_production_calibrated=300.0,
-    )
-    s = _make_summary(r)
+    s = _make_summary(_mk([0.23, 0.21]))
     assert s["queries"] == {f"q{i}": 1.0 for i in range(10)}
     for field in (
         "metric", "value", "value_calibrated", "value_production",
@@ -147,3 +38,23 @@ def test_summary_line_carries_full_queries_map():
     ):
         assert field in s
     assert s["n_queries"] == 10 and s["n_failed"] == 0
+
+
+def test_calibration_divides_by_the_runs_steady_probe():
+    r = _mk([0.31, 0.26], n_failed=2)
+    s = _make_summary(r)
+    assert s["calib_s"] == 0.26 and s["calib_jobs_s"] == 2.1
+    assert s["value"] == 8.0  # failed queries contribute no time
+    assert s["value_calibrated"] == round(s["value"] * STEADY_ANCHOR_S / 0.26, 3)
+    assert s["value_production_calibrated"] == round(
+        s["value_production"] * STEADY_ANCHOR_S / 0.26, 3
+    )
+    assert s["n_runs"] == s["picked_run"] == 1
+    assert s["n_failed"] == 2 and s["failed"] == ["q0", "q1"]
+
+
+def test_zero_probe_leaves_calibrated_values_unset():
+    s = _make_summary(_mk([0.0, 0.0]))
+    assert s["calib_s"] == 0.0
+    assert s["value_calibrated"] is None
+    assert s["value_production_calibrated"] is None

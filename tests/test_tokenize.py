@@ -90,6 +90,39 @@ def test_oracle_gram_fragments_match_their_operators(spark):
         assert sp == db
 
 
+def test_minhash_transitive_oracle_pairs_match_on_any_whitespace(spark):
+    """The dedup_minhash_transitive oracle's verified pairs equal
+    minhash_pairs_portable's on near-duplicates that differ only in
+    their separators.  collapse_exact=False: the oracle restates the
+    uncollapsed pair list (the star collapse is component-equivalent,
+    not pair-identical)."""
+    base = "the quick brown fox jumps over the lazy dog near the old river bank"
+    texts = [
+        base,
+        base.replace(" ", "\t"),
+        base.replace(" ", "  "),
+        " " + base.replace(" ", "\r\n") + " ",
+        base.replace("lazy", "lazy\x0b") + " today",
+        "pack my box with five dozen liquor jugs and then go home",
+        "pack my box\twith five dozen liquor jugs and then go home now",
+        "one",
+        " one",
+        "",
+    ]
+    documents = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    sp = dd.minhash_pairs_portable(
+        spark.createDataFrame(documents), "text", "doc_id",
+        num_hashes=16, bands=4, rows_per_band=4,
+        shingle_size=2, jaccard_threshold=0.8, collapse_exact=False,
+    )
+    oracle = suite.QUERIES["dedup_minhash_transitive"].oracle
+    head = oracle[: oracle.index(suite._SQL_CC_CLOSURE)].rstrip().rstrip(",")
+    db = duckdb.sql(f"{head}\nSELECT id_a, id_b FROM pairs").fetchall()
+    pairs = sorted((r.id_a, r.id_b) for r in sp.collect())
+    assert pairs == sorted(db)
+    assert (0, 1) in pairs and (0, 3) in pairs
+
+
 def test_token_splits_live_only_in_tokenize():
     pkg = pathlib.Path(dd.__file__).resolve().parents[1]
     found = {
