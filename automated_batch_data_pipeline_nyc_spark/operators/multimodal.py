@@ -5,8 +5,8 @@ the lakehouse-native layout: bytes travel inside Parquet/Arrow pages,
 metadata stays queryable/prunable without touching payloads.
 
 The decode/feature kernels are Pandas-UDF stages over ``mapInPandas``
-(Arrow-batched).  As of round 4 the DEFAULT kernels are REAL,
-stdlib-only codecs (no PIL/ffmpeg/librosa needed):
+(Arrow-batched).  The kernels are REAL, stdlib-only codecs (no
+PIL/ffmpeg/librosa needed):
 
 - image: PNG IHDR / JPEG SOFn / GIF / BMP header parse for true
   width x height; full PNG pixel decode (zlib inflate + filter
@@ -19,9 +19,7 @@ stdlib-only codecs (no PIL/ffmpeg/librosa needed):
 What stdlib cannot do — JPEG pixel decode, compressed-video frame
 extraction, perceptual features — stays out of scope; unparseable or
 unsupported payloads yield NULL feature columns (never a crash, never
-a fake number).  ``DeterministicFakeCodec`` remains available as an
-EXPLICIT opt-in stand-in for schema/throughput rehearsal when no real
-payloads exist yet; it is no longer any operator's default.
+a fake number).
 
 Scale notes:
 - ``mapInPandas`` streams Arrow batches: decode memory is bounded by
@@ -60,7 +58,6 @@ __all__ = [
     "synthesize_wav_payloads",
     "synthesize_mp4_payloads",
     "synthesize_mixed_payloads",
-    "DeterministicFakeCodec",
 ]
 
 #: Metadata struct carried beside every binary payload column.
@@ -578,37 +575,6 @@ def synthesize_mp4_payloads(df: DataFrame, id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Explicit-opt-in fake (schema/throughput rehearsal only)
-# ---------------------------------------------------------------------------
-
-class DeterministicFakeCodec:
-    """EXPLICIT-OPT-IN stand-in deriving plausible media properties from
-    the payload hash — for rehearsing pipeline schemas/throughput before
-    real payloads exist.  No operator uses it by default (round 4
-    demotion: the default kernels are real stdlib codecs).  ``strict``
-    raises so the stub can never be mistaken for a real decode."""
-
-    def __init__(self, strict: bool = False):
-        self.strict = strict
-
-    def _h(self, payload: bytes) -> int:
-        import hashlib
-
-        return int.from_bytes(hashlib.md5(payload).digest()[:8], "big")
-
-    def image_size(self, payload: bytes) -> tuple[int, int]:
-        if self.strict:
-            raise NotImplementedError("DeterministicFakeCodec(strict=True): fake image decode refused")
-        h = self._h(payload)
-        return 64 + h % 1920, 64 + (h >> 16) % 1080
-
-    def video_n_frames(self, payload: bytes) -> int:
-        if self.strict:
-            raise NotImplementedError("DeterministicFakeCodec(strict=True): fake video decode refused")
-        return 1 + self._h(payload) % 300
-
-
-# ---------------------------------------------------------------------------
 # Operators
 # ---------------------------------------------------------------------------
 
@@ -714,16 +680,13 @@ def decode_image_features(
     df: DataFrame,
     payload_col: str,
     id_col: str,
-    codec: DeterministicFakeCodec | None = None,
 ) -> DataFrame:
     """Arrow-batched image decode: id -> (format, width, height,
     aspect).
 
-    DEFAULT kernel is the REAL header parser (PNG/JPEG/GIF/BMP — see
+    The kernel is the REAL header parser (PNG/JPEG/GIF/BMP — see
     :func:`make_image_header_parser`): true dimensions straight from
-    the container, NULLs for unrecognized payloads.  Pass a
-    ``DeterministicFakeCodec`` explicitly to rehearse with fake
-    payloads (format comes back NULL to keep the fake unmistakable).
+    the container, NULLs for unrecognized payloads.
     """
     schema = T.StructType([
         T.StructField("id", T.LongType(), False),
@@ -732,31 +695,17 @@ def decode_image_features(
         T.StructField("height", T.IntegerType(), True),
         T.StructField("aspect", T.DoubleType(), True),
     ])
-    parse = make_image_header_parser() if codec is None else None
-    strict = codec.strict if codec is not None else False
+    parse = make_image_header_parser()
 
     # closure-pure kernel: `parse` is a closure (pickled by value), so
     # workers never need this package on PYTHONPATH.
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         import pandas as _pd
-
-        def fake_size(payload: bytes) -> tuple[int, int]:
-            if strict:
-                raise NotImplementedError(
-                    "DeterministicFakeCodec(strict=True): fake image decode refused"
-                )
-            h = int.from_bytes(hashlib.md5(payload).digest()[:8], "big")
-            return 64 + h % 1920, 64 + (h >> 16) % 1080
 
         for pdf in batches:
             fmts, ws, hs = [], [], []
             for b in pdf[payload_col]:
-                if parse is not None:
-                    f_, w, h = parse(b)
-                else:
-                    f_, (w, h) = None, fake_size(b)
+                f_, w, h = parse(b)
                 fmts.append(f_)
                 ws.append(w)
                 hs.append(h)
@@ -777,18 +726,16 @@ def resize_images(
     payload_col: str,
     id_col: str,
     target: tuple[int, int] = (224, 224),
-    codec: DeterministicFakeCodec | None = None,
 ) -> DataFrame:
     """Binary-in/binary-out resize stage: (id, payload) ->
     (id, payload, width, height).
 
-    DEFAULT kernel is a REAL PNG pipeline: zlib pixel decode ->
+    The kernel is a REAL PNG pipeline: zlib pixel decode ->
     nearest-neighbor resample (numpy integer index maps, the classic
     thumbnailing kernel) -> PNG re-encode.  The output payload is a
     spec-valid PNG of the target dimensions that any decoder opens.
     Non-PNG / undecodable payloads yield NULL payload + dims (count
-    them downstream; never a fake thumbnail).  The explicit fake-codec
-    path emits the old deterministic placeholder bytes.
+    them downstream; never a fake thumbnail).
     """
     tw, th = target
     if tw < 1 or th < 1:
@@ -799,18 +746,14 @@ def resize_images(
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
     ])
-    png = make_png_codec() if codec is None else None
-    strict = codec.strict if codec is not None else False
+    decode, encode = make_png_codec()
 
     # closure-pure kernel (png decode/encode closures pickled by value)
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         import numpy as _np
         import pandas as _pd
 
-        def real_resize(payload: bytes) -> bytes | None:
-            decode, encode = png
+        def resize(payload: bytes) -> bytes | None:
             arr = decode(payload)
             if arr is None:
                 return None
@@ -820,19 +763,8 @@ def resize_images(
             xs = _np.minimum(((_np.arange(tw) + 0.5) * w / tw).astype(_np.int64), w - 1)
             return encode(arr[ys][:, xs])
 
-        def fake_resize(payload: bytes) -> bytes:
-            if strict:
-                raise NotImplementedError(
-                    "DeterministicFakeCodec(strict=True): fake image resize refused"
-                )
-            seed = hashlib.md5(payload).digest()
-            return (seed * 64)[: 16 + len(payload) % 1009]
-
         for pdf in batches:
-            outs = [
-                real_resize(b) if png is not None else fake_resize(b)
-                for b in pdf[payload_col]
-            ]
+            outs = [resize(b) for b in pdf[payload_col]]
             ok = [o is not None for o in outs]
             yield _pd.DataFrame({
                 "id": pdf[id_col].astype("int64"),
@@ -848,15 +780,12 @@ def extract_audio_features(
     df: DataFrame,
     payload_col: str,
     id_col: str,
-    codec: DeterministicFakeCodec | None = None,
 ) -> DataFrame:
     """Arrow-batched audio feature extraction: id -> (sample_rate,
     n_channels, bits_per_sample, duration_s, rms).
 
-    DEFAULT kernel is the REAL RIFF/WAVE parser + PCM RMS (see
-    :func:`make_wav_parser`); non-WAV payloads yield NULLs.  The
-    explicit fake codec keeps the legacy hash-derived triple (with
-    NULL channel/bit columns so the fake stays distinguishable).
+    The kernel is the REAL RIFF/WAVE parser + PCM RMS (see
+    :func:`make_wav_parser`); non-WAV payloads yield NULLs.
     """
     schema = T.StructType([
         T.StructField("id", T.LongType(), False),
@@ -866,37 +795,14 @@ def extract_audio_features(
         T.StructField("duration_s", T.DoubleType(), True),
         T.StructField("rms", T.DoubleType(), True),
     ])
-    parse = make_wav_parser() if codec is None else None
-    strict = codec.strict if codec is not None else False
+    parse = make_wav_parser()
 
     # closure-pure kernel (see decode_image_features note)
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         import pandas as _pd
 
-        def fake_features(payload: bytes):
-            if strict:
-                raise NotImplementedError(
-                    "DeterministicFakeCodec(strict=True): fake audio decode refused"
-                )
-            h = int.from_bytes(hashlib.md5(payload).digest()[:8], "big")
-            return (
-                [8000, 16000, 44100][h % 3],
-                None,
-                None,
-                round(0.5 + h % 3000 / 10.0, 1),
-                (h >> 8) % 10_000 / 10_000.0,
-            )
-
         for pdf in batches:
-            rows = []
-            for b in pdf[payload_col]:
-                if parse is not None:
-                    rate, ch, bits, dur, rms = parse(b)
-                else:
-                    rate, ch, bits, dur, rms = fake_features(b)
-                rows.append((rate, ch, bits, dur, rms))
+            rows = [parse(b) for b in pdf[payload_col]]
             yield _pd.DataFrame({
                 "id": pdf[id_col].astype("int64"),
                 "sample_rate": _pd.array([r[0] for r in rows], dtype="Int32"),
@@ -914,17 +820,15 @@ def sample_video_frames(
     payload_col: str,
     id_col: str,
     every_nth: int = 30,
-    codec: DeterministicFakeCodec | None = None,
 ) -> DataFrame:
     """Frame-sampling plan: one output row per sampled frame index.
 
-    DEFAULT kernel reads the REAL frame count from the MP4 container
+    The kernel reads the REAL frame count from the MP4 container
     index (``stsz`` sample count — see :func:`make_mp4_parser`);
     payloads that aren't parseable MP4 emit no rows.  ``frame_md5`` is
     a deterministic per-(payload, frame) sampling KEY for downstream
     joins/dedup — pixel-content hashing would need a full video
-    decoder, which stdlib cannot provide.  The explicit fake codec
-    keeps the legacy hash-derived frame count.
+    decoder, which stdlib cannot provide.
     """
     if every_nth < 1:
         raise ValueError(f"every_nth must be >= 1, got {every_nth}")
@@ -933,8 +837,7 @@ def sample_video_frames(
         T.StructField("frame_idx", T.IntegerType(), False),
         T.StructField("frame_md5", T.StringType(), False),
     ])
-    parse = make_mp4_parser() if codec is None else None
-    strict = codec.strict if codec is not None else False
+    parse = make_mp4_parser()
 
     # closure-pure kernel (see decode_image_features note)
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -942,22 +845,12 @@ def sample_video_frames(
 
         import pandas as _pd
 
-        def fake_n_frames(payload: bytes) -> int:
-            if strict:
-                raise NotImplementedError(
-                    "DeterministicFakeCodec(strict=True): fake video decode refused"
-                )
-            return 1 + int.from_bytes(hashlib.md5(payload).digest()[:8], "big") % 300
-
         for pdf in batches:
             ids, idxs, fps = [], [], []
             for _id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if parse is not None:
-                    n, _dur = parse(payload)
-                    if n is None:
-                        continue
-                else:
-                    n = fake_n_frames(payload)
+                n, _dur = parse(payload)
+                if n is None:
+                    continue
                 for i in range(0, n, every_nth):
                     ids.append(int(_id))
                     idxs.append(i)

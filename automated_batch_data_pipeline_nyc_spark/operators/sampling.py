@@ -28,6 +28,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.capture import checkpoint as _ckpt
 from .tokenize import space_tokens
 
 __all__ = [
@@ -553,7 +554,7 @@ def dsir_log_weights(
     )
     # (id, bucket) counts — the one corpus-sized shuffle.  count("__g")
     # makes the empty-doc NULL-gram row carry c = 0.
-    doc_bucket = (
+    doc_bucket = _ckpt(
         grams.withColumn(
             "__b",
             F.when(
@@ -561,8 +562,9 @@ def dsir_log_weights(
             ),
         )
         .groupBy(id_col, "__tgt", "__b")
-        .agg(F.count("__g").alias("__c"))
-        .localCheckpoint(eager=False)  # two consumers — see docstring
+        .agg(F.count("__g").alias("__c")),
+        eager=False,  # two consumers — see docstring
+        label="dsir_doc_buckets",
     )
     dist = (
         doc_bucket.filter(F.col("__b").isNotNull())

@@ -24,6 +24,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.capture import checkpoint as _ckpt, record_plan
 from .util import spread
 
 __all__ = [
@@ -548,8 +549,6 @@ def ivf_build_portable(
     # parquet and re-runs the cast + self-dot.  The first action (the
     # seeds collect) materializes the cache; the frame is n x (d + 2)
     # doubles, executor-storage-bounded.
-    from ..plans.capture import checkpoint as _ckpt
-
     staged = _ckpt(staged, eager=False, label="ivf_staged_vectors")
     seed_rows = (
         staged.select(id_col, "__x").orderBy(F.col(id_col)).limit(n_lists).collect()
@@ -561,8 +560,6 @@ def ivf_build_portable(
             f"n_lists={n_lists} exceeds corpus size {len(seed_rows)}"
         )
     centroids = [[float(v) for v in r["__x"]] for r in seed_rows]
-    from ..plans.capture import record_plan
-
     for _ in range(iters):
         assigned = _assign_to_literal_centroids(staged, centroids, "__cell")
         update = (
@@ -923,7 +920,7 @@ def semdedup(
         - F.lit(2.0) * _dot_raw(F.col("__x"), F.col("__c"))
         + F.col("__cc")
     )
-    assign = (
+    assign = _ckpt(
         ex.crossJoin(F.broadcast(cdf))
         .groupBy("__id")
         .agg(
@@ -931,11 +928,12 @@ def semdedup(
                 "m"
             )
         )
-        .select("__id", F.col("m.cid").alias("cluster"))
+        .select("__id", F.col("m.cid").alias("cluster")),
         # three consumers (pair sides a/b + final flag join) would each
         # recompute the corpus argmin; a lazy checkpoint computes it
         # once and truncates the lineage (same pattern as graph.py CC)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="semdedup_assign",
     )
     vecs = ex.join(assign, "__id")
     a = vecs.select(

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.capture import checkpoint as _ckpt
+
 __all__ = [
     "exact_second_moments",
     "group_linear_fit",
@@ -226,9 +228,7 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     ).select("p.col_x", "p.col_y", F.col("n"), "p.corr")
 
 
-def _equi_depth_buckets(
-    hist: DataFrame, n_buckets: int, stage: bool = True
-) -> DataFrame:
+def _equi_depth_buckets(hist: DataFrame, n_buckets: int) -> DataFrame:
     """Attach ``__b``: the equi-depth range bucket of ``__v``.
 
     Boundaries come from ``percentile_approx(__v, i/n_buckets)`` over
@@ -241,8 +241,8 @@ def _equi_depth_buckets(
     cutpoints strictly below), which is the only property the two-level
     prefix scans need — placement-only freedom, results bit-unchanged.
 
-    The RETURNED bucketed frame is ``localCheckpoint(eager=False)``-ed:
-    every caller feeds it to at least two consumers (the bucket-total
+    The RETURNED bucketed frame is lazily checkpointed (label
+    ``equi_depth_buckets``): every caller feeds it to at least two consumers (the bucket-total
     table and the final running-count join), and round-8 profiling
     showed the un-staged form re-evaluating the histogram shuffle +
     percentile pass + ~2·√n_buckets interpreted HOF steps/row once per
@@ -253,39 +253,33 @@ def _equi_depth_buckets(
     columns), the same size class the engine already shuffles — at
     100 TB that is executor-local disk-backed storage proportional to
     value cardinality, never the raw corpus.
-
-    ``stage=False`` skips the checkpoint so plan tests can assert the
-    FULL lineage contract (pushed scan filters, exchange reuse, bucket-
-    partitioned windows) that staging hides behind an RDD scan; the
-    production default always stages.
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1; got {n_buckets}")
     v = F.col("__v").cast("double")
-    def _staged(out: DataFrame) -> DataFrame:
-        return out.localCheckpoint(eager=False) if stage else out
-
     if n_buckets == 1:
-        return _staged(hist.withColumn("__b", F.lit(0)))
-    from .util import sorted_array_rank
+        out = hist.withColumn("__b", F.lit(0))
+    else:
+        from .util import sorted_array_rank
 
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    # 1-row aggregate — broadcasts, no driver collect.  NOT checkpointed:
-    # its only consumer is the crossJoin below, and within the single
-    # checkpoint-materialization job the cuts subtree and the main
-    # branch share the histogram exchange via AQE reuse.
-    # accuracy 1_000 (r13): boundaries are placement-only (monotone
-    # bucket assignment => bit-identical results), and the 10_000-node
-    # quantile summary was measurably the most expensive part of the
-    # bucket pass (1.2 s -> 0.95 s at sf0.1 on the lineitem histogram)
-    cuts = hist.agg(F.percentile_approx(v, qs, 1_000).alias("__cuts"))
-    # bucket = #{cuts < v} via sqrt-decomposition (~2*sqrt(n_buckets)
-    # HOF steps/row) — the naive per-row fold over n_buckets-1 cuts is
-    # interpreted work measured at ~10 s/eval at sf0.1 with 1024 buckets
-    b = sorted_array_rank(F.col("__cuts"), v, n_buckets - 1).cast("int")
-    return _staged(
-        hist.crossJoin(F.broadcast(cuts)).withColumn("__b", b).drop("__cuts")
-    )
+        qs = [i / n_buckets for i in range(1, n_buckets)]
+        # 1-row aggregate — broadcasts, no driver collect.  NOT checkpointed:
+        # its only consumer is the crossJoin below, and within the single
+        # checkpoint-materialization job the cuts subtree and the main
+        # branch share the histogram exchange via AQE reuse.
+        # accuracy 1_000 (r13): boundaries are placement-only (monotone
+        # bucket assignment => bit-identical results), and the 10_000-node
+        # quantile summary was measurably the most expensive part of the
+        # bucket pass (1.2 s -> 0.95 s at sf0.1 on the lineitem histogram)
+        cuts = hist.agg(F.percentile_approx(v, qs, 1_000).alias("__cuts"))
+        # bucket = #{cuts < v} via sqrt-decomposition (~2*sqrt(n_buckets)
+        # HOF steps/row) — the naive per-row fold over n_buckets-1 cuts is
+        # interpreted work measured at ~10 s/eval at sf0.1 with 1024 buckets
+        b = sorted_array_rank(F.col("__cuts"), v, n_buckets - 1).cast("int")
+        out = (
+            hist.crossJoin(F.broadcast(cuts)).withColumn("__b", b).drop("__cuts")
+        )
+    return _ckpt(out, eager=False, label="equi_depth_buckets")
 
 
 def _two_sample_running_counts(
@@ -293,7 +287,6 @@ def _two_sample_running_counts(
     value_col: str,
     is_a: Column,
     n_buckets: int,
-    stage: bool = True,
 ) -> DataFrame:
     """Shared engine of :func:`ks_two_sample` / :func:`rank_sum_auc`:
     per-distinct-value counts of two labeled samples with INCLUSIVE
@@ -342,7 +335,7 @@ def _two_sample_running_counts(
     # _equi_depth_buckets returns it checkpointed, so the histogram
     # shuffle + percentile pass + bucket assignment run exactly once
     # (r8 profiling: per-consumer re-evaluation was the dominant cost).
-    h = _equi_depth_buckets(hist, n_buckets, stage=stage)
+    h = _equi_depth_buckets(hist, n_buckets)
     btot = h.groupBy("__b").agg(
         F.sum("__ca").alias("__ba"), F.sum("__cb").alias("__bb")
     )
@@ -376,7 +369,6 @@ def rank_sum_auc(
     score_col: str,
     is_positive: Column,
     n_buckets: int = 128,
-    stage: bool = True,
 ) -> DataFrame:
     """Distributed ROC-AUC via the Mann–Whitney rank-sum identity —
     the standard evaluation for any scoring model (quality classifier,
@@ -397,9 +389,7 @@ def rank_sum_auc(
     NULL when either class is empty.
     """
     _d38 = "decimal(38,0)"
-    cum = _two_sample_running_counts(
-        df, score_col, is_positive, n_buckets, stage=stage
-    )
+    cum = _two_sample_running_counts(df, score_col, is_positive, n_buckets)
     num2 = F.sum(
         (2 * F.col("__cumb") - F.col("__cb")).cast(_d38)
         * F.col("__ca").cast(_d38)
@@ -425,7 +415,6 @@ def ks_two_sample(
     value_col: str,
     is_a: Column,
     n_buckets: int = 128,
-    stage: bool = True,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov statistic — the exact
     distribution-drift test that complements the binned PSI
@@ -453,7 +442,7 @@ def ks_two_sample(
     IEEE-double sequence — bit-reproducible on any engine or
     partitioning, no rounding needed.
     """
-    cum = _two_sample_running_counts(df, value_col, is_a, n_buckets, stage=stage)
+    cum = _two_sample_running_counts(df, value_col, is_a, n_buckets)
     gap = F.abs(
         F.col("__cuma").cast("double") / F.col("n_a").cast("double")
         - F.col("__cumb").cast("double") / F.col("n_b").cast("double")
@@ -503,10 +492,11 @@ def pair_lift(
       ``confidence = n_ab / n_a``           (P(b | a), pairs ordered a<b)
       ``lift       = (n_ab · n_baskets) / (n_a · n_b)``
     """
-    b = (
+    b = _ckpt(
         df.select(F.col(basket_col).alias("__bk"), F.col(item_col).alias("__it"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
+        label="pair_lift_baskets",
     )
     n_baskets = b.agg(
         F.countDistinct("__bk").alias("n_baskets")
@@ -1235,7 +1225,6 @@ def trimmed_mean(
     value_col: str,
     trim_frac: float = 0.1,
     n_buckets: int = 64,
-    stage: bool = True,
 ) -> DataFrame:
     """Exact per-group trimmed mean — drop the lowest and highest
     ``floor(trim_frac·n)`` values, average the rest — WITHOUT any
@@ -1275,7 +1264,7 @@ def trimmed_mean(
         key="__v",
     )
     hist = base.groupBy("__g", "__v").agg(F.count(F.lit(1)).alias("__cnt"))
-    h = _equi_depth_buckets(hist, n_buckets, stage=stage)
+    h = _equi_depth_buckets(hist, n_buckets)
     btot = h.groupBy("__g", "__b").agg(F.sum("__cnt").alias("__bc"))
     w_excl = (
         Wn.partitionBy("__g").orderBy("__b").rowsBetween(Wn.unboundedPreceding, -1)

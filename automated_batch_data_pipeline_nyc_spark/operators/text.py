@@ -1234,15 +1234,16 @@ def log_odds_keyness(
         F.col(slice_col).cast("long").alias("__s"),
         F.explode(space_tokens(F.lower(F.col(text_col)))).alias("word"),
     ).filter(F.col("word") != "")
-    words = (
+    words = _ckpt(
         toks.groupBy("word")
         .agg(
             F.count(F.when(F.col("__s") == 1, 1)).alias("y1"),
             F.count(F.when(F.col("__s") == 0, 1)).alias("y0"),
-        )
+        ),
         # two consumers (corpus totals + the per-word scan): stage so
         # the count aggregate runs once (SCALING.md scalar-reuse trap)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="keyness_words",
     )
     totals = words.agg(
         F.sum("y1").alias("n1"), F.sum("y0").alias("n0")
@@ -1377,7 +1378,7 @@ def bigram_lm_scores(
         agg = [F.count(F.lit(1)).alias("n"), F.max("__mf").alias("__mf")]
         if validate_flag:
             agg.append(F.min("__mf").alias("__mf_min"))
-        db = (
+        db = _ckpt(
             _bigram_pairs(
                 df.withColumn(
                     "__mf",
@@ -1388,8 +1389,9 @@ def bigram_lm_scores(
                 "__mf",
             )
             .groupBy(id_col, "w1", "w2")
-            .agg(*agg)
-            .localCheckpoint(eager=False)  # feeds model AND scoring
+            .agg(*agg),
+            eager=False,  # feeds model AND scoring
+            label="bigram_lm_doc_cells",
         )
         if validate_flag:
             n_bad = (
@@ -1427,14 +1429,14 @@ def bigram_lm_scores(
             # scoring join, so materialize the corpus-sized cell table
             # once.  With an external model, db has exactly one consumer
             # and a checkpoint would just burn executor storage.
-            db = db.localCheckpoint(eager=False)
+            db = _ckpt(db, eager=False, label="bigram_lm_self_cells")
             c12 = db.groupBy("w1", "w2").agg(F.sum("n").alias("c12"))
         else:
             mp = _bigram_pairs(model_df, model_text_col or text_col)
             c12 = mp.groupBy("w1", "w2").agg(
                 F.count(F.lit(1)).alias("c12")
             )
-    c12 = c12.localCheckpoint(eager=False)
+    c12 = _ckpt(c12, eager=False, label="bigram_lm_model")
     c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     v = (
         c12.select(F.col("w1").alias("w"))

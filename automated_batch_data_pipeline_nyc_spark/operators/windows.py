@@ -15,6 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ..plans.capture import checkpoint as _ckpt
 from .util import epoch_micros
 
 __all__ = [
@@ -204,9 +205,13 @@ def global_row_number(
         # 1-row aggregate — broadcasts, no driver collect; staged
         # because both the bucket assignment and the heavy-tie probe
         # consume it (unstaged, the percentile pass runs per consumer)
-        cuts = df.agg(
-            F.percentile_approx(v, qs, 1_000).alias("__cuts")  # placement-only; r13 cheaper summary
-        ).localCheckpoint(eager=False)
+        cuts = _ckpt(
+            df.agg(
+                F.percentile_approx(v, qs, 1_000).alias("__cuts")  # placement-only; r13 cheaper summary
+            ),
+            eager=False,
+            label="global_row_number_cuts",
+        )
         # bucket = #{cuts < v} via sqrt-decomposition (~2*sqrt(n) HOF
         # steps/row) — a full per-row fold over n_buckets-1 cuts is
         # interpreted work, ~10 s/eval at sf0.1 with 1024 buckets

@@ -1,4 +1,4 @@
-"""Checkpoint-boundary plan capture (VERDICT r10 item 3).
+"""Checkpoint-boundary plan capture: the package's one lineage cut.
 
 ``localCheckpoint`` truncates lineage: the frame it returns plans as a
 bare RDD scan, so any physical plan UPSTREAM of a checkpoint — most
@@ -8,47 +8,34 @@ round — is invisible to tools/plan_audit.py's final-plan audit.  A
 cartesian product inside a loop iteration would execute every round
 and still audit as ``exchanges: 0``.
 
-The iterative operators (and the eager result-checkpoint sites in
-dedup) route their checkpoints through :func:`checkpoint`, which —
-only while a :func:`capture_checkpoint_plans` scope is active —
-records the physical plan of the frame being checkpointed, BEFORE the
+Every lineage cut in the package goes through :func:`checkpoint` with
+a ``label`` naming its call site (``tests/test_plan_audit.py`` checks
+the source: no other module calls ``localCheckpoint``).  Only while a
+:func:`capture_checkpoint_plans` scope is active, the wrapper records
+the physical plan of the frame being checkpointed, BEFORE the
 truncation hides it.  tools/plan_audit.py opens a scope around each
 query build and audits every captured plan with the same counters it
-runs on the final plan, so the 0-cartesian / bounded-BNLJ gates now
-cover what actually executes per iteration.
+runs on the final plan, so the 0-cartesian / bounded-BNLJ gates cover
+what actually executes per iteration, each under its site's name.
 
 Outside a capture scope the wrapper is exactly
-``df.localCheckpoint(eager=eager)`` plus one read of a module global —
-zero planning overhead on the production path.
+``df.localCheckpoint(eager)`` plus one read of a module global — zero
+planning overhead on the production path.
 """
 
 from __future__ import annotations
 
-import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-__all__ = [
-    "capture_checkpoint_plans",
-    "capture_all_checkpoints",
-    "checkpoint",
-    "record_plan",
-]
+__all__ = ["capture_checkpoint_plans", "checkpoint", "record_plan"]
 
 #: Active capture sink: ``None`` outside a scope, else a list of
 #: (label, java SparkPlan) pairs.  Scopes nest by saving/restoring.
+#: Process-wide, so checkpoints taken on a streaming micro-batch thread
+#: are captured too.
 _SINK: list | None = None
-
-#: True while :func:`checkpoint` is inside its own localCheckpoint call
-#: — lets the catch-all patch below skip plans the routed wrapper
-#: already recorded under their real label.  Thread-LOCAL (ADVICE r11):
-#: a process-wide flag would let an unrouted localCheckpoint on a
-#: streaming micro-batch thread, firing while the audit thread is
-#: inside a routed checkpoint, be silently dropped from capture — the
-#: exact under-coverage direction the gates exist to prevent.  With a
-#: thread-local only the routing thread suppresses the catch-all patch.
-_ROUTED_STATE = threading.local()
 
 
 @contextmanager
@@ -65,44 +52,7 @@ def capture_checkpoint_plans():
         _SINK = prev
 
 
-@contextmanager
-def capture_all_checkpoints():
-    """:func:`capture_checkpoint_plans` plus a temporary
-    ``DataFrame.localCheckpoint`` patch, so call sites NOT routed
-    through :func:`checkpoint` — the suite's lazy staging frames, the
-    streaming merge — are captured too (label ``"unrouted"``).  Audit
-    scopes only; the patch is restored on exit and production code
-    never runs under it.
-
-    The patch targets the CONCRETE class: in Spark 4
-    ``pyspark.sql.DataFrame`` is the dispatch ABC and instances are
-    ``pyspark.sql.classic.dataframe.DataFrame``, whose own method
-    would shadow a patch on the parent."""
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _ConcreteDF
-    except ImportError:  # older Spark: one class
-        _ConcreteDF = DataFrame
-    orig = _ConcreteDF.localCheckpoint
-
-    # Signature mirrors Spark 4's (eager, storageLevel) and forwards any
-    # extras verbatim (ADVICE r11: a call site passing storageLevel
-    # inside a capture scope must not TypeError during audits).
-    def patched(self, eager: bool = True, *args, **kwargs):
-        if _SINK is not None and not getattr(_ROUTED_STATE, "active", False):
-            _SINK.append(
-                ("unrouted", self._jdf.queryExecution().executedPlan())
-            )
-        return orig(self, eager, *args, **kwargs)
-
-    _ConcreteDF.localCheckpoint = patched
-    try:
-        with capture_checkpoint_plans() as sink:
-            yield sink
-    finally:
-        _ConcreteDF.localCheckpoint = orig
-
-
-def record_plan(df: DataFrame, label: str = "") -> None:
+def record_plan(df: DataFrame, label: str) -> None:
     """Record ``df``'s physical plan into an active capture scope
     WITHOUT checkpointing — for loop bodies whose per-iteration work
     leaves the lineage through an action instead of a checkpoint (e.g.
@@ -113,17 +63,11 @@ def record_plan(df: DataFrame, label: str = "") -> None:
         _SINK.append((label, df._jdf.queryExecution().executedPlan()))
 
 
-def checkpoint(df: DataFrame, eager: bool = True, label: str = "") -> DataFrame:
+def checkpoint(df: DataFrame, *, label: str, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` that, inside a capture scope,
     first records the physical plan the checkpoint is about to hide.
 
     ``label`` names the call site (e.g. ``"cc_iter"``) so an audit
     finding points at the right loop."""
-    if _SINK is not None:
-        _SINK.append((label, df._jdf.queryExecution().executedPlan()))
-        _ROUTED_STATE.active = True
-        try:
-            return df.localCheckpoint(eager=eager)
-        finally:
-            _ROUTED_STATE.active = False
+    record_plan(df, label)
     return df.localCheckpoint(eager=eager)

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..plans.capture import checkpoint as _ckpt
+
 __all__ = [
     "EVENTS_STREAM_SCHEMA",
     "read_event_stream",
@@ -412,7 +414,6 @@ def foreach_batch_upsert(
     key_cols: list[str],
     checkpoint: str,
     order_col: str,
-    available_now: bool = True,
 ):
     """Streaming MERGE: apply each micro-batch as an upsert into a
     warehouse table via :func:`..operators.incremental.merge_upsert`.
@@ -466,12 +467,12 @@ def foreach_batch_upsert(
         spark.table(f"{table}__staged").write.mode("overwrite").saveAsTable(table)
         spark.sql(f"DROP TABLE IF EXISTS {table}__staged")
 
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def foreach_batch_upsert_partitioned(
@@ -481,7 +482,6 @@ def foreach_batch_upsert_partitioned(
     partition_col: str,
     checkpoint: str,
     order_col: str,
-    available_now: bool = True,
 ):
     """Streaming MERGE into a PARTITIONED parquet target, rewriting
     only the partitions each micro-batch touches — the scale path
@@ -536,7 +536,7 @@ def foreach_batch_upsert_partitioned(
         # partition files the plan reads (classic self-overwrite trap);
         # eager localCheckpoint bounds the footprint to the touched
         # partitions, never the table.
-        merged = merged.localCheckpoint(eager=True)
+        merged = _ckpt(merged, label="upsert_partitioned_merge")
         # dynamic partition overwrite replaces only the partitions
         # present in `merged` = the touched set.  Set as a WRITE option,
         # not session conf: the sink must prune correctly on a vanilla
@@ -546,32 +546,30 @@ def foreach_batch_upsert_partitioned(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(partition_col).parquet(path)
 
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def write_stream_to_parquet(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    available_now: bool = True,
     output_mode: str = "append",
 ):
     """Append-mode Parquet sink; ``availableNow`` processes the current
     backlog then stops (incremental batch)."""
-    writer = (
+    return (
         df.writeStream.outputMode(output_mode)
         .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_txlog_sink(
@@ -579,7 +577,6 @@ def stream_txlog_sink(
     path: str,
     checkpoint: str,
     app_id: str,
-    available_now: bool = True,
 ):
     """Exactly-once streaming sink into a versioned txlog table: each
     micro-batch becomes one append COMMIT (``sources/txlog.py``), so
@@ -604,9 +601,9 @@ def stream_txlog_sink(
     def _apply(batch: DataFrame, batch_id: int) -> None:
         txlog.commit(batch, path, mode="append", txn=(app_id, int(batch_id)))
 
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -46,6 +46,7 @@ from .operators import tokenize as tk
 from .operators import util as U
 from .operators import windows as W
 from .operators.cleaning import clean_pipeline
+from .plans.capture import checkpoint as _ckpt
 from .sources import load_tables, read_parquet
 from .sources.writers import write_parquet
 
@@ -1996,12 +1997,19 @@ def _sql_doc_ngrams(n: int) -> str:
 @_q(
     "dedup_minhash",
     f"""
-    WITH g AS (SELECT doc_id, {_sql_doc_ngrams(5)} AS gs FROM documents),
+    WITH g AS MATERIALIZED (
+      SELECT doc_id, list_distinct({_sql_doc_ngrams(5)}) AS gs
+      FROM documents),
+    u AS (SELECT doc_id, unnest(gs) AS gram FROM g),
+    shared AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS k
+      FROM u a JOIN u b ON a.gram = b.gram AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id),
     c AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM g a JOIN g b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.gs, b.gs))::DOUBLE
-            / len(list_distinct(list_concat(a.gs, b.gs))) >= 0.5)
+      SELECT s.id_a, s.id_b
+      FROM shared s
+      JOIN g ga ON ga.doc_id = s.id_a JOIN g gb ON gb.doc_id = s.id_b
+      WHERE s.k::DOUBLE / (len(ga.gs) + len(gb.gs) - s.k) >= 0.5)
     SELECT
       CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs,
       CAST((SELECT count(*) FROM c) AS BIGINT) AS census_pairs,
@@ -2018,7 +2026,8 @@ def _sql_doc_ngrams(n: int) -> str:
         "specific, so the audit registers what any engine CAN recompute "
         "— the exact same-threshold pair census (engine side: the "
         "lossless prefix-filter join, hash-verified machinery; oracle "
-        "side: the O(n^2) restatement over the shared gram convention) "
+        "side: a gram self-join over the shared gram convention, whose "
+        "shared-gram count k per pair gives J = k / (n_a + n_b - k)) "
         "— plus boolean verdicts over the production output.  "
         "emitted_subset_ok is TRUE by construction (LSH only proposes; "
         "exact-Jaccard verify gates emission; star pairs are J=1.0).  "
@@ -5071,11 +5080,15 @@ def _hll_rollup(spark, sf_dir):
 
     (events,) = _load(spark, sf_dir, "events")
     base = events.filter(F.col("user_id").isNotNull())
-    partials = hll_partial_sketches(
-        base.withColumn("day", F.date_trunc("day", "ts")),
-        ["event_type", "day"],
-        "user_id",
-    ).localCheckpoint(eager=False)
+    partials = _ckpt(
+        hll_partial_sketches(
+            base.withColumn("day", F.date_trunc("day", "ts")),
+            ["event_type", "day"],
+            "user_id",
+        ),
+        eager=False,
+        label="hll_rollup_partials",
+    )
     union = hll_union_estimate(partials, ["event_type"])
     counts = partials.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_partial_days")
@@ -7435,7 +7448,7 @@ def _triangles(spark, sf_dir):
             .crossJoin(F.broadcast(deg))
             .select("n_vertices", "n_edges", "n_triangles", "max_degree")
         )
-        out = out.localCheckpoint()
+        out = _ckpt(out, label="triangles_result")
     finally:
         pairs.unpersist()
     return out
@@ -8780,10 +8793,11 @@ def _cmheavy(spark, sf_dir):
     # cell weight (cells are linear, so the weighted sketch equals the
     # occurrence sketch exactly).  Before: two tokenize passes and
     # 4 x occurrences md5 evaluations.
-    cnt = (
+    cnt = _ckpt(
         toks.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("c")),
+        eager=False,
+        label="cm_heavy_counts",
     )
     sk = countmin_sketch(cnt, "w", depth=4, width=1024, weight_col="c")
     probes = cnt.filter(F.col("c") >= 100)
@@ -10804,8 +10818,16 @@ def _cm_joinsize(spark, sf_dir):
     # each side's count aggregate runs once for both consumers (lazy
     # localCheckpoint).  Cells sum the counts, which equals the
     # occurrence sketch exactly (cells are linear in integer counts).
-    fa = a.groupBy("k").agg(F.count(F.lit(1)).alias("ca")).localCheckpoint(eager=False)
-    fb = b.groupBy("k").agg(F.count(F.lit(1)).alias("cb")).localCheckpoint(eager=False)
+    fa = _ckpt(
+        a.groupBy("k").agg(F.count(F.lit(1)).alias("ca")),
+        eager=False,
+        label="cm_joinsize_a",
+    )
+    fb = _ckpt(
+        b.groupBy("k").agg(F.count(F.lit(1)).alias("cb")),
+        eager=False,
+        label="cm_joinsize_b",
+    )
     est = countmin_inner_product(
         countmin_sketch(fa, "k", depth=4, width=4096, weight_col="ca"),
         countmin_sketch(fb, "k", depth=4, width=4096, weight_col="cb"),
@@ -11103,9 +11125,11 @@ def _hll_overlap(spark, sf_dir):
     (events,) = _load(spark, sf_dir, "events")
     ev = events.filter(F.col("user_id").isNotNull())
     both = ev.filter(F.col("event_type").isin("purchase", "click"))
-    partials = hll_partial_sketches(
-        both, ["event_type"], "user_id", lg_k=12
-    ).localCheckpoint(eager=False)
+    partials = _ckpt(
+        hll_partial_sketches(both, ["event_type"], "user_id", lg_k=12),
+        eager=False,
+        label="hll_overlap_partials",
+    )
     est = hll_overlap_estimate(partials, "event_type", "purchase", "click")
     pa = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
     pb = ev.filter(F.col("event_type") == "click").select("user_id").distinct()
@@ -11291,16 +11315,17 @@ def _session_paths(spark, sf_dir):
 )
 def _rfm(spark, sf_dir):
     (orders,) = _load(spark, sf_dir, "orders")
-    c = (
+    c = _ckpt(
         orders.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("last_d"),
             F.count(F.lit(1)).alias("freq"),
             F.sum(F.col("o_totalprice").cast(D2)).alias("monetary"),
-        )
+        ),
         # two consumers (anchor max + the banding scan): stage so the
         # corpus aggregate is computed once (SCALING.md scalar-reuse trap)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="rfm_customers",
     )
     anchor = c.agg(F.max("last_d").alias("anchor"))
     b = c.crossJoin(F.broadcast(anchor)).select(
@@ -11510,16 +11535,17 @@ def _rolling_corr(spark, sf_dir):
     (events,) = _load(spark, sf_dir, "events")
     e = events.filter(F.col("ts").isNotNull())
     e = e.withColumn("__us", U.epoch_micros(e, "ts"))
-    d = (
+    d = _ckpt(
         e.select(F.expr("__us DIV 86400000000").alias("di"), "event_type")
         .groupBy("di")
         .agg(
             F.count(F.when(F.col("event_type") == "click", 1)).alias("x"),
             F.count(F.when(F.col("event_type") == "purchase", 1)).alias("y"),
-        )
+        ),
         # two consumers (spine extent + the join): stage so the corpus
         # bucket aggregate runs once (SCALING.md scalar-reuse trap)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="rolling_corr_buckets",
     )
     sp = d.agg(F.min("di").alias("__lo"), F.max("di").alias("__hi")).select(
         F.explode(F.sequence("__lo", "__hi")).alias("di")
@@ -11880,18 +11906,20 @@ def _cohort_ltv(spark, sf_dir):
     from pyspark.sql import Window as Wn
 
     (events,) = _load(spark, sf_dir, "events")
-    e = (
+    e = _ckpt(
         events.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select("user_id", F.date_trunc("week", "ts").alias("wk"), "value")
+        .select("user_id", F.date_trunc("week", "ts").alias("wk"), "value"),
         # two consumers (first-week aggregate + the revenue join):
         # stage so the corpus scan runs once (scalar-reuse trap)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="cohort_ltv_events",
     )
-    f = (
+    f = _ckpt(
         e.groupBy("user_id")
-        .agg(F.min("wk").alias("cohort"))
+        .agg(F.min("wk").alias("cohort")),
         # two consumers (cohort sizes + the revenue join)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="cohort_ltv_first_week",
     )
     sz = f.groupBy("cohort").agg(F.count(F.lit(1)).alias("cohort_users"))
     r = (
@@ -12158,7 +12186,7 @@ def _survival_km(spark, sf_dir):
         F.when(F.col("tp").isNotNull(), 1).otherwise(0).alias("died"),
     )
     # two consumers (duration table + the 1-row total): stage once
-    d = d.localCheckpoint(eager=False)
+    d = _ckpt(d, eager=False, label="survival_km_durations")
     tbl = d.groupBy("dur").agg(
         F.sum("died").cast("bigint").alias("deaths"),
         F.count(F.lit(1)).alias("leaving"),
@@ -12276,11 +12304,12 @@ def _gini_conc(spark, sf_dir):
         .otherwise(r + F.floor((i - r * (q + 1) - 1) / q) + 1)
         .cast("int")
     )
-    rk = (
+    rk = _ckpt(
         ranked.crossJoin(F.broadcast(n_row))
-        .select("o_custkey", "rev", "i", decile.alias("decile"))
+        .select("o_custkey", "rev", "i", decile.alias("decile")),
         # two consumers (totals + decile aggregate): stage the ranked dim
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="gini_ranked",
     )
     g = rk.agg(
         F.count(F.lit(1)).alias("n"),
@@ -12370,13 +12399,14 @@ def _gini_conc(spark, sf_dir):
         "once.",
 )
 def _seasonal_dow(spark, sf_dir):
-    daily = (
+    daily = _ckpt(
         _daily_revenue(spark, sf_dir)
         .withColumn(
             "dow", ((F.dayofweek("d") + 5) % 7 + 1).cast("bigint")
-        )
+        ),
         # three consumers (seasonal agg, total agg, the day join)
-        .localCheckpoint(eager=False)
+        eager=False,
+        label="seasonal_dow_daily",
     )
     s = daily.groupBy("dow").agg(
         F.count(F.lit(1)).alias("days"), F.sum("rev").alias("dow_rev")
@@ -13509,13 +13539,14 @@ def _ivf_probe(spark, sf_dir):
             F.zip_with(a, b, lambda p, q: p * q), F.lit(0.0), lambda s, v: s + v
         )
 
-    e = (
+    e = _ckpt(
         emb.select(
             "vec_id",
             F.transform("embedding", lambda v: v.cast("double")).alias("x"),
         )
-        .withColumn("__xx", dot(F.col("x"), F.col("x")))
-        .localCheckpoint(eager=False)
+        .withColumn("__xx", dot(F.col("x"), F.col("x"))),
+        eager=False,
+        label="ivf_probe_vectors",
     )
     cent = (
         e.filter(F.col("vec_id") < 8)

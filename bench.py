@@ -563,7 +563,7 @@ def _make_summary(result: dict) -> dict:
         # driver contract's "queries" field): the driver's
         # round-over-round per_query and scaling tables populate from
         # the parsed summary line, and with only the top-5 "slowest"
-        # both came back empty (PERF_r13.per_query == {}).
+        # both came back empty.
         # Additions-only: every existing summary field is untouched and
         # the timed path is unchanged.
         "queries": {n: round(t, 4) for n, t in result["queries"].items()},
@@ -653,12 +653,21 @@ if __name__ == "__main__":
     # Persist the complete result object so per-query timings survive the
     # driver's ~2 KB stdout tail capture (VERDICT r3 item 4) — cross-round
     # regression analysis diffs BENCH_full.json, not the truncated stdout.
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(repo, "BENCH_full.json"), "w") as fh:
-            json.dump(result, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-    except OSError as exc:
-        print(f"bench: could not write BENCH_full.json: {exc!r}", file=sys.stderr)
+    # The committed record is an sf0.1 run; a run at any other scale
+    # leaves it alone.
+    if result["sf"] != 0.1:
+        print(
+            f"bench: BENCH_full.json not written (sf {result['sf']}, "
+            "the committed record is sf0.1)",
+            file=sys.stderr,
+        )
+    else:
+        try:
+            repo = os.path.dirname(os.path.abspath(__file__))
+            with open(os.path.join(repo, "BENCH_full.json"), "w") as fh:
+                json.dump(result, fh, indent=1, sort_keys=True)
+                fh.write("\n")
+        except OSError as exc:
+            print(f"bench: could not write BENCH_full.json: {exc!r}", file=sys.stderr)
     # Short summary LAST on stdout so any tail capture parses it.
     print(json.dumps(_make_summary(result)))

@@ -29,7 +29,7 @@ def test_summary_line_carries_full_queries_map():
     # Driver contract (r14, VERDICT r13 item 2): the one-line summary
     # must carry a "queries" {name: sec} map covering EVERY timed
     # query, or the driver's per_query/scaling analysis comes back
-    # empty (PERF_r13.per_query == {}).  Existing fields stay.
+    # empty.  Existing fields stay.
     s = _make_summary(_mk([0.23, 0.21]))
     assert s["queries"] == {f"q{i}": 1.0 for i in range(10)}
     for field in (

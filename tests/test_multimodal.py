@@ -377,27 +377,6 @@ def test_spark_mp4_synthesize_frames(spark):
         assert sorted(by_id[i]) == list(range(0, n_frames, 60))
 
 
-def test_fake_codec_is_explicit_opt_in(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 3).select(
-        F.col("id"), F.encode(F.lit("fake payload"), "UTF-8").alias("payload")
-    )
-    # default (real) kernel: nulls for non-image payloads
-    real = mm.decode_image_features(df, "payload", "id").collect()
-    assert all(r.width is None and r.format is None for r in real)
-    # explicit fake: hash-derived dims, format stays NULL (unmistakable)
-    fake = mm.decode_image_features(
-        df, "payload", "id", codec=mm.DeterministicFakeCodec()
-    ).collect()
-    assert all(r.width is not None and r.format is None for r in fake)
-    # strict fake refuses to run
-    with pytest.raises(Exception):
-        mm.decode_image_features(
-            df, "payload", "id", codec=mm.DeterministicFakeCodec(strict=True)
-        ).collect()
-
-
 def test_sniff_mixed_formats(spark):
     ids = spark.range(0, 28).withColumnRenamed("id", "doc_id")
     payloads = mm.synthesize_mixed_payloads(ids, "doc_id")

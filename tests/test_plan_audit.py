@@ -11,6 +11,7 @@ requires editing this file, i.e. a reviewed decision.
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
 import pytest
@@ -54,6 +55,20 @@ UNPARTITIONED_WINDOWS_ALLOWED = {
     "user_growth_daily": 1,          # day-level aggregate frame
     "zipf_vocab_fit": 1,             # top-vocab rank frame
 }
+
+
+def test_lineage_cuts_live_only_in_capture():
+    """Every checkpoint goes through plans/capture.checkpoint, so an
+    audit's capture scope sees each one under its call site's label."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "automated_batch_data_pipeline_nyc_spark"
+    )
+    found = sorted(
+        path.relative_to(pkg).as_posix()
+        for path in pkg.rglob("*.py")
+        if ".localCheckpoint(" in path.read_text()
+    )
+    assert found == ["plans/capture.py"]
 
 
 @pytest.fixture(scope="module")

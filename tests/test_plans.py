@@ -821,46 +821,45 @@ def test_cohort_ltv_copartitioned_join_broadcast_sizes(spark):
     assert plan.count("FileScan parquet") == 0  # both inputs staged
 
 
+def _bucketed_plans(spark, name: str) -> tuple[str, str]:
+    """Run registered query ``name`` and return its final plan and the
+    plan its ``equi_depth_buckets`` checkpoint hid, as strings.  The
+    production form stages the bucketed histogram through a lazy
+    checkpoint (it feeds two consumers; r8 profiling showed per-consumer
+    re-evaluation doubling the query), so the scan-side lineage is only
+    visible in the captured plan.  After ``collect()`` the captured
+    adaptive plan is final: exchange reuse has resolved."""
+    from automated_batch_data_pipeline_nyc_spark.plans.capture import (
+        capture_checkpoint_plans,
+    )
+
+    with capture_checkpoint_plans() as captured:
+        df = QUERIES[name].spark(spark, SF_SMOKE)
+    df.collect()
+    staged = [p for label, p in captured if label == "equi_depth_buckets"]
+    assert len(staged) == 1, [label for label, _ in captured]
+    splan = staged[0].toString()
+    assert "isFinalPlan=true" in splan
+    return df._jdf.queryExecution().executedPlan().toString(), splan
+
+
 def test_ks_two_sample_no_global_data_sort(spark):
     """The KS sup-gap must come from the two-level prefix scan: the only
     windows are (a) partitioned by range-bucket — parallel — and (b) a
     single-partition pass over the bucket-totals table.  A global-order
     window/sort over the corpus-sized histogram would be the single-task
-    scaler this operator exists to avoid.
-
-    The production form stages the bucketed histogram through a lazy
-    localCheckpoint (it feeds two consumers; r8 profiling showed per-
-    consumer re-evaluation doubling the query), which hides the scan
-    from the final plan — so the LINEAGE contract (pushed filter,
-    bucket-partitioned windows) is asserted on the stage=False twin,
-    and the staging itself on the registered query's plan."""
-    from pyspark.sql import functions as F
-
-    from automated_batch_data_pipeline_nyc_spark.operators.stats import (
-        ks_two_sample,
-    )
-    from automated_batch_data_pipeline_nyc_spark.sources.readers import (
-        read_parquet,
-    )
-
-    orders = read_parquet(spark, f"{SF_SMOKE}/orders.parquet")
-    is_a = F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    raw = ks_two_sample(orders, "o_totalprice", is_a, stage=False)
-    raw.collect()  # finalize the adaptive plan (exchange reuse resolves)
-    plan = raw._jdf.queryExecution().executedPlan().toString()
-    # the within-bucket running sums keep the bucket key in the window spec
-    assert "windowspecdefinition(__b" in plan
+    scaler this operator exists to avoid."""
+    plan, staged = _bucketed_plans(spark, "ks_drift_price")
     # predicate + pruning reach the scan
-    assert "PushedFilters: [IsNotNull(o_totalprice)]" in plan
-    # the corpus-sized per-value histogram exchange executes once: every
-    # further consumer (bucket totals, offsets, grand totals) reuses it
+    assert "PushedFilters: [IsNotNull(o_totalprice)]" in staged
+    # downstream consumers read the checkpointed RDD, and the
+    # within-bucket running sums keep the bucket key in the window spec
+    assert "ExistingRDD" in plan
+    assert "windowspecdefinition(__b" in plan
+    # the bucket-total exchange executes once: every further consumer
+    # (offsets, grand totals) reuses it
     assert "ReusedExchange" in plan
-    # the registered query stages the bucketed histogram: downstream
-    # consumers read the checkpointed RDD, windows stay bucket-keyed
-    staged = QUERIES["ks_drift_price"].spark(spark, SF_SMOKE)
-    splan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in splan
-    assert "windowspecdefinition(__b" in splan
+    assert "ntile(" not in plan and "ntile(" not in staged
 
 
 def test_poisson_bootstrap_single_corpus_exchange(spark):
@@ -973,33 +972,19 @@ def test_trimmed_mean_bucketed_no_per_group_global_sort(spark):
     """trimmed_mean_prices: within-group running counts must be
     partitioned by (group, range-bucket) — with 3 return flags a
     partitionBy(group) window caps parallelism at 3; the bucket key
-    keeps every stage parallel.  No NTILE, no global sort.  Lineage
-    contract asserted on the stage=False twin (the production form
-    stages the bucketed histogram behind an RDD scan — see
-    test_ks_two_sample_no_global_data_sort); staging asserted on the
-    registered query."""
-    from automated_batch_data_pipeline_nyc_spark.operators.stats import (
-        trimmed_mean,
-    )
-    from automated_batch_data_pipeline_nyc_spark.sources.readers import (
-        read_parquet,
-    )
-
-    lineitem = read_parquet(spark, f"{SF_SMOKE}/lineitem.parquet")
-    raw = trimmed_mean(
-        lineitem, "l_returnflag", "l_extendedprice", 0.1, stage=False
-    )
-    raw.collect()  # finalize adaptive plan
-    plan = raw._jdf.queryExecution().executedPlan().toString()
-    assert "windowspecdefinition(__g" in plan
-    assert "ntile(" not in plan  # the window fn; "percentile_approx" contains "ntile"
+    keeps every stage parallel.  No NTILE, no global sort."""
+    plan, staged = _bucketed_plans(spark, "trimmed_mean_prices")
     # the value predicate must reach the scan (exact list intentionally
     # unpinned: the group-join inference adds IsNotNull(l_returnflag))
-    assert "PushedFilters: [IsNotNull(l_extendedprice)" in plan
-    staged = QUERIES["trimmed_mean_prices"].spark(spark, SF_SMOKE)
-    splan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in splan
-    assert "windowspecdefinition(__g" in splan
+    assert "PushedFilters: [IsNotNull(l_extendedprice)" in staged
+    # the (group, value) histogram exchange executes once: the cuts
+    # subtree reuses it
+    assert "ReusedExchange" in staged
+    assert "ExistingRDD" in plan
+    assert "windowspecdefinition(__g" in plan
+    assert "ReusedExchange" in plan
+    # the window fn; "percentile_approx" contains "ntile"
+    assert "ntile(" not in plan and "ntile(" not in staged
 
 
 def test_did_broadcast_dim_then_single_conditional_agg(spark):

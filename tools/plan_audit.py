@@ -39,12 +39,11 @@ Checkpoint-boundary plans are audited too (VERDICT r10 item 3): eager
 ``localCheckpoint`` truncates lineage, so the loop-body plans of the
 iterative operators (CC / PageRank / BFS / k-core / BPE train) — which
 checkpoint every round — never reach the FINAL plan.  The operators
-route checkpoints through plans/capture.py; the audit opens a capture
-scope per query (which also patches DataFrame.localCheckpoint so
-UN-routed sites — lazy staging frames, the streaming merge — are
-captured as label "unrouted") and runs the same counters on every
-captured plan,
-recorded per query under ``checkpoints`` (per-label exchange maxima +
+cut lineage only through plans/capture.checkpoint, each site under
+its own label (tests/test_plan_audit.py checks the source for any other
+``localCheckpoint`` call); the audit opens a capture scope per query
+and runs the same counters on every captured plan, recorded per query
+under ``checkpoints`` (per-label exchange maxima +
 cartesian/BNLJ/python totals).  The 0-cartesian gate therefore covers
 what actually executes per iteration, not just the post-truncation
 union of checkpoint scans.
@@ -275,7 +274,7 @@ def _audit_checkpoints(captured) -> dict:
 
 def audit(sf_dir: str, spark=None) -> dict:
     from automated_batch_data_pipeline_nyc_spark.plans.capture import (
-        capture_all_checkpoints,
+        capture_checkpoint_plans,
     )
     from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
 
@@ -287,7 +286,7 @@ def audit(sf_dir: str, spark=None) -> dict:
     report: dict[str, dict] = {}
     for name, q in QUERIES.items():
         try:
-            with capture_all_checkpoints() as captured:
+            with capture_checkpoint_plans() as captured:
                 df = q.spark(spark, sf_dir)
                 jplan = df._jdf.queryExecution().executedPlan()
                 entry = _audit_one(jplan)

@@ -1,7 +1,7 @@
 """Per-query measurement harness for optimization rounds (guide §1).
 
     python tools/profile_query.py q1 q2 ... [--sf DIR] [--reps N]
-        [--plan-dir plans/r13] [--tag before|after] [--plan-only]
+        [--plan-dir DIR] [--tag before|after] [--plan-only]
 
 Times each named suite query with bench.time_query (the noop-sink
 measurement bench.py and ``--sweep`` use) in a session configured
@@ -54,7 +54,7 @@ def main() -> int:
         os.makedirs(args.plan_dir, exist_ok=True)
 
     from automated_batch_data_pipeline_nyc_spark.plans.capture import (
-        capture_all_checkpoints,
+        capture_checkpoint_plans,
     )
 
     first = True
@@ -64,7 +64,7 @@ def main() -> int:
             # RDD scan, so ALSO record every checkpoint-boundary plan
             # (same capture scope plan_audit.py uses) — the loop-body /
             # staged-result plans are where the optimization story is.
-            with capture_all_checkpoints() as sink:
+            with capture_checkpoint_plans() as sink:
                 df = QUERIES[name].spark(spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
