@@ -38,7 +38,6 @@ from ..plans.capture import checkpoint as _ckpt
 __all__ = [
     "exact_dedup",
     "shingle",
-    "minhash_signature",
     "lsh_candidate_pairs",
     "minhash_pairs",
     "minhash_dedup",
@@ -83,29 +82,18 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 # Shingling + MinHash
 # ---------------------------------------------------------------------------
 
-def shingle(text: Column | str, n: int = 5, word_grams: bool = True) -> Column:
-    """Distinct shingle array for a text column.
-
-    ``word_grams``: n-token word shingles over the lowercased
-    :func:`~.tokenize.whitespace_tokens` (robust for natural text);
-    otherwise character n-grams.  Built entirely from array expressions
-    (split / transform / slice / array_distinct) — codegen'd, map-only.
+def shingle(text: Column | str, n: int = 5) -> Column:
+    """Distinct shingle array for a text column: n-token word shingles
+    over the lowercased :func:`~.tokenize.whitespace_tokens` (robust for
+    natural text).  Built entirely from array expressions (split /
+    transform / slice / array_distinct) — codegen'd, map-only.
     """
     t = F.col(text) if isinstance(text, str) else text
-    if word_grams:
-        toks = whitespace_tokens(F.lower(t))
-        # texts shorter than n tokens: fall back to the whole text as
-        # one shingle so they can still be compared.
-        grams = F.when(F.size(toks) >= n, word_ngrams(toks, n))
-        grams = grams.otherwise(F.array(F.lower(t)))
-    else:
-        chars = F.lower(t)
-        k = F.length(chars) - (n - 1)
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
-            lambda i: chars.substr(i, F.lit(n)),
-        )
-        grams = F.when(k >= 1, grams).otherwise(F.array(chars))
+    toks = whitespace_tokens(F.lower(t))
+    # texts shorter than n tokens: fall back to the whole text as
+    # one shingle so they can still be compared.
+    grams = F.when(F.size(toks) >= n, word_ngrams(toks, n))
+    grams = grams.otherwise(F.array(F.lower(t)))
     return F.array_distinct(grams)
 
 
@@ -144,18 +132,6 @@ def _minhash_from_h32(h32: Column, num_hashes: int = 128) -> Column:
         F.array_min(F.transform(h32, lambda h: (h * a + b) % _MH_PRIME))
         for a, b in _mh_coeffs(num_hashes)
     ])
-
-
-def _minhash_from_hashes(hashes: Column, num_hashes: int = 128) -> Column:
-    return _minhash_from_h32(_fold32(hashes), num_hashes)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """MinHash signature of a (string) shingle array — see
-    ``_minhash_from_hashes`` for the one-hash-then-multiply scheme."""
-    return _minhash_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
 
 
 # NOTE: a "hash tokens once, combine per-gram" shingle variant was
@@ -560,9 +536,10 @@ def with_minhash_portable(
     num_hashes: int = 16,
 ) -> DataFrame:
     """Cross-engine-verifiable MinHash signature column: the SAME
-    ``(a, b) mod p`` permutation family as :func:`minhash_signature`,
-    but over the md5-derived 32-bit token hashes, so an ANSI-SQL engine
-    reproduces every signature component exactly.  For verifying the
+    ``(a, b) mod p`` permutation family as :func:`_minhash_from_h32`
+    (the signatures of :func:`minhash_pairs`), but over the md5-derived
+    32-bit token hashes, so an ANSI-SQL engine reproduces every
+    signature component exactly.  For verifying the
     MinHash ALGORITHM (the suite hash-checks it against DuckDB) — the
     hot path stays on xxhash64 shingles.
     """
@@ -1364,7 +1341,7 @@ def containment_count_pairs(
 def _space_grams(text_col: str, n: int) -> Column:
     """DISTINCT word-``n``-grams of the lowercased
     :func:`~.tokenize.space_tokens` — the gram set of the SQL-replayed
-    pair operators (the oracles' ``string_split(lower(text), ' ')``).
+    pair operators (their oracles read it as ``suite._SQL_DOC_2GRAMS``).
     A doc shorter than ``n`` tokens is one gram, its tokens joined."""
     return F.array_distinct(
         word_ngrams(space_tokens(F.lower(F.col(text_col))), n)

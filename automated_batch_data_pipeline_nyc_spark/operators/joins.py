@@ -258,13 +258,11 @@ def range_join(
     left: DataFrame,
     right: DataFrame,
     condition: Column,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Theta/interval join (time-bucket-style matching).  Non-equi
     conditions execute as BNLJ; keep the bucket side broadcast-small so
     the big side never shuffles (SURVEY.md §2.6)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on=condition)
+    return left.join(F.broadcast(right), on=condition)
 
 
 def interval_overlap_join(

@@ -87,8 +87,8 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     return out
 
 
-def intersect(a: DataFrame, b: DataFrame, distinct: bool = True) -> DataFrame:
-    return a.intersect(b) if distinct else a.intersectAll(b)
+def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
+    return a.intersect(b)
 
 
 def except_all(a: DataFrame, b: DataFrame, distinct: bool = False) -> DataFrame:

@@ -401,22 +401,20 @@ def build_ivf_index(
     assign_col: str = "ivf_list",
     fit_fraction: float | None = None,
     max_iter: int = 8,
-    metric: str = "cosine",
 ):
     """IVF coarse quantizer: KMeans (Spark ML, fixed seed) over the
     embeddings; returns (assigned_df, centroids) where ``centroids`` is
     a small driver-side list [[...], ...] indexed by list id.
 
-    ``metric="cosine"`` (the default — ``ivf_search`` ranks by cosine)
-    L2-normalizes vectors before fit AND assignment, i.e. spherical
-    k-means: Euclidean Voronoi cells on the unit sphere are exactly
-    cosine cells, so the partition agrees with the search metric.
+    Vectors are L2-normalized before fit AND assignment (``ivf_search``
+    ranks by cosine), i.e. spherical k-means: Euclidean Voronoi cells
+    on the unit sphere are exactly cosine cells, so the partition
+    agrees with the search metric.
     Clustering RAW vectors under Euclidean distance while probing by
     cosine splits direction-aligned vectors of different magnitudes
     across lists — measured mean recall@10 (nprobe=4/8 lists, sf0.001
     fixture) was 0.68 raw vs >=0.9 normalized (pinned by
     tests/test_llm_ops.py::test_ivf_search_recall_vs_brute_force).
-    ``metric="l2"`` keeps raw-vector Euclidean clustering.
 
     At 100 TB: fit on a sample (KMeans cost is per-row x iters — set
     ``fit_fraction``; a seeded sample of a few million vectors places
@@ -431,20 +429,17 @@ def build_ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"metric must be 'cosine' or 'l2', got {metric!r}")
     v = _as_double(F.col(vec_col))
-    if metric == "cosine":
-        # stage the norm as a column FIRST: Catalyst inlines expression
-        # trees per use site, so `x / norm` inside the transform lambda
-        # would re-evaluate the O(d) aggregate per ELEMENT (O(d²)/row)
-        df = df.withColumn(
-            "__norm", F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x))
-        )
-        v = F.when(
-            F.col("__norm") > 0,
-            F.transform(v, lambda x: x / F.col("__norm")),
-        ).otherwise(v)
+    # stage the norm as a column FIRST: Catalyst inlines expression
+    # trees per use site, so `x / norm` inside the transform lambda
+    # would re-evaluate the O(d) aggregate per ELEMENT (O(d²)/row)
+    df = df.withColumn(
+        "__norm", F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x))
+    )
+    v = F.when(
+        F.col("__norm") > 0,
+        F.transform(v, lambda x: x / F.col("__norm")),
+    ).otherwise(v)
     feat = df.withColumn("__features", array_to_vector(v)).drop("__norm")
     fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
     model = KMeans(

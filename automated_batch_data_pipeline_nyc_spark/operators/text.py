@@ -31,7 +31,6 @@ __all__ = [
     "punct_ratio",
     "stopword_ratio",
     "quality_score",
-    "language_id",
     "with_language_id",
     "fingerprint_md5",
     "redact_pii",
@@ -122,26 +121,6 @@ def quality_score(text: Column | str) -> Column:
     return (len_score * F.lit(0.4) + sw_score * F.lit(0.4) + punct_score * F.lit(0.2))
 
 
-def language_id(text: Column | str, out_score: bool = False) -> Column:
-    """Marker-word language heuristic: count hits per language's marker
-    set; highest count wins, ties broken by fixed language order
-    ('en' > 'de' > 'es' > 'fr'), 'und' (undetermined) when no marker
-    hits.  A real pipeline would swap in fastText/CLD3 via a Pandas
-    UDF; the heuristic keeps the operator fully SQL-verifiable.
-
-    Expression form — the argmax references each count several times,
-    so Catalyst re-tokenizes per reference; prefer ``with_language_id``
-    (staged counts) in real plans."""
-    toks = space_tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-
-    def _marker_hits(markers: tuple[str, ...]) -> Column:
-        arr = F.array(*[F.lit(w) for w in markers])
-        return F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
-
-    scores = {lang: _marker_hits(markers) for lang, markers in LANG_MARKERS.items()}
-    return _best_lang(scores)
-
-
 def _best_lang(scores: dict[str, Column]) -> Column:
     """Highest marker count wins; ties break by fixed language order
     ('en' > 'de' > 'es' > 'fr'); no hits -> 'und'."""
@@ -159,11 +138,16 @@ def _best_lang(scores: dict[str, Column]) -> Column:
 
 
 def with_language_id(df: DataFrame, text_col: str, out_col: str = "lang_pred") -> DataFrame:
-    """Staged language ID: project the four marker-hit counts ONCE as
-    columns, then pick the argmax — the decision tree references each
-    count ~4 times, and inline expressions would re-tokenize the text
-    per reference (see the staging note in operators/dedup.py).
-    Prefer this over ``language_id`` in real plans."""
+    """Marker-word language heuristic: count hits per language's marker
+    set; highest count wins, ties broken by fixed language order
+    ('en' > 'de' > 'es' > 'fr'), 'und' (undetermined) when no marker
+    hits.  A real pipeline would swap in fastText/CLD3 via a Pandas
+    UDF; the heuristic keeps the operator fully SQL-verifiable.
+
+    Staged: the four marker-hit counts are projected ONCE as columns,
+    then the argmax is picked — the decision tree references each count
+    ~4 times, and inline expressions would re-tokenize the text per
+    reference (see the staging note in operators/dedup.py)."""
     toks = space_tokens(F.lower(F.col(text_col)))
 
     def _hits(markers: tuple[str, ...]) -> Column:

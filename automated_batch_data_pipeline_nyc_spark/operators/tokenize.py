@@ -1,13 +1,16 @@
-"""Tokenizers: every token kind the operators use, defined once.
+"""Tokenizers: every token kind the operators use, defined once, in
+both dialects.
 
-Each function is a plain Spark built-in expression (split / filter /
-transform — whole-stage codegen, no Python), and each has an exact
-DuckDB replay, named in its docstring, that the suite's oracles use:
+Each Spark function is a plain built-in expression (split / filter /
+transform — whole-stage codegen, no Python).  Its ``*_sql`` twin,
+defined next to it, takes the SQL expression of the text (for example
+``"lower(text)"``) and returns the DuckDB expression that replays it
+exactly; the suite's oracles spell every token split through these
+twins.
 
 - :func:`space_tokens` — split on a single space.  Runs of spaces yield
   empty tokens, tabs and newlines stay inside tokens.  Cheaper than the
-  regex split (Java's single-char fast path), so it is the default for
-  operators whose oracles replay ``string_split``.
+  regex split (Java's single-char fast path).
 - :func:`whitespace_tokens` — split on runs of :data:`WHITESPACE`;
   :func:`collapse_whitespace` replaces each run with one space.
 - :func:`alnum_words` / :func:`alpha_words` — lowercase ``[a-z0-9]`` /
@@ -28,17 +31,24 @@ from pyspark.sql import functions as F
 __all__ = [
     "WHITESPACE",
     "space_tokens",
+    "space_tokens_sql",
     "whitespace_tokens",
+    "whitespace_tokens_sql",
     "alnum_words",
+    "alnum_words_sql",
     "alpha_words",
+    "alpha_words_sql",
     "lines",
+    "lines_sql",
     "collapse_whitespace",
+    "collapse_whitespace_sql",
     "word_ngrams",
+    "word_ngrams_sql",
 ]
 
 #: One whitespace run, as a regex both engines read the same way: the
 #: class equals Java's ``\s`` (Spark), while RE2's ``\s`` (DuckDB) lacks
-#: ``\x0B``, so the oracle SQL embeds this string instead of ``\s+``.
+#: ``\x0B``, so the SQL twins embed this string instead of ``\s+``.
 #: NBSP and other Unicode spaces are not whitespace here.
 WHITESPACE = r"[ \t\n\x0B\f\r]+"
 
@@ -48,49 +58,71 @@ def _col(text: Column | str) -> Column:
 
 
 def space_tokens(text: Column | str) -> Column:
-    """``split(text, ' ')``; SQL ``string_split(text, ' ')``."""
+    """Split on each single space."""
     return F.split(_col(text), " ")
 
 
+def space_tokens_sql(text: str) -> str:
+    return f"string_split({text}, ' ')"
+
+
 def whitespace_tokens(text: Column | str) -> Column:
-    """Split on whitespace runs; SQL
-    ``regexp_split_to_array(text, WHITESPACE)``.  Leading or trailing
-    whitespace yields an empty first or last token, as in Spark."""
+    """Split on whitespace runs.  Leading or trailing whitespace yields
+    an empty first or last token, as in Spark."""
     return F.split(_col(text), WHITESPACE)
+
+
+def whitespace_tokens_sql(text: str) -> str:
+    return f"regexp_split_to_array({text}, '{WHITESPACE}')"
 
 
 def _words(text: Column | str, pattern: str) -> Column:
     return F.filter(F.split(F.lower(_col(text)), pattern), lambda w: w != "")
 
 
+def _words_sql(text: str, pattern: str) -> str:
+    return f"list_filter(regexp_split_to_array(lower({text}), '{pattern}'), w -> w <> '')"
+
+
 def alnum_words(text: Column | str) -> Column:
-    """Lowercase ``[a-z0-9]`` runs; SQL
-    ``list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> '')``."""
+    """Lowercase ``[a-z0-9]`` runs."""
     return _words(text, "[^a-z0-9]+")
 
 
+def alnum_words_sql(text: str) -> str:
+    return _words_sql(text, "[^a-z0-9]+")
+
+
 def alpha_words(text: Column | str) -> Column:
-    """Lowercase ``[a-z]`` runs; SQL
-    ``list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), w -> w <> '')``."""
+    """Lowercase ``[a-z]`` runs."""
     return _words(text, "[^a-z]+")
 
 
+def alpha_words_sql(text: str) -> str:
+    return _words_sql(text, "[^a-z]+")
+
+
 def lines(text: Column | str) -> Column:
-    """``split(text, '\\n')``; SQL ``string_split(text, chr(10))``."""
+    """Split on each ``\\n``."""
     return F.split(_col(text), "\n")
 
 
+def lines_sql(text: str) -> str:
+    return f"string_split({text}, chr(10))"
+
+
 def collapse_whitespace(text: Column | str) -> Column:
-    """Each whitespace run to one space; SQL
-    ``regexp_replace(text, WHITESPACE, ' ', 'g')``."""
+    """Each whitespace run to one space."""
     return F.regexp_replace(_col(text), WHITESPACE, " ")
+
+
+def collapse_whitespace_sql(text: str) -> str:
+    return f"regexp_replace({text}, '{WHITESPACE}', ' ', 'g')"
 
 
 def word_ngrams(toks: Column | str, n: int) -> Column:
     """Word ``n``-grams of a token array, each the space-joined tokens
-    at positions ``i .. i+n-1``; SQL
-    ``list_transform(generate_series(1, greatest(len(t) - (n-1), 1)),
-    i -> concat_ws(' ', t[i], ..., t[i+n-1]))``.
+    at positions ``i .. i+n-1``.
 
     An array shorter than ``n`` yields one gram, all its tokens joined
     (the slice is capped at the array end).  A caller with another
@@ -105,3 +137,14 @@ def word_ngrams(toks: Column | str, n: int) -> Column:
         F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(t, i, n)),
     )
+
+
+def word_ngrams_sql(toks: str, n: int) -> str:
+    """The window names the token list ``toks`` once per gram position,
+    so pass a lambda variable bound to it
+    (``list_transform([<tokens>], t -> ...)[1]``): the text is then
+    split once per row."""
+    parts = ", ".join(f"{toks}[i + {k}]" for k in range(n))
+    return f"""list_transform(
+        generate_series(1, greatest(len({toks}) - {n - 1}, 1)),
+        i -> concat_ws(' ', {parts}))"""

@@ -202,19 +202,17 @@ def load_tables(
     spark: SparkSession,
     sf_dir: str,
     names: Sequence[str] = TABLE_NAMES,
-    register_views: bool = True,
 ) -> dict[str, DataFrame]:
-    """Load the fixture star schema from *sf_dir* and (optionally)
-    register each table as a temp view for the ``spark.sql`` entry
-    point (SURVEY.md §3.3)."""
+    """Load the fixture star schema from *sf_dir* and register each
+    table as a temp view for the ``spark.sql`` entry point (SURVEY.md
+    §3.3)."""
     out: dict[str, DataFrame] = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
         df = read_parquet(spark, path)
-        if register_views:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out
 

@@ -1505,10 +1505,10 @@ _STOP_SQL = "['" + "','".join(tx.STOPWORDS) + "']"
     f"""
     SELECT doc_id,
       CAST(length(text) AS BIGINT) AS n_chars_computed,
-      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+      CAST(len({tk.space_tokens_sql('text')}) AS BIGINT) AS n_tokens,
       CAST(
         CAST(coalesce(list_sum(list_transform(
-              list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> ''),
+              {tk.alnum_words_sql('text')},
               w -> CAST(ceil(length(w) / 6.0) AS BIGINT))), 0) AS BIGINT)
         + length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))
       AS BIGINT) AS bpe_tokens
@@ -1539,8 +1539,8 @@ def _toktext(spark, sf_dir):
     FROM (
       SELECT doc_id, text,
         length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS punct_cnt,
-        len(list_filter(string_split(lower(text), ' '), x -> list_contains({_STOP_SQL}, x))) AS stop_cnt,
-        len(string_split(lower(text), ' ')) AS n_toks
+        len(list_filter({tk.space_tokens_sql('lower(text)')}, x -> list_contains({_STOP_SQL}, x))) AS stop_cnt,
+        len({tk.space_tokens_sql('lower(text)')}) AS n_toks
       FROM documents
     )
     """,
@@ -1558,7 +1558,7 @@ def _quality(spark, sf_dir):
 
 def _lang_score_sql(markers: tuple[str, ...]) -> str:
     arr = "['" + "','".join(markers) + "']"
-    return f"len(list_filter(string_split(lower(text), ' '), x -> list_contains({arr}, x)))"
+    return f"len(list_filter({tk.space_tokens_sql('lower(text)')}, x -> list_contains({arr}, x)))"
 
 
 @_q(
@@ -1595,7 +1595,7 @@ def _langid(spark, sf_dir):
     "text_fingerprint",
     f"""
     SELECT doc_id,
-      md5(regexp_replace(lower(trim(text)), '{tk.WHITESPACE}', ' ', 'g')) AS fingerprint
+      md5({tk.collapse_whitespace_sql('lower(trim(text))')}) AS fingerprint
     FROM documents
     """,
     doc="document fingerprinting (md5 of normalized text; oracle-identical)",
@@ -1609,26 +1609,16 @@ def _fp(spark, sf_dir):
 # LLM-pipeline: dedup
 # ===========================================================================
 
-def _sql_ngram_window(n: int) -> str:
-    """DuckDB replay of ``tokenize.word_ngrams`` over a token list bound
-    to ``t``, as a DISTINCT, SORTED gram list (sorting is required by
-    the prefix filter and a harmless set-identity elsewhere).  Callers
-    bind ``t`` with ``list_transform([<tokens>], t -> ...)[1]`` so the
-    text is split once per row, not once per gram position."""
-    parts = ", ".join(f"t[i + {k}]" for k in range(n))
-    return f"""list_sort(list_distinct(list_transform(
-        generate_series(1, greatest(len(t) - {n - 1}, 1)),
-        i -> concat_ws(' ', {parts}))))"""
-
-
-#: A document's word 2-grams over the lowercased single-space tokens
-#: (``tokenize.space_tokens``; a doc of one token is one gram) — the
-#: gram set of ngram_jaccard_pairs, jaccard_prefix_pairs and the
-#: containment operators, consumed by their oracles and
-#: _SQL_PREFIX_PAIRS.  The shingle() gram set (whitespace-run tokens)
-#: is _sql_doc_ngrams.
+#: A document's distinct, sorted word 2-grams over the lowercased
+#: single-space tokens: :func:`dedup._space_grams`, the gram set of
+#: ngram_jaccard_pairs, jaccard_prefix_pairs and the containment
+#: operators, read by their oracles and _SQL_PREFIX_PAIRS (the prefix
+#: filter needs the sort).  The shingle() gram set (whitespace-run
+#: tokens) is _sql_doc_ngrams.  The tokens are bound to ``t`` once, so
+#: the text is split once per row, not once per gram position.
 _SQL_DOC_2GRAMS = (
-    f"list_transform([string_split(lower(text), ' ')], t -> {_sql_ngram_window(2)})[1]"
+    f"list_transform([{tk.space_tokens_sql('lower(text)')}], "
+    f"t -> list_sort(list_distinct({tk.word_ngrams_sql('t', 2)})))[1]"
 )
 
 @_q(
@@ -1745,9 +1735,9 @@ def _djacfreq(spark, sf_dir):
 
 @_q(
     "duplicated_ngram_spans",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
+      SELECT doc_id, {tk.space_tokens_sql('lower(text)')} AS toks FROM documents),
     g AS (
       SELECT doc_id, toks,
         unnest(generate_series(1, greatest(len(toks) - 7, 1))) AS pos
@@ -1777,11 +1767,11 @@ def _dupspans(spark, sf_dir):
 
 @_q(
     "dedup_span_removal",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, text,
-        string_split(lower(text), ' ') AS ltoks,
-        string_split(text, ' ') AS toks
+        {tk.space_tokens_sql('lower(text)')} AS ltoks,
+        {tk.space_tokens_sql('text')} AS toks
       FROM documents WHERE text IS NOT NULL),
     g AS (
       SELECT doc_id,
@@ -1984,13 +1974,13 @@ def _simhash_vote_terms(bits: int) -> str:
 
 
 def _sql_doc_ngrams(n: int) -> str:
-    """``dedup.shingle``'s word-``n``-gram set in DuckDB: grams over the
-    lowercased whitespace-run tokens (``tokenize.WHITESPACE``, the
-    pattern the Spark side splits on), and the whole lowercased text as
-    the one gram of a doc shorter than ``n`` tokens."""
+    """``dedup.shingle``'s word-``n``-gram set in DuckDB, distinct and
+    sorted: grams over the lowercased whitespace-run tokens, and the
+    whole lowercased text as the one gram of a doc shorter than ``n``
+    tokens."""
     return f"""list_transform(
-        [regexp_split_to_array(lower(text), '{tk.WHITESPACE}')],
-        t -> CASE WHEN len(t) >= {n} THEN {_sql_ngram_window(n)}
+        [{tk.whitespace_tokens_sql('lower(text)')}],
+        t -> CASE WHEN len(t) >= {n} THEN list_sort(list_distinct({tk.word_ngrams_sql('t', n)}))
              ELSE [lower(text)] END)[1]"""
 
 
@@ -2179,7 +2169,7 @@ def _dmincc(spark, sf_dir):
     f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
+        unnest(list_distinct({tk.whitespace_tokens_sql('lower(text)')})) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t),
@@ -2187,7 +2177,7 @@ def _dmincc(spark, sf_dir):
           FROM h GROUP BY doc_id),
     tok AS (
       SELECT doc_id,
-        list_sort(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS ts
+        list_sort(list_distinct({tk.whitespace_tokens_sql('lower(text)')})) AS ts
       FROM documents)
     SELECT
       CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs,
@@ -3301,9 +3291,9 @@ def _fillna(spark, sf_dir):
 
 @_q(
     "word_counts",
-    """
+    f"""
     SELECT word, COUNT(*) AS n
-    FROM (SELECT unnest(string_split(lower(text), ' ')) AS word FROM documents)
+    FROM (SELECT unnest({tk.space_tokens_sql('lower(text)')}) AS word FROM documents)
     WHERE word <> ''
     GROUP BY word
     ORDER BY n DESC, word ASC LIMIT 50
@@ -3434,15 +3424,15 @@ def _sessions(spark, sf_dir):
       WHERE d.lang = 'en'
         AND least(length(d.text)::DOUBLE / 500.0, 1.0) * 0.4
           + greatest(1.0 - abs(
-              len(list_filter(string_split(lower(d.text), ' '),
+              len(list_filter({tk.space_tokens_sql('lower(d.text)')},
                               x -> list_contains({_STOP_SQL}, x)))::DOUBLE
-                / greatest(len(string_split(lower(d.text), ' ')), 1) - 0.4) / 0.4, 0.0) * 0.4
+                / greatest(len({tk.space_tokens_sql('lower(d.text)')}), 1) - 0.4) / 0.4, 0.0) * 0.4
           + (1.0 - least((length(d.text) - length(regexp_replace(d.text, '[.,!?;:]', '', 'g')))::DOUBLE
                 / greatest(length(d.text), 1) * 10.0, 1.0)) * 0.2 >= 0.5
     )
     SELECT doc_id, lang, source,
       CAST(coalesce(list_sum(list_transform(
-            list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), w -> w <> ''),
+            {tk.alnum_words_sql('text')},
             w -> CAST(ceil(length(w) / 6.0) AS BIGINT))), 0) AS BIGINT)
         + length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS bpe_tokens
     FROM (
@@ -3643,9 +3633,9 @@ def _mix(spark, sf_dir):
 
 @_q(
     "chunk_documents",
-    """
+    f"""
     WITH d AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+      SELECT doc_id, {tk.space_tokens_sql('text')} AS toks FROM documents
     ),
     c AS (
       SELECT doc_id, toks,
@@ -3676,14 +3666,14 @@ def _chunk(spark, sf_dir):
 
 @_q(
     "pack_token_windows",
-    """
+    f"""
     SELECT doc_id, source, n_tokens,
       CAST(floor((CAST(cum - n_tokens AS DOUBLE)) / 2000.0) AS BIGINT) AS window_id
     FROM (
       SELECT doc_id, source, n_tokens,
         SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id ASC) AS cum
       FROM (SELECT doc_id, source,
-              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+              CAST(len({tk.space_tokens_sql('text')}) AS BIGINT) AS n_tokens
             FROM documents)
     )
     """,
@@ -3846,10 +3836,10 @@ def _pii(spark, sf_dir):
 
 @_q(
     "tfidf_top_terms",
-    """
+    f"""
     WITH terms AS (
       SELECT doc_id,
-        unnest(list_filter(string_split(lower(text), ' '), x -> len(x) >= 4)) AS term
+        unnest(list_filter({tk.space_tokens_sql('lower(text)')}, x -> len(x) >= 4)) AS term
       FROM documents
     ),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term),
@@ -4305,8 +4295,8 @@ def _salted(spark, sf_dir):
 
 @_q(
     "repetition_scores",
-    """
-    WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
+    f"""
+    WITH toks AS (SELECT doc_id, {tk.space_tokens_sql('lower(text)')} AS t FROM documents),
     tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
     tstats AS (
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -4342,8 +4332,8 @@ def _repetition(spark, sf_dir):
 
 @_q(
     "decontaminate_overlap",
-    """
-    WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
+    f"""
+    WITH toks AS (SELECT doc_id, {tk.space_tokens_sql('lower(text)')} AS t FROM documents),
     idx AS (SELECT doc_id, t, unnest(generate_series(1, len(t) - 3)) AS i FROM toks),
     grams AS (SELECT doc_id, array_to_string(t[i:i+3], ' ') AS gram FROM idx),
     bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
@@ -4678,9 +4668,9 @@ def _interval_overlap(spark, sf_dir):
 
 @_q(
     "token_divergence",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents),
+      SELECT doc_id, unnest({tk.space_tokens_sql('lower(text)')}) AS tok FROM documents),
     tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM toks GROUP BY doc_id, tok),
     withn AS (
       SELECT doc_id, tok, c, SUM(c) OVER (PARTITION BY doc_id) AS n FROM tc),
@@ -4913,11 +4903,11 @@ _NFC_SUFFIX = "\tCafé  beep\x07 ok "
     "text_normalize_nfc",
     f"""
     SELECT doc_id,
-      nfc_normalize(trim(regexp_replace(regexp_replace(
+      nfc_normalize(trim({tk.collapse_whitespace_sql('s')})) AS norm_text
+    FROM (SELECT doc_id, regexp_replace(
         substring(text, 1, 60) || '{_NFC_SUFFIX}',
-        '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'),
-        '{tk.WHITESPACE}', ' ', 'g'))) AS norm_text
-    FROM documents
+        '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g') AS s
+      FROM documents)
     """,
     doc="Unicode canonicalization for dedup keys (control-strip, whitespace "
         "collapse, NFC compose) over text with injected tab / BEL / combining-"
@@ -6442,7 +6432,7 @@ def _stream_interval_join(spark, sf_dir):
 #: text column — used by quality_classifier_scores,
 #: dedup_survivor_by_quality and corpus_filter_funnel.
 _SQL_HASH_WSUM = (
-    "list_sum(list_transform(string_split(text, ' '), "
+    f"list_sum(list_transform({tk.space_tokens_sql('text')}, "
     "t -> (('0x' || substring(md5(t), 1, 8))::BIGINT % 2001) - 1000))"
 )
 
@@ -6452,7 +6442,7 @@ _SQL_HASH_WSUM = (
     f"""
     WITH s AS (
       SELECT doc_id,
-        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        CAST(len({tk.space_tokens_sql('text')}) AS BIGINT) AS n_tokens,
         CAST({_SQL_HASH_WSUM} AS BIGINT) AS w_sum
       FROM documents)
     SELECT doc_id, n_tokens, w_sum,
@@ -6486,14 +6476,14 @@ def _quality_classifier(spark, sf_dir):
           || '(c) 2026 ' || source || ' all rights reserved' AS text
       FROM documents),
     parts AS (
-      SELECT doc_id, source, string_split(text, chr(10)) AS p FROM docs2),
+      SELECT doc_id, source, {tk.lines_sql('text')} AS p FROM docs2),
     lines AS (
       SELECT doc_id, source, p,
         unnest(generate_series(1, len(p))) AS pos
       FROM parts),
     sel AS (
       SELECT doc_id, source, pos, p[pos] AS line,
-        lower(trim(regexp_replace(p[pos], '{tk.WHITESPACE}', ' ', 'g'))) AS norm
+        lower(trim({tk.collapse_whitespace_sql('p[pos]')})) AS norm
       FROM lines),
     gd AS (SELECT source, COUNT(DISTINCT doc_id) AS g_docs
            FROM docs2 GROUP BY source),
@@ -6511,7 +6501,7 @@ def _quality_classifier(spark, sf_dir):
         CAST(COUNT(*) AS BIGINT) AS n_kept
       FROM kept GROUP BY doc_id)
     SELECT d.doc_id, d.source,
-      CAST(len(string_split(d.text, chr(10))) AS BIGINT) AS n_lines,
+      CAST(len({tk.lines_sql('d.text')}) AS BIGINT) AS n_lines,
       COALESCE(a.n_kept, CAST(0 AS BIGINT)) AS n_kept,
       md5(COALESCE(a.clean_text, '')) AS clean_fp
     FROM docs2 d LEFT JOIN agg a ON d.doc_id = a.doc_id
@@ -6559,8 +6549,8 @@ def _line_boilerplate(spark, sf_dir):
           || '<div>&amp; &lt;tail&gt;&nbsp;&quot;end&quot;</div></body></html>'
           AS html
       FROM documents)
-    SELECT doc_id,
-      trim(regexp_replace(
+    SELECT doc_id, trim({tk.collapse_whitespace_sql('body')}) AS extracted
+    FROM (SELECT doc_id,
         regexp_replace(
           regexp_replace(
             regexp_replace(
@@ -6576,9 +6566,8 @@ def _line_boilerplate(spark, sf_dir):
                 '&lt;', '<', 'g'),
               '&gt;', '>', 'g'),
             '&quot;', '"', 'g'),
-          '&amp;', '&', 'g'),
-        '{tk.WHITESPACE}', ' ', 'g')) AS extracted
-    FROM seeded
+          '&amp;', '&', 'g') AS body
+      FROM seeded)
     """,
     doc="WET-style HTML text extraction ahead of cleaning/dedup: script and "
         "style blocks die WITH their contents (two RE2-safe passes — no "
@@ -6610,10 +6599,10 @@ def _html_extract(spark, sf_dir):
 
 @_q(
     "inverted_index_postings",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_filter(string_split(lower(text), ' '),
+        unnest(list_filter({tk.space_tokens_sql('lower(text)')},
                            x -> len(x) >= 4)) AS term
       FROM documents),
     p AS (SELECT DISTINCT doc_id, term FROM t),
@@ -7219,9 +7208,9 @@ _BM25_K1, _BM25_B = 1.2, 0.75
 #: contributions — used verbatim by BOTH bm25_search and
 #: hybrid_retrieval_rrf so a formula tweak cannot silently diverge the
 #: two oracles.
-_SQL_BM25_CONTRIB = """base AS (
+_SQL_BM25_CONTRIB = f"""base AS (
       SELECT doc_id,
-        list_filter(string_split(lower(text), ' '), x -> len(x) >= 4) AS toks
+        list_filter({tk.space_tokens_sql('lower(text)')}, x -> len(x) >= 4) AS toks
       FROM documents),
     lens AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM base),
     stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -7326,9 +7315,9 @@ def _bm25(spark, sf_dir):
 
 @_q(
     "bigram_logprob_scores",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS p FROM documents),
+      SELECT doc_id, {tk.space_tokens_sql('text')} AS p FROM documents),
     pos AS (
       SELECT doc_id, p, unnest(generate_series(1, len(p) - 1)) AS i
       FROM toks WHERE len(p) >= 2),
@@ -7547,8 +7536,8 @@ _SQL_WEIGHTS = "[" + ", ".join(str(w) for w in _BUCKET_WEIGHTS) + "]"
     f"""
     WITH s AS (
       SELECT doc_id,
-        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        CAST(list_sum(list_transform(string_split(text, ' '),
+        CAST(len({tk.space_tokens_sql('text')}) AS BIGINT) AS n_tokens,
+        CAST(list_sum(list_transform({tk.space_tokens_sql('text')},
           t -> list_extract({_SQL_WEIGHTS},
             CAST(('0x' || substring(md5(t), 1, 8))::BIGINT % 64 AS INTEGER)
               + 1))) AS BIGINT) AS w_sum
@@ -8482,9 +8471,9 @@ def _dowhour(spark, sf_dir):
 
 @_q(
     "pmi_top_bigrams",
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents),
+      SELECT unnest({tk.space_tokens_sql('lower(text)')}) AS w FROM documents),
     uni AS (SELECT w, COUNT(*) AS c FROM toks GROUP BY w),
     nu AS (SELECT CAST(SUM(c) AS DOUBLE) AS n_uni FROM uni),
     bi AS (
@@ -8492,7 +8481,7 @@ def _dowhour(spark, sf_dir):
         SELECT unnest(list_transform(
                  generate_series(1, greatest(len(ws) - 1, 1)),
                  i -> struct_pack(w1 := ws[i], w2 := ws[i+1]))) AS p
-        FROM (SELECT string_split(lower(text), ' ') AS ws FROM documents)
+        FROM (SELECT {tk.space_tokens_sql('lower(text)')} AS ws FROM documents)
         WHERE len(ws) >= 2)
       GROUP BY 1, 2),
     nb AS (SELECT CAST(SUM(c_ab) AS DOUBLE) AS n_bi FROM bi)
@@ -8744,9 +8733,9 @@ def _pareto(spark, sf_dir):
 
 @_q(
     "countmin_heavy_hitters",
-    """
+    f"""
     WITH toks AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents),
+      SELECT unnest({tk.space_tokens_sql('lower(text)')}) AS w FROM documents),
     cnt AS (SELECT w, COUNT(*) AS c FROM toks GROUP BY w),
     cells AS (
       SELECT i AS r,
@@ -8895,7 +8884,7 @@ def _simhash_portable_oracle(bits: int = 32) -> str:
     return f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
+        unnest(list_distinct({tk.whitespace_tokens_sql('lower(text)')})) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t)
@@ -8935,7 +8924,7 @@ def _minhash_portable_oracle(num_hashes: int = 16) -> str:
     return f"""
     WITH t AS (
       SELECT doc_id,
-        unnest(list_distinct(regexp_split_to_array(lower(text), '{tk.WHITESPACE}'))) AS w
+        unnest(list_distinct({tk.whitespace_tokens_sql('lower(text)')})) AS w
       FROM documents),
     h AS (SELECT doc_id,
             ('0x' || substring(md5(w), 1, 8))::BIGINT AS hv FROM t),
@@ -9173,9 +9162,9 @@ def _asof_nearest(spark, sf_dir):
 
 @_q(
     "gopher_quality_rules",
-    """
+    f"""
     WITH s AS (
-      SELECT doc_id, text, string_split(text, ' ') AS w
+      SELECT doc_id, text, {tk.space_tokens_sql('text')} AS w
       FROM documents WHERE text IS NOT NULL),
     m AS (
       SELECT doc_id,
@@ -9631,9 +9620,9 @@ def _bloomaudit(spark, sf_dir):
 
 @_q(
     "bpe_pair_counts",
-    """
+    f"""
     WITH words AS (
-      SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
+      SELECT unnest({tk.alpha_words_sql('text')}) AS w
       FROM documents),
     wc AS (SELECT w, COUNT(*) AS c FROM words WHERE length(w) >= 2 GROUP BY w),
     pairs AS (
@@ -9787,13 +9776,13 @@ _BPE_CHARS_SQL = "(' ' || regexp_replace(w, '(.)', '\\1 ', 'g'))"
     "bpe_encode_tokens",
     f"""
     WITH w AS (
-      SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
+      SELECT doc_id, unnest({tk.alpha_words_sql('text')}) AS w
       FROM documents),
     s AS (SELECT doc_id,
             {_bpe_fold_sql(_BPE_CHARS_SQL)} AS s
           FROM w WHERE length(w) >= 1)
     SELECT doc_id,
-      CAST(SUM(length(string_split(trim(s), ' '))) AS BIGINT) AS n_bpe_tokens
+      CAST(SUM(length({tk.space_tokens_sql('trim(s)')})) AS BIGINT) AS n_bpe_tokens
     FROM s GROUP BY doc_id
     """,
     doc="tokenizer APPLICATION at corpus scale, HASH-VERIFIED (r8 verdict "
@@ -10118,10 +10107,10 @@ def _incr_agg(spark, sf_dir):
 
 @_q(
     "dsir_importance_weights",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, (lang = 'en') AS tgt,
-        list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
+        list_filter({tk.space_tokens_sql('lower(text)')}, x -> x <> '') AS t
       FROM documents),
     grams AS (
       SELECT doc_id, tgt, unnest(list_concat(t,
@@ -10588,7 +10577,7 @@ def _stream_upsert(spark, sf_dir):
 
 @_q(
     "c4_cleaning_rules",
-    r"""
+    rf"""
     WITH seeded AS (
       SELECT doc_id,
         'Document ' || CAST(doc_id AS VARCHAR) || ' from source ' || source
@@ -10607,19 +10596,19 @@ def _stream_upsert(spark, sf_dir):
              ELSE 'A normal closing sentence finishes the document nicely.' END
           || chr(10)
         || CASE WHEN doc_id % 11 = 0
-             THEN 'var config = { "a": 1 };'
+             THEN 'var config = {{ "a": 1 }};'
              ELSE 'closing filler again with no ending' END || chr(10)
         || text AS t
       FROM documents),
     lines AS (
       SELECT doc_id, t,
-        list_transform(string_split(t, chr(10)), l -> trim(l)) AS ln
+        list_transform({tk.lines_sql('t')}, l -> trim(l)) AS ln
       FROM seeded),
     kept AS (
       SELECT doc_id, t, ln,
         list_filter(ln, l ->
           substr(l, -1, 1) IN ('.', '!', '?', '"')
-          AND len(list_filter(string_split(l, ' '), w -> w <> '')) >= 5
+          AND len(list_filter({tk.space_tokens_sql('l')}, w -> w <> '')) >= 5
           AND NOT contains(lower(l), 'javascript')) AS kl
       FROM lines),
     agg AS (
@@ -10632,11 +10621,11 @@ def _stream_upsert(spark, sf_dir):
       CAST(length(clean_text)
            - length(translate(clean_text, '.!?', '')) AS BIGINT) AS n_sentences,
       contains(lower(t), 'lorem ipsum') AS has_lorem,
-      contains(t, '{') AS has_brace,
+      contains(t, '{{') AS has_brace,
       (CAST(length(clean_text)
             - length(translate(clean_text, '.!?', '')) AS BIGINT) >= 3
        AND NOT contains(lower(t), 'lorem ipsum')
-       AND NOT contains(t, '{')) AS c4_keep,
+       AND NOT contains(t, '{{')) AS c4_keep,
       md5(clean_text) AS clean_fp
     FROM agg
     """,
@@ -11660,10 +11649,10 @@ def _hhi(spark, sf_dir):
 
 @_q(
     "keyness_log_odds",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id % 2 AS s,
-        unnest(string_split(lower(text), ' ')) AS word
+        unnest({tk.space_tokens_sql('lower(text)')}) AS word
       FROM documents),
     w AS (
       SELECT word,
@@ -12576,9 +12565,9 @@ def _ldiv(spark, sf_dir):
 
 @_q(
     "zipf_vocab_fit",
-    """
+    f"""
     WITH w AS (
-      SELECT unnest(string_split(text, ' ')) AS word FROM documents
+      SELECT unnest({tk.space_tokens_sql('text')}) AS word FROM documents
     ), f AS (
       SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
       FROM w WHERE word <> '' GROUP BY 1
@@ -13262,19 +13251,17 @@ def _fdr_value_tests(spark, sf_dir):
 
 @_q(
     "lm_perplexity_scores",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-        list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                    w -> w <> '') AS t
+        {tk.alpha_words_sql('text')} AS t
       FROM documents),
     pairs AS (
       SELECT doc_id, t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2
       FROM toks, unnest(range(1, len(t))) AS u(i)),
     db AS (SELECT doc_id, w1, w2, COUNT(*) AS n FROM pairs GROUP BY 1, 2, 3),
     mtoks AS (
-      SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         w -> w <> '') AS t
+      SELECT {tk.alpha_words_sql('text')} AS t
       FROM documents WHERE lang = 'en'),
     mp AS (
       SELECT t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2

@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from automated_batch_data_pipeline_nyc_spark.operators import tokenize as tk
 from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
 
 from .conftest import SF_SMOKE
@@ -75,7 +76,7 @@ def test_keyness_matches_pure_python_reference(spark):
     toks = duckdb.sql(
         f"""
         SELECT doc_id % 2 AS s,
-          unnest(string_split(lower(text), ' ')) AS w
+          unnest({tk.space_tokens_sql('lower(text)')}) AS w
         FROM '{SF_SMOKE}/documents.parquet'
         """
     ).fetchall()

@@ -1695,7 +1695,7 @@ def test_ivf_search_recall_vs_brute_force(spark):
     recall is bounded by the probed-corpus fraction, not centroid
     polish.  This test still forced two real fixes:
 
-    - metric="cosine" spherical k-means in build_ivf_index —
+    - spherical (L2-normalized) k-means in build_ivf_index —
       raw-Euclidean clustering + cosine probing measured 0.68 mean
       recall@10 at nprobe=4; normalized clustering measured 0.78-0.86;
     - full-corpus fit here: fit_fraction=0.25 of the 500-row fixture

@@ -1,12 +1,11 @@
 """Pin the single token definitions of operators/tokenize.py.
 
-Each tokenizer runs in Spark and, in its documented SQL form, in
-DuckDB on strings built to split differently under near-miss
-definitions (tabs, CRLF, runs of spaces, ``\\x0B``, NBSP, leading and
-trailing space, the empty string); the arrays must be equal.  The
-oracle fragments in suite.py are pinned the same way against the
-operators they replay.  A source check keeps every split in the one
-module.
+Each tokenizer runs in Spark and, as its ``*_sql`` twin, in DuckDB on
+strings built to split differently under near-miss definitions (tabs,
+CRLF, runs of spaces, ``\\x0B``, NBSP, leading and trailing space, the
+empty string); the arrays must be equal.  The oracle fragments in
+suite.py are pinned the same way against the operators they replay.  A
+source check keeps every split in the one module.
 """
 
 from __future__ import annotations
@@ -39,15 +38,11 @@ ADVERSARIAL = [
     "Ünïcode café 9lives x",
 ]
 
-#: DuckDB forms of the tokenizers, over a VARCHAR column ``t``.
-SQL_FORMS = {
-    "space_tokens": "string_split(t, ' ')",
-    "whitespace_tokens": f"regexp_split_to_array(t, '{tk.WHITESPACE}')",
-    "alnum_words": "list_filter(regexp_split_to_array(lower(t), '[^a-z0-9]+'), w -> w <> '')",
-    "alpha_words": "list_filter(regexp_split_to_array(lower(t), '[^a-z]+'), w -> w <> '')",
-    "lines": "string_split(t, chr(10))",
-    "collapse_whitespace": f"regexp_replace(t, '{tk.WHITESPACE}', ' ', 'g')",
-}
+#: The token kinds that take a text; each must have a ``*_sql`` twin.
+TOKENIZERS = [
+    name for name in tk.__all__
+    if callable(getattr(tk, name)) and not name.endswith("_sql") and name != "word_ngrams"
+]
 
 
 def _both(spark, spark_expr, sql_expr, col="t"):
@@ -65,18 +60,19 @@ def _both(spark, spark_expr, sql_expr, col="t"):
     return [r.v for r in sp], [v for _, v in db]
 
 
-@pytest.mark.parametrize("name", sorted(SQL_FORMS))
+@pytest.mark.parametrize("name", TOKENIZERS)
 def test_tokenizer_matches_its_sql_form(spark, name):
-    sp, db = _both(spark, getattr(tk, name)("t"), SQL_FORMS[name])
+    sp, db = _both(spark, getattr(tk, name)("t"), getattr(tk, f"{name}_sql")("t"))
     assert sp == db
 
 
-@pytest.mark.parametrize("split", ["space_tokens", "whitespace_tokens"])
+@pytest.mark.parametrize("split", ["space_tokens", "whitespace_tokens", "alpha_words"])
 @pytest.mark.parametrize("n", [1, 2, 3])
 def test_word_ngrams_matches_oracle_window(spark, split, n):
     grams = tk.word_ngrams(getattr(tk, split)("t"), n)
-    sql = f"list_transform([{SQL_FORMS[split]}], t -> {suite._sql_ngram_window(n)})[1]"
-    sp, db = _both(spark, F.array_sort(F.array_distinct(grams)), sql)
+    toks = getattr(tk, f"{split}_sql")("t")
+    sql = f"list_transform([{toks}], t -> {tk.word_ngrams_sql('t', n)})[1]"
+    sp, db = _both(spark, grams, sql)
     assert sp == db
 
 
@@ -125,14 +121,22 @@ def test_minhash_transitive_oracle_pairs_match_on_any_whitespace(spark):
 
 def test_token_splits_live_only_in_tokenize():
     pkg = pathlib.Path(dd.__file__).resolve().parents[1]
-    found = {
+    sql_splits = ("string_split(", "string_split_regex(", "regexp_split_to_array(")
+    lines = [
         (path.relative_to(pkg).as_posix(), line.strip())
         for path in pkg.rglob("*.py")
         if path.name != "tokenize.py"
         for line in path.read_text().splitlines()
-        if "F.split(" in line
+    ]
+    # canonical_url's query-string split and session_path_trigrams' event
+    # separator are not tokenizers
+    assert {(f, line) for f, line in lines if "F.split(" in line} == {
+        ("operators/text.py", 'F.split(query, "&"),'),
     }
-    # canonical_url's query-string split is not a tokenizer
-    assert found == {("operators/text.py", 'F.split(query, "&"),')}
+    assert {(f, line) for f, line in lines if any(s in line for s in sql_splits)} == {
+        ("suite.py", "FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(q, '&'),"),
+        ("suite.py", "string_split(string_agg(event_type, '>' ORDER BY ts, event_id), '>')"),
+    }
     suite_src = (pkg / "suite.py").read_text()
     assert "\\s+" not in suite_src
+    assert "tk.WHITESPACE" not in suite_src
