@@ -67,7 +67,8 @@ class Pipeline:
             if st.checkpoint and df is not None and self.checkpoint_dir:
                 path = os.path.join(self.checkpoint_dir, st.name)
                 df.write.mode("overwrite").parquet(path)
-                df = spark.read.parquet(path)
+                # the schema just written: Spark runs no inference job
+                df = spark.read.schema(df.schema).parquet(path)
             results[st.name] = df
         return results
 

@@ -30,9 +30,10 @@ __all__ = ["get_session", "stop_session"]
 _DEFAULTS = {
     # Determinism / oracle parity
     "spark.sql.session.timeZone": "UTC",
-    # events.parquet carries TIMESTAMP(NANOS); Spark reads it as a long
-    # (ns since epoch) under this flag and sources.readers converts to a
-    # proper timestamp via integer division (matches DuckDB truncation).
+    # INT64 TIMESTAMP(NANOS) parquet (none of the current fixtures) reads
+    # as a long (ns since epoch) under this flag; sources.readers sets it
+    # itself when a footer has such a column and converts to a proper
+    # timestamp via integer division (matches DuckDB truncation).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Adaptive execution: coalesce post-shuffle partitions, split skewed
     # joins at runtime — the main knob that keeps one codebase correct

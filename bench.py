@@ -13,7 +13,7 @@ Usage: ``python bench.py`` (driver contract)
    "unit": "sec", "queries": {name: sec, ...all timed queries},
    "sf": <sf>, "calib_s": <this run's steady probe>,
    "n_runs": 1, "picked_run": 1, "n_queries": N, "n_failed": N,
-   "slowest": {...top5}}
+   "n_jobs": <Spark jobs of all timed queries>, "slowest": {...top5}}
   One run, in-process: the host-speed probe is sampled mid-run and
   after the last query, and calib_s is the faster sample, so the
   normalization divides by the same run's steady probe (see
@@ -41,6 +41,7 @@ verification-only forms reported separately ("verification_forms" /
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -54,25 +55,49 @@ import time
 #: query times scale with it.
 STEADY_ANCHOR_S = 0.239
 
+#: Makes each ``count_jobs`` job group unique within the process.
+_GROUP_IDS = itertools.count()
 
-def time_query(spark, name: str, sf_dir: str) -> float:
-    """Wall seconds to run suite query ``name`` on ``sf_dir`` to
-    completion with the noop sink; -1.0 (and a stderr line) if it
-    fails, so one broken query never kills a measurement run."""
+
+def count_jobs(spark, fn):
+    """``(fn(), jobs)``: call *fn* under a job group of its own and
+    count the Spark jobs it started (jobs that a stream thread starts
+    escape the group)."""
+    sc = spark.sparkContext
+    group = f"bench:{next(_GROUP_IDS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store fills from the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def time_query(spark, name: str, sf_dir: str) -> tuple[float, int]:
+    """``(seconds, jobs)``: wall seconds to run suite query ``name`` on
+    ``sf_dir`` to completion with the noop sink, and the Spark jobs it
+    started (``count_jobs``).  Seconds read -1.0 (and a stderr line) if
+    it fails, so one broken query never kills a measurement run."""
     from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
 
-    t0 = time.perf_counter()
-    try:
-        QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception as exc:
-        print(
-            f"bench: {name}@{os.path.basename(sf_dir)} FAILED: {exc!r}",
-            file=sys.stderr,
-        )
-        return -1.0
-    return time.perf_counter() - t0
+    def run() -> float:
+        t0 = time.perf_counter()
+        try:
+            QUERIES[name].spark(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        except Exception as exc:
+            print(
+                f"bench: {name}@{os.path.basename(sf_dir)} FAILED: {exc!r}",
+                file=sys.stderr,
+            )
+            return -1.0
+        return time.perf_counter() - t0
+
+    return count_jobs(spark, run)
 
 
 def _warm_session(spark, sf_dirs: list[str]) -> None:
@@ -196,14 +221,16 @@ def _run() -> dict:
     calib_samples: list[float] = []
     calib_jobs_samples: list[float] = []
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for i, name in enumerate(run_list):
         if i == midpoint:
             calib_samples.append(_calib_compute())
             calib_jobs_samples.append(_calib_jobs())
-        timings[name] = round(time_query(spark, name, sf_dir), 4)
+        seconds, jobs[name] = time_query(spark, name, sf_dir)
+        timings[name] = round(seconds, 4)
     calib_samples.append(_calib_compute())
     calib_jobs_samples.append(_calib_jobs())
-    record = _record(timings, calib_samples, calib_jobs_samples)
+    record = _record(timings, calib_samples, calib_jobs_samples, jobs)
     # warmup_query: the slot-1 absorber, timed only once JIT-hot
     record.update(
         excluded=excluded, sf=sf, warmup_query=run_list[0] if run_list else None
@@ -240,9 +267,11 @@ def _record(
     timings: dict[str, float],
     calib_samples: list[float],
     calib_jobs_samples: list[float],
+    jobs: dict[str, int],
 ) -> dict:
     """The full bench record from one run's measurements: per-query
-    seconds (-1 = failed) and the steady probe samples.  calib_s is
+    seconds (-1 = failed), per-query Spark jobs and the steady probe
+    samples.  calib_s is
     the fastest probe sample, and every calibrated figure is scaled by
     STEADY_ANCHOR_S / calib_s (None when calib_s is 0)."""
     calib_s = round(min(calib_samples), 3)
@@ -262,6 +291,7 @@ def _record(
         "unit": "sec",
         "value_calibrated": calibrated(total),
         "queries": timings,
+        "jobs": jobs,
         "calib_s": calib_s,
         # Per-job scheduling-latency probe (20 tiny two-stage jobs):
         # compare across rounds to attribute swings in iterative/
@@ -411,7 +441,7 @@ def _sweep(sf_dirs: list[str], sf1_dir: str | None = None) -> dict:
             if d not in fam_dirs(fam):
                 continue
             for qname, _ in members:
-                dt = time_query(spark, qname, d)
+                dt, _ = time_query(spark, qname, d)
                 times[qname][d] = round(dt, 3)
                 print(f"sweep: {qname}@{os.path.basename(d)} {dt:.2f}s",
                       file=sys.stderr)
@@ -574,6 +604,9 @@ def _make_summary(result: dict) -> dict:
         "picked_run": result["picked_run"],
         "n_queries": len(result["queries"]),
         "n_failed": len(failed),
+        # Suite total of Spark jobs (per-query counts: the full
+        # record's "jobs").
+        "n_jobs": sum(result["jobs"].values()),
         "failed": failed[:10],
         "slowest": slowest,
     }

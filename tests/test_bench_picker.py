@@ -20,7 +20,7 @@ def _mk(calib_samples, n_failed=0):
     q = {f"q{i}": 1.0 for i in range(10)}
     for i in range(n_failed):
         q[f"q{i}"] = -1.0
-    r = _record(q, calib_samples, [2.1, 2.3])
+    r = _record(q, calib_samples, [2.1, 2.3], {n: i for i, n in enumerate(q)})
     r.update(sf=0.1)
     return r
 
@@ -38,6 +38,13 @@ def test_summary_line_carries_full_queries_map():
     ):
         assert field in s
     assert s["n_queries"] == 10 and s["n_failed"] == 0
+
+
+def test_record_carries_jobs_per_query_and_summary_their_total():
+    r = _mk([0.23, 0.21], n_failed=1)
+    assert r["jobs"] == {f"q{i}": i for i in range(10)}
+    # a failed query's jobs still count toward the suite total
+    assert _make_summary(r)["n_jobs"] == sum(range(10)) == 45
 
 
 def test_calibration_divides_by_the_runs_steady_probe():

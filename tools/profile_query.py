@@ -6,8 +6,9 @@
 Times each named suite query with bench.time_query (the noop-sink
 measurement bench.py and ``--sweep`` use) in a session configured
 EXACTLY like bench.py (same get_session factory, same warm-up recipe,
-master local[$SPARK_GRAFT_CPUS]), reporting every rep so JIT-warm vs
-cold regimes are visible; a failed rep reads -1.  With ``--plan-dir`` also writes
+master local[$SPARK_GRAFT_CPUS]), reporting every rep's seconds and
+Spark jobs so JIT-warm vs cold regimes are visible; a failed rep reads
+-1.  With ``--plan-dir`` also writes
 ``<plan-dir>/<query>_<tag>.txt`` containing ``explain("formatted")``
 for the judge's plan-claim checks.  The first named query absorbs an
 unrecorded sacrificial run (bench.py's slot-1 JIT absorber) so rep 1
@@ -92,14 +93,10 @@ def main() -> int:
             # sacrificial JIT absorber, unrecorded (bench.py slot-1 rule)
             time_query(spark, name, args.sf)
             first = False
-        times = []
-        for rep in range(args.reps):
-            spark.sparkContext.setJobDescription(f"{name} rep{rep + 1}")
-            times.append(time_query(spark, name, args.sf))
-        spark.sparkContext.setJobDescription(None)
+        reps = [time_query(spark, name, args.sf) for _ in range(args.reps)]
         print(
-            f"{name}: " + " ".join(f"{t:.3f}" for t in times)
-            + f"  (min {min(times):.3f})"
+            f"{name}: " + " ".join(f"{t:.3f}s/{j}j" for t, j in reps)
+            + f"  (min {min(t for t, _ in reps):.3f})"
         )
     return 0
 
