@@ -1341,7 +1341,7 @@ def containment_count_pairs(
 def _space_grams(text_col: str, n: int) -> Column:
     """DISTINCT word-``n``-grams of the lowercased
     :func:`~.tokenize.space_tokens` — the gram set of the SQL-replayed
-    pair operators (their oracles read it as ``suite._SQL_DOC_2GRAMS``).
+    pair operators (their oracles read it as ``suite.dedup._SQL_DOC_2GRAMS``).
     A doc shorter than ``n`` tokens is one gram, its tokens joined."""
     return F.array_distinct(
         word_ngrams(space_tokens(F.lower(F.col(text_col))), n)

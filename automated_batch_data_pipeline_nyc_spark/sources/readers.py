@@ -241,6 +241,23 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def _read_as_written(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with no schema-inference job and
+    no nanos repair, for files read back as they were written.
+
+    The schema comes from the footer Spark's own inference reads: that
+    of the first path in sorted order (``ParquetUtils.splitFiles`` sorts
+    the leaf files).  The plain read stays wherever that footer cannot
+    stand for the inference: ``_footer_schema`` returns no schema, a
+    column is ``TIMESTAMP(NANOS)``, or several paths are read under
+    ``spark.sql.parquet.mergeSchema``.
+    """
+    schema, nanos = _footer_schema(spark, min(paths))
+    merged = len(paths) > 1 and spark.conf.get("spark.sql.parquet.mergeSchema") == "true"
+    reader = spark.read if schema is None or nanos or merged else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -49,6 +49,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from .readers import _read_as_written
+
 __all__ = [
     "ConcurrentCommitError",
     "commit",
@@ -228,7 +230,7 @@ def read_table(spark, path: str, version: int | None = None) -> DataFrame:
             f"vacuumed files (e.g. {missing[0]}); time travel past the "
             "vacuum horizon is gone"
         )
-    return spark.read.parquet(*[os.path.join(path, f) for f in files])
+    return _read_as_written(spark, *[os.path.join(path, f) for f in files])
 
 
 def table_history(spark, path: str) -> DataFrame:

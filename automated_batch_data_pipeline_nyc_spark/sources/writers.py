@@ -13,9 +13,16 @@ Reference operators covered (SURVEY.md §2.1):
 
 from __future__ import annotations
 
+import math
+import os
+import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from .readers import _read_as_written
 
 __all__ = [
     "write_parquet",
@@ -151,10 +158,6 @@ def compact_parquet(
     goes through a staging directory then an atomic-ish rename, so a
     failed compaction never destroys the input.
     """
-    import math
-    import os
-    import shutil
-
     size_bytes = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -162,7 +165,7 @@ def compact_parquet(
                 size_bytes += os.path.getsize(os.path.join(root, f))
     n_files = max(min_files, math.ceil(size_bytes / (target_file_mb * 1024 * 1024)))
     staging = path.rstrip("/") + "__compacting"
-    spark.read.parquet(path).coalesce(n_files).write.mode("overwrite").parquet(staging)
+    _read_as_written(spark, path).coalesce(n_files).write.mode("overwrite").parquet(staging)
     backup = path.rstrip("/") + "__precompact"
     shutil.move(path, backup)
     shutil.move(staging, path)
@@ -200,12 +203,7 @@ def manifest_for_dir(spark, path: str) -> DataFrame:
     this reads no row data.  File paths are relativized so the manifest
     is location-independent (comparable across replicas/copies).
     """
-    import os
-    import re
-
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(path)
+    df = _read_as_written(spark, path)
     base = os.path.abspath(path).rstrip("/")
     # input_file_name() yields a URL-ENCODED URI (file:///...): strip the
     # scheme, percent-decode (protecting literal '+', which url_decode

@@ -21,7 +21,7 @@ Scale notes:
   round 9: commit waves, not data, dominated small-backlog wall time).
   Set it to match your cluster/arrival rate BEFORE the first start —
   the suite's own verification streams scope it per stream
-  (``suite._stream_conf_scope``), which is the pattern to copy for
+  (``suite.streaming._stream_conf_scope``), which is the pattern to copy for
   short-lived or bench-sized streams.
 """
 
@@ -57,7 +57,7 @@ __all__ = [
 #: micros as epoch micros unshifted, so window arithmetic is exact; a
 #: consumer that needs wall-clock output in a non-UTC session converts
 #: with ``timestampadd(MICROSECOND, unix_micros(col), NTZ epoch)``
-#: (tz-independent), as `suite.streaming_hourly_counts` does.
+#: (tz-independent), as the `streaming_hourly_counts` query (`suite/streaming.py`) does.
 EVENTS_STREAM_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType(), True),
     T.StructField("ts", T.TimestampType(), True),
@@ -230,7 +230,7 @@ def ewma_stream(
     alpha: float = 0.3,
 ) -> DataFrame:
     """Streaming per-key EWMA: the stateful twin of the batch array fold
-    (suite.ewma_by_user).  State per key is exactly (s, last_us, last_id,
+    (`ewma_by_user` in `suite/analytics.py`).  State per key is exactly (s, last_us, last_id,
     n) — the smoothed value, the last event time consumed, the id of the
     last row consumed (tie-straddle guard), and the count; each
     micro-batch sorts its rows by (event time, ``id_col`` tiebreak) and

@@ -4,7 +4,7 @@ For a query name: run the Spark callable and the oracle SQL on the
 same sf dir, sort columns by name and rows by value, and compare
 cell-by-cell (exact for ints/strings/bools/timestamps; exact for
 doubles too — the suite is engineered for bit-identical float output,
-see suite.py docstring — with a tiny epsilon fallback reported as a
+see the suite/__init__.py docstring — with a tiny epsilon fallback reported as a
 WARNING so drift is visible before it breaks the driver's hash).
 """
 

@@ -176,12 +176,12 @@ def test_ewma_by_user_history_cap_fails_fast(spark, monkeypatch):
     1 makes every multi-event user pathological."""
     from pyspark.errors import SparkRuntimeException
 
-    from automated_batch_data_pipeline_nyc_spark import suite
+    from automated_batch_data_pipeline_nyc_spark.suite import QUERIES, analytics
 
-    q = suite.QUERIES["ewma_by_user"].spark
+    q = QUERIES["ewma_by_user"].spark
     # default cap: the sf0.001 fixture is far below 2M rows per key
     assert q(spark, "/root/testdata/sf0.001").count() > 0
-    monkeypatch.setattr(suite, "EWMA_MAX_HISTORY", 1)
+    monkeypatch.setattr(analytics, "EWMA_MAX_HISTORY", 1)
     with pytest.raises(SparkRuntimeException, match="EWMA_MAX_HISTORY=1"):
         q(spark, "/root/testdata/sf0.001").count()
 
@@ -664,7 +664,7 @@ def test_maha_registered_precision_matrix_is_spd_dyadic():
     multiple)."""
     import numpy as np
 
-    from automated_batch_data_pipeline_nyc_spark.suite import _MAHA_PRECISION
+    from automated_batch_data_pipeline_nyc_spark.suite.stats import _MAHA_PRECISION
 
     P = np.asarray(_MAHA_PRECISION)
     assert P.shape == (4, 4)

@@ -925,7 +925,7 @@ def test_bpe_encode_fixed_table_matches_greedy_reference(spark):
     dictionary-join encoder must equal the pure-Python greedy reference
     on chain-pathological words (overlapping occurrence runs)."""
     from automated_batch_data_pipeline_nyc_spark.operators.text import bpe_encode
-    from automated_batch_data_pipeline_nyc_spark.suite import _BPE_FIXED_MERGES
+    from automated_batch_data_pipeline_nyc_spark.suite.text import _BPE_FIXED_MERGES
 
     def greedy_encode(word):
         syms = list(word)

@@ -22,7 +22,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from automated_batch_data_pipeline_nyc_spark.plans.pipeline import run_reference_pipeline
+from automated_batch_data_pipeline_nyc_spark.sources import txlog
 from automated_batch_data_pipeline_nyc_spark.sources.readers import _footer_schema, read_parquet
+from automated_batch_data_pipeline_nyc_spark.sources.writers import compact_parquet, manifest_for_dir
 from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
 
 from .conftest import SF_SMOKE
@@ -195,3 +197,48 @@ def test_reference_pipeline_job_count(spark, tmp_path):
     )
     assert res["clean"].schema == spark.read.parquet(str(tmp_path / "ck" / "clean")).schema
     assert jobs == 5
+
+
+def _ids(spark, lo, hi):
+    return spark.range(lo, hi, numPartitions=2).selectExpr("id", "cast(id as string) AS s")
+
+
+def test_txlog_reads_take_the_first_live_footer(spark, tmp_path):
+    appended, widened, overwritten = (
+        str(tmp_path / n) for n in ("appended", "widened", "overwritten")
+    )
+    txlog.commit(_ids(spark, 0, 6), appended)
+    txlog.commit(_ids(spark, 6, 9), appended)
+    # the live files disagree: Spark's inference reads the first sorted one
+    txlog.commit(_ids(spark, 0, 6), widened)
+    txlog.commit(_ids(spark, 6, 9).selectExpr("id", "s", "id * 2 AS d"), widened)
+    txlog.commit(_ids(spark, 0, 6), overwritten)
+    txlog.commit(_ids(spark, 6, 9).selectExpr("s", "id * 2 AS d"), overwritten, mode="overwrite")
+    for table in (appended, widened, overwritten):
+        for version in (0, 1):
+            files = txlog._live_files(txlog._read_log(table, version))
+            df, jobs = count_jobs(spark, lambda: txlog.read_table(spark, table, version))
+            assert jobs == 0, (table, version)
+            assert df.schema == spark.read.parquet(*[os.path.join(table, f) for f in files]).schema
+    assert txlog.read_table(spark, overwritten).columns == ["s", "d"]
+
+
+def test_compaction_and_manifest_read_the_flat_footer(spark, tmp_path):
+    flat = str(tmp_path / "flat")
+    _ids(spark, 0, 40).repartition(4).write.parquet(flat)
+    schema = spark.read.parquet(flat).schema
+    df, jobs = count_jobs(spark, lambda: manifest_for_dir(spark, flat))
+    assert jobs == 0 and df.count() == 4
+    # the coalesced rewrite is the one job left
+    n_files, jobs = count_jobs(spark, lambda: compact_parquet(spark, flat))
+    assert (n_files, jobs) == (1, 1)
+    assert spark.read.parquet(flat).schema == schema
+
+
+def test_hive_partitioned_manifest_falls_back(spark, tmp_path):
+    hive = str(tmp_path / "hive")
+    _ids(spark, 0, 10).selectExpr("id", "s", "id % 2 AS k").write.partitionBy("k").parquet(hive)
+    assert _footer_schema(spark, hive) == (None, [])
+    df, jobs = count_jobs(spark, lambda: manifest_for_dir(spark, hive))
+    assert jobs == 1  # Spark's own inference, as before
+    assert sum(r.n_rows for r in df.collect()) == 10

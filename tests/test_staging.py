@@ -1,5 +1,5 @@
 """Filesystem contract of the cross-process fixture stage
-(suite._shared_stage, VERDICT r8 item 6) — no Spark needed.
+(suite.staging._shared_stage, VERDICT r8 item 6) — no Spark needed.
 
 The properties the streaming/binaryFile queries rely on:
 
@@ -20,7 +20,7 @@ import shutil
 
 import uuid
 
-from automated_batch_data_pipeline_nyc_spark import suite
+from automated_batch_data_pipeline_nyc_spark.suite import staging
 
 #: per-test-run key suffix: two concurrent pytest runs on one machine
 #: must not race each other's fixtures in the shared (per-uid) root
@@ -28,12 +28,12 @@ _RUN = uuid.uuid4().hex[:8]
 
 
 def _stage_root() -> str:
-    return suite._stage_root()
+    return staging._stage_root()
 
 
 def _clean(name: str) -> None:
     shutil.rmtree(os.path.join(_stage_root(), name), ignore_errors=True)
-    suite._SHARED_STAGED.discard(os.path.join(_stage_root(), name))
+    staging._SHARED_STAGED.discard(os.path.join(_stage_root(), name))
 
 
 def test_shared_stage_builds_once_and_reuses():
@@ -47,16 +47,16 @@ def test_shared_stage_builds_once_and_reuses():
         with open(os.path.join(tmp, "data.txt"), "w") as fh:
             fh.write("payload")
 
-    p1 = suite._shared_stage(name, build)
+    p1 = staging._shared_stage(name, build)
     assert os.path.exists(os.path.join(p1, "_STAGED_OK"))
     assert open(os.path.join(p1, "data.txt")).read() == "payload"
     # second call: in-process fast path, no rebuild
-    p2 = suite._shared_stage(name, build)
+    p2 = staging._shared_stage(name, build)
     assert p2 == p1 and len(calls) == 1
     # fresh-process simulation: drop the in-process memo — the marker
     # probe must still skip the build
-    suite._SHARED_STAGED.discard(p1)
-    p3 = suite._shared_stage(name, build)
+    staging._SHARED_STAGED.discard(p1)
+    p3 = staging._shared_stage(name, build)
     assert p3 == p1 and len(calls) == 1
     _clean(name)
 
@@ -82,7 +82,7 @@ def test_shared_stage_race_loser_discards_and_serves_winner():
             pass
         os.rename(wtmp, final)
 
-    got = suite._shared_stage(name, loser)
+    got = staging._shared_stage(name, loser)
     assert got == final
     # winner's bytes served; loser's tmp discarded
     assert open(os.path.join(final, "data.txt")).read() == "winner"
@@ -114,8 +114,8 @@ def test_shared_stage_rename_failure_without_winner_raises():
             fh.write("junk")
 
     with pytest.raises(OSError):
-        suite._shared_stage(name, build_blocking_rename)
-    assert final not in suite._SHARED_STAGED
+        staging._shared_stage(name, build_blocking_rename)
+    assert final not in staging._SHARED_STAGED
     _clean(name)
 
 
@@ -132,7 +132,7 @@ def test_reap_scratch_sheds_dead_tmp_keeps_published_and_live():
     os.makedirs(dead_tmp, exist_ok=True)
     os.makedirs(live_tmp, exist_ok=True)
     try:
-        suite._reap_scratch()
+        staging._reap_scratch()
         assert os.path.exists(published), "published dir must survive reap"
         assert not os.path.exists(dead_tmp), "dead builder tmp must be reaped"
         assert os.path.exists(live_tmp), "live builder tmp must survive"
@@ -150,18 +150,18 @@ def test_fixture_fingerprint_tracks_content_changes(tmp_path):
 
     f = tmp_path / "events.parquet"
     f.write_bytes(b"v1-bytes")
-    fp1 = suite._fixture_fingerprint(str(tmp_path))
-    fp1_again = suite._fixture_fingerprint(str(tmp_path))
+    fp1 = staging._fixture_fingerprint(str(tmp_path))
+    fp1_again = staging._fixture_fingerprint(str(tmp_path))
     assert fp1 == fp1_again  # stable while untouched
     # same size, newer mtime (regen with identical size still rebuilds)
     time.sleep(0.01)
     f.write_bytes(b"v2-BYTES")
-    assert suite._fixture_fingerprint(str(tmp_path)) != fp1
+    assert staging._fixture_fingerprint(str(tmp_path)) != fp1
     # non-parquet files don't participate
     (tmp_path / "notes.txt").write_text("ignored")
-    fp3 = suite._fixture_fingerprint(str(tmp_path))
+    fp3 = staging._fixture_fingerprint(str(tmp_path))
     (tmp_path / "notes.txt").write_text("still ignored, changed")
-    assert suite._fixture_fingerprint(str(tmp_path)) == fp3
+    assert staging._fixture_fingerprint(str(tmp_path)) == fp3
 
 
 def test_fixture_fingerprint_raises_on_absent_fixture(tmp_path):
@@ -171,10 +171,10 @@ def test_fixture_fingerprint_raises_on_absent_fixture(tmp_path):
     import pytest
 
     with pytest.raises(OSError):
-        suite._fixture_fingerprint(str(tmp_path / "does_not_exist"))
+        staging._fixture_fingerprint(str(tmp_path / "does_not_exist"))
     (tmp_path / "readme.txt").write_text("no tables here")
     with pytest.raises(FileNotFoundError):
-        suite._fixture_fingerprint(str(tmp_path))
+        staging._fixture_fingerprint(str(tmp_path))
 
 
 def test_fixture_fingerprint_recurses_directory_tables(tmp_path):
@@ -188,12 +188,12 @@ def test_fixture_fingerprint_recurses_directory_tables(tmp_path):
     tdir.mkdir()
     part = tdir / "part-00000.snappy.parquet"
     part.write_bytes(b"v1-part-bytes")
-    fp1 = suite._fixture_fingerprint(str(tmp_path))
-    assert fp1 == suite._fixture_fingerprint(str(tmp_path))
+    fp1 = staging._fixture_fingerprint(str(tmp_path))
+    assert fp1 == staging._fixture_fingerprint(str(tmp_path))
     time.sleep(0.01)
     part.write_bytes(b"v2-PART-bytes")  # same size, newer mtime
     os.utime(tdir, ns=(0, 0))  # freeze the DIR stat: only recursion can see it
-    assert suite._fixture_fingerprint(str(tmp_path)) != fp1
+    assert staging._fixture_fingerprint(str(tmp_path)) != fp1
 
 
 def test_stage_root_ownership_is_verified(tmp_path, monkeypatch):
@@ -206,20 +206,20 @@ def test_stage_root_ownership_is_verified(tmp_path, monkeypatch):
     hostile = tmp_path / "stage_root"
     hostile.mkdir(mode=0o777)
     os.chmod(hostile, 0o777)  # mkdir honors umask; force the open mode
-    monkeypatch.setattr(suite, "_stage_root", lambda: str(hostile))
+    monkeypatch.setattr(staging, "_stage_root", lambda: str(hostile))
     with pytest.raises(RuntimeError, match="refusing to trust"):
-        suite._secure_stage_root()
+        staging._secure_stage_root()
     # tightening the mode back to private makes the same root acceptable
     os.chmod(hostile, 0o700)
-    assert suite._secure_stage_root() == str(hostile)
+    assert staging._secure_stage_root() == str(hostile)
     # a symlinked root is refused even when its target is private
     target = tmp_path / "elsewhere"
     target.mkdir(mode=0o700)
     link = tmp_path / "stage_link"
     link.symlink_to(target)
-    monkeypatch.setattr(suite, "_stage_root", lambda: str(link))
+    monkeypatch.setattr(staging, "_stage_root", lambda: str(link))
     with pytest.raises(RuntimeError, match="refusing to trust"):
-        suite._secure_stage_root()
+        staging._secure_stage_root()
 
 
 def test_shared_stage_ignores_marker_in_unowned_dir(tmp_path, monkeypatch):
@@ -230,11 +230,11 @@ def test_shared_stage_ignores_marker_in_unowned_dir(tmp_path, monkeypatch):
     d = tmp_path / "pub"
     d.mkdir()
     (d / "_STAGED_OK").touch()
-    assert suite._owned_published_dir(str(d)) is True
-    assert suite._owned_published_dir(str(tmp_path / "missing")) is False
+    assert staging._owned_published_dir(str(d)) is True
+    assert staging._owned_published_dir(str(tmp_path / "missing")) is False
     f = tmp_path / "plainfile"
     f.write_text("not a dir")
-    assert suite._owned_published_dir(str(f)) is False
+    assert staging._owned_published_dir(str(f)) is False
 
 
 def test_shared_stage_race_fallback_requires_owned_winner(monkeypatch):
@@ -258,8 +258,8 @@ def test_shared_stage_race_fallback_requires_owned_winner(monkeypatch):
         with open(os.path.join(final, "junk.txt"), "w") as fh:
             fh.write("blocks rename")
 
-    monkeypatch.setattr(suite, "_owned_published_dir", lambda p: False)
+    monkeypatch.setattr(staging, "_owned_published_dir", lambda p: False)
     with pytest.raises(OSError):
-        suite._shared_stage(name, build_blocking)
-    assert final not in suite._SHARED_STAGED
+        staging._shared_stage(name, build_blocking)
+    assert final not in staging._SHARED_STAGED
     _clean(name)

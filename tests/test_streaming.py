@@ -741,7 +741,7 @@ def test_stream_conf_scope_sets_and_restores(spark):
     dominate availableNow micro-batch wall time) and the scope must
     restore the session default even when the body raises — a leaked
     override would silently re-plan every later batch query."""
-    from automated_batch_data_pipeline_nyc_spark.suite import (
+    from automated_batch_data_pipeline_nyc_spark.suite.streaming import (
         _STREAM_STATE_PARTITIONS,
         _stream_conf_scope,
     )

@@ -9,12 +9,14 @@ any unintended eviction a hard CI failure.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
 from automated_batch_data_pipeline_nyc_spark import suite
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REGISTRY = os.path.join(REPO, "tests", "suite_registry.json")
 
 #: The round-13 window, frozen.  Changing the window is LEGAL — it is the
 #: per-round verification budget and MUST rotate — but has to be done by
@@ -227,3 +229,30 @@ def test_fixture_texts_are_single_space_normalized():
                 f"{path}: fixture text is no longer single-space "
                 f"normalized: {t!r}"
             )
+
+
+def _registry_rows() -> list[list]:
+    """``[name, sha256(oracle) or None, sha256(doc)]`` in queries() order."""
+
+    def sha(text):
+        return None if text is None else hashlib.sha256(text.encode()).hexdigest()
+
+    return [[n, sha(q.oracle), sha(q.doc)] for n, q in suite.QUERIES.items()]
+
+
+def test_registry_matches_committed_contract():
+    """The registry moves only on purpose: the ordered names, each
+    oracle's SQL (or its absence) and each doc string must equal
+    tests/suite_registry.json.  After a deliberate change, regenerate
+    it with ``python -m tests.test_suite_contract`` and commit it."""
+    with open(REGISTRY) as fh:
+        committed = json.load(fh)
+    live = _registry_rows()
+    assert [r[0] for r in live] == [r[0] for r in committed]
+    changed = [a[0] for a, b in zip(live, committed) if a != b]
+    assert not changed, f"oracle or doc changed: {changed}"
+
+
+if __name__ == "__main__":
+    with open(REGISTRY, "w") as fh:
+        fh.write("[\n" + ",\n".join(json.dumps(r) for r in _registry_rows()) + "\n]\n")

@@ -4,7 +4,7 @@ Each tokenizer runs in Spark and, as its ``*_sql`` twin, in DuckDB on
 strings built to split differently under near-miss definitions (tabs,
 CRLF, runs of spaces, ``\\x0B``, NBSP, leading and trailing space, the
 empty string); the arrays must be equal.  The oracle fragments in
-suite.py are pinned the same way against the operators they replay.  A
+the suite modules are pinned the same way against the operators they replay.  A
 source check keeps every split in the one module.
 """
 
@@ -17,7 +17,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from automated_batch_data_pipeline_nyc_spark import suite
+from automated_batch_data_pipeline_nyc_spark.suite import QUERIES
+from automated_batch_data_pipeline_nyc_spark.suite import dedup as suite_dedup
 from automated_batch_data_pipeline_nyc_spark.operators import dedup as dd
 from automated_batch_data_pipeline_nyc_spark.operators import tokenize as tk
 
@@ -79,10 +80,10 @@ def test_word_ngrams_matches_oracle_window(spark, split, n):
 def test_oracle_gram_fragments_match_their_operators(spark):
     """_SQL_DOC_2GRAMS replays the single-space pair operators' grams;
     _sql_doc_ngrams replays shingle(), the MinHash gram set."""
-    sp, db = _both(spark, F.array_sort(dd._space_grams("text", 2)), suite._SQL_DOC_2GRAMS, "text")
+    sp, db = _both(spark, F.array_sort(dd._space_grams("text", 2)), suite_dedup._SQL_DOC_2GRAMS, "text")
     assert sp == db
     for n in (2, 5):
-        sp, db = _both(spark, F.array_sort(dd.shingle("text", n)), suite._sql_doc_ngrams(n), "text")
+        sp, db = _both(spark, F.array_sort(dd.shingle("text", n)), suite_dedup._sql_doc_ngrams(n), "text")
         assert sp == db
 
 
@@ -111,8 +112,8 @@ def test_minhash_transitive_oracle_pairs_match_on_any_whitespace(spark):
         num_hashes=16, bands=4, rows_per_band=4,
         shingle_size=2, jaccard_threshold=0.8, collapse_exact=False,
     )
-    oracle = suite.QUERIES["dedup_minhash_transitive"].oracle
-    head = oracle[: oracle.index(suite._SQL_CC_CLOSURE)].rstrip().rstrip(",")
+    oracle = QUERIES["dedup_minhash_transitive"].oracle
+    head = oracle[: oracle.index(suite_dedup._SQL_CC_CLOSURE)].rstrip().rstrip(",")
     db = duckdb.sql(f"{head}\nSELECT id_a, id_b FROM pairs").fetchall()
     pairs = sorted((r.id_a, r.id_b) for r in sp.collect())
     assert pairs == sorted(db)
@@ -134,9 +135,12 @@ def test_token_splits_live_only_in_tokenize():
         ("operators/text.py", 'F.split(query, "&"),'),
     }
     assert {(f, line) for f, line in lines if any(s in line for s in sql_splits)} == {
-        ("suite.py", "FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(q, '&'),"),
-        ("suite.py", "string_split(string_agg(event_type, '>' ORDER BY ts, event_id), '>')"),
+        ("suite/dedup.py", "FROM (SELECT *, array_to_string(list_sort(list_filter(string_split(q, '&'),"),
+        ("suite/analytics.py", "string_split(string_agg(event_type, '>' ORDER BY ts, event_id), '>')"),
     }
-    suite_src = (pkg / "suite.py").read_text()
-    assert "\\s+" not in suite_src
-    assert "tk.WHITESPACE" not in suite_src
+    suite_modules = sorted((pkg / "suite").glob("*.py"))
+    assert suite_modules
+    for path in suite_modules:
+        src = path.read_text()
+        assert "\\s+" not in src, path.name
+        assert "tk.WHITESPACE" not in src, path.name

@@ -3,18 +3,21 @@
 Run from a cwd OUTSIDE the repo (so PYTHONPATH/cloudpickle issues in
 mapInPandas kernels surface):
 
-    cd /tmp && python /root/repo/tools/drive_entry.py
+    cd /tmp && python <repo>/tools/drive_entry.py [NAME ...] [--sf DIR]
 
-Exit 0 = entry() stable + every oracle-backed query hash-matches DuckDB
-at sf0.01; rows-only queries must execute.  The date-vs-midnight-
-datetime normalization below matters: Spark date_trunc yields a
-timestamp where DuckDB yields DATE for the same instant.
+With no NAME: exit 0 = entry() stable + every oracle-backed query
+hash-matches DuckDB at sf0.01 (or DIR); rows-only queries must execute.
+With NAMEs: only those queries are checked, with the same compare (no
+entry() run); an unknown name exits 2.  The date-vs-midnight-datetime
+normalization below matters: Spark date_trunc yields a timestamp where
+DuckDB yields DATE for the same instant.
 """
 
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession
@@ -52,10 +55,9 @@ def typed_hash(rows, columns):
 
 
 def check_query(name, df, rows, oracles, con) -> str:
-    """The per-query verdict line (shared with tools/parity_subset.py
-    so subset parity can never drift from the full drive's compare):
-    ROWSONLY when no oracle exists, else the row-count / column-set /
-    typed-value-hash mismatch ladder, OK when all three match."""
+    """The per-query verdict line: ROWSONLY when no oracle exists, else
+    the row-count / column-set / typed-value-hash mismatch ladder, OK
+    when all three match."""
     if name not in oracles:
         return f"ROWSONLY {name}: {len(rows)} rows"
     cur = con.execute(oracles[name])
@@ -70,8 +72,21 @@ def check_query(name, df, rows, oracles, con) -> str:
     return f"OK {name}: {len(rows)} rows"
 
 
-def main() -> int:
+def main(argv: list[str]) -> int:
     import __spark_entry__ as entry_mod
+
+    sf_dir = SF_DIR
+    if "--sf" in argv:
+        i = argv.index("--sf")
+        sf_dir = argv[i + 1]
+        argv = argv[:i] + argv[i + 2:]
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    unknown = [n for n in argv if n not in queries]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+    names = argv or list(queries)
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -81,25 +96,24 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    r1 = entry_mod.entry(spark).collect()
-    r2 = entry_mod.entry(spark).collect()
-    assert len(r1) == len(r2) and sorted(map(str, r1)) == sorted(map(str, r2)), (
-        "entry() not stable"
-    )
-    print(f"entry(): {len(r1)} rows, stable", flush=True)
+    if not argv:
+        r1 = entry_mod.entry(spark).collect()
+        r2 = entry_mod.entry(spark).collect()
+        assert len(r1) == len(r2) and sorted(map(str, r1)) == sorted(map(str, r2)), (
+            "entry() not stable"
+        )
+        print(f"entry(): {len(r1)} rows, stable", flush=True)
 
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     n_fail = 0
-    for name, fn in queries.items():
+    for name in names:
         try:
-            df = fn(spark, SF_DIR)
+            df = queries[name](spark, sf_dir)
             rows = df.collect()
             line = check_query(name, df, rows, oracles, con)
             print(line, flush=True)
@@ -108,9 +122,9 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001
             print(f"ERROR {name}: {exc!r}"[:500], flush=True)
             n_fail += 1
-    print(f"done: {n_fail} failures / {len(queries)} queries", flush=True)
+    print(f"done: {n_fail} failures / {len(names)} queries", flush=True)
     return 1 if n_fail else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))
