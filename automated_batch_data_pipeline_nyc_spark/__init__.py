@@ -13,7 +13,7 @@ Layout:
 - ``streaming``  Structured Streaming jobs (incremental loads)
 """
 
-from .session import get_session, stop_session
+from .session import get_session
 
-__all__ = ["get_session", "stop_session"]
+__all__ = ["get_session"]
 __version__ = "0.1.0"

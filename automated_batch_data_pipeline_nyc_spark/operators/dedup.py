@@ -118,6 +118,15 @@ def _fold32(hashes: Column) -> Column:
     return F.transform(hashes, lambda h: h.bitwiseAND(F.lit(0xFFFFFFFF)))
 
 
+def _md5_hash32(tok: Column) -> Column:
+    """Engine-portable 32-bit token hash: the first 8 hex chars of the
+    md5, as a bigint — DuckDB computes the identical value via
+    ``('0x' || substring(md5(w), 1, 8))::BIGINT``.  Slower than
+    xxhash64 (string md5 per token) — use only where cross-engine
+    verifiability is the point."""
+    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint")
+
+
 def _minhash_from_h32(h32: Column, num_hashes: int = 128) -> Column:
     """MinHash signature over 32-bit-folded shingle hashes.
 
@@ -224,6 +233,71 @@ def lsh_candidate_pairs(
     )
 
 
+def _exact_families(docs: DataFrame, id_col: str, text_col: str):
+    """The exact-duplicate family collapse of :func:`minhash_pairs`:
+    ``(reps, star)`` — ``reps`` is one ``id_col`` row per distinct text
+    (the family's min id), ``star`` the ``(id_a=rep, id_b=member)`` pair
+    of every other member.
+
+    md5 (128-bit), not xxhash64: a fingerprint collision would silently
+    merge two different texts, and at 10^10 docs the 64-bit birthday
+    bound is no longer negligible.  ``docs`` must hold no NULL text
+    (md5(NULL) is NULL and would group every null-text doc into one
+    false family).  The fingerprints read the text straight off the
+    scan: the groupBy redistributes them anyway, so spreading the text
+    column first would only add a shuffle.
+    """
+    fam = docs.select(
+        F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp")
+    )
+    reps = fam.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
+    star = (
+        fam.join(reps, "__fp")
+        .filter(F.col(id_col) != F.col("__rep"))
+        .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
+    )
+    return reps.select(F.col("__rep").alias(id_col)), star
+
+
+def _verify_jaccard(
+    cand: DataFrame, g: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact set-Jaccard verify of candidate pairs ``(id_a, id_b)`` over
+    ``g``'s per-document gram-hash arrays ``(id_col, __h)``: returns
+    ``(id_a, id_b, jaccard)`` with ``jaccard >= threshold``.
+
+    |A∪B| = |A|+|B|−|A∩B| for the gram SETS — skipping array_union
+    halves the per-pair set arithmetic, measured r13 as the dominant
+    cost of the verify stage.  array_intersect already returns the
+    DISTINCT intersection, and the per-side set sizes are staged PER
+    DOCUMENT (one array_distinct per doc, not per pair), so the identity
+    is exact even if two grams of one document collide under the hash;
+    the division consumes the identical pair of doubles, and the emitted
+    jaccard is bit-identical to the array_union form.
+    """
+    def side(s):
+        return g.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("__h").alias(f"__h{s}"),
+            F.size(F.array_distinct("__h")).alias(f"__s{s}"),
+        )
+
+    inter = F.size(F.array_intersect("__ha", "__hb"))
+    return (
+        cand.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            (
+                inter.cast("double")
+                / (F.col("__sa") + F.col("__sb") - inter).cast("double")
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_pairs(
     df: DataFrame,
     text_col: str,
@@ -236,24 +310,47 @@ def minhash_pairs(
     collapse_exact: bool = True,
     max_bucket_size: int | None = None,
     gram_frame: DataFrame | None = None,
+    portable: bool = False,
 ) -> DataFrame:
     """Verified MinHash near-dup pairs (id_a < id_b).
 
-    LSH banding proposes candidates; *exact* shingle-set Jaccard (over
-    the hashed shingles) verifies them — so the only approximation is
-    LSH recall, never false positives.  The pair set is materialized
-    eagerly (it is candidate-sized, tiny next to the corpus) so the
-    cached signature/shingle storage can be released before returning.
+    One pipeline: gram hashes → exact-family collapse → signatures →
+    LSH banding → exact Jaccard verify.  LSH banding proposes
+    candidates; *exact* shingle-set Jaccard (over the hashed shingles)
+    verifies them — so the only approximation is LSH recall, never
+    false positives.  The pair set is materialized eagerly (it is
+    candidate-sized, tiny next to the corpus) so the cached gram and
+    signature storage can be released before returning.
+
+    Documents with NULL text are dropped up front: they pair with
+    nothing (and :func:`minhash_dedup` keeps all of them).
+
+    Gram hashes: the :func:`shingle` set of each document, each gram
+    hashed ONCE — xxhash64, or with ``portable=True`` the md5-32 family
+    of :func:`_md5_hash32` — into a spread, persisted ``(id_col, __h)``
+    frame that the signatures and the verify both read.  The text column
+    never enters a cache.  The signature derives its k functions by
+    multiply-add over the hashes (:func:`_minhash_from_h32`), and the
+    verify intersects the hashed sets (:func:`_verify_jaccard`).
+
+    ``portable=True`` is the cross-engine-verifiable form: md5-32 gram
+    hashes (which :func:`_fold32` leaves unchanged, so the signature is
+    :func:`with_minhash_portable`'s permutation family) and raw
+    signature-slice band keys (``lsh_candidate_pairs(portable=True)``),
+    so any ANSI-SQL engine replays signatures, candidates and verify
+    exactly — the suite hash-verifies the transitive dedup pipeline
+    with it.  xxhash64 is ~an order of magnitude cheaper than a string
+    md5 per gram, so the production corpus path stays on the default.
 
     ``collapse_exact`` (default on) removes the one quadratic a crawl
     corpus WILL hit: a family of m byte-identical documents has
     identical signatures, so all ``bands`` buckets collide and the LSH
     self-join emits m(m-1)/2 candidate rows from a single bucket —
     10^8 pairs for a routine 10^4-doc boilerplate family.  The fix
-    fingerprints the text (md5), runs the signature pipeline on ONE
-    representative per fingerprint (the min id), and afterwards expands
-    each family as a *star* — (rep, member) for every other member.
-    This is lossless for everything downstream:
+    fingerprints the text (:func:`_exact_families`), runs the signature
+    pipeline on ONE representative per fingerprint (the min id), and
+    afterwards expands each family as a *star* — (rep, member) for every
+    other member.  This is lossless for everything downstream:
 
     - exact dups are Jaccard 1.0, always >= any threshold, so every
       family member IS a near-dup of its representative;
@@ -275,143 +372,57 @@ def minhash_pairs(
 
     ``gram_frame`` (r14, VERDICT r13 item 1): a pre-built,
     pre-PERSISTED ``(id_col, __h)`` frame of per-document gram-hash
-    arrays replacing the internal shingle+xxhash64 stage — each row's
-    ``__h`` must hold the document's DISTINCT gram hashes under the
-    caller's gram convention.  Order and duplicates are immaterial to
-    the OUTPUT: the signature minima, the LSH banding derived from
-    them, and the set-arithmetic verify (``array_intersect`` + staged
-    distinct sizes) are all order- and duplicate-insensitive, so the
-    emitted pair set is identical to the internally-shingled form
-    whenever the gram SETS match :func:`shingle`'s — as they do for
-    :func:`_word_gram_hashes`, which hashes ``shingle`` itself (the
-    frame :func:`minhash_audit` passes).  The caller owns the
-    frame's persistence and release; the exact-family collapse still
-    reads raw text from ``df`` for its md5 fingerprints.
+    arrays replacing the internal gram stage; the caller owns its
+    persistence and release.  Order and duplicates within ``__h`` are
+    immaterial to the OUTPUT: the signature minima, the LSH banding
+    derived from them, and the set-arithmetic verify are all order- and
+    duplicate-insensitive, so the emitted pair set is identical to the
+    internal form whenever the gram SETS match :func:`shingle`'s — as
+    they do for :func:`_word_gram_hashes` (the frame
+    :func:`minhash_audit` passes).  Its rows for NULL-text documents
+    are ignored.
     """
-    star = None
-    if gram_frame is not None:
-        # Shared-gram path (r14): the caller already staged and
-        # persisted the per-doc gram-hash arrays, so (a) the family
-        # fingerprint pass reads raw text straight off the scan — no
-        # spread() shuffle of the text column just to compute md5s the
-        # following groupBy redistributes anyway — and (b) only the
-        # (id, __sig) frame is persisted here: the verify stage reads
-        # the gram arrays from the CALLER's cache instead of copying
-        # them into a second one.
-        if collapse_exact:
-            fam = df.filter(F.col(text_col).isNotNull()).select(
-                F.col(id_col),
-                F.md5(F.col(text_col).cast("string")).alias("__fp"),
-            )
-            reps = fam.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-            star = (
-                fam.join(reps, "__fp")
-                .filter(F.col(id_col) != F.col("__rep"))
-                .select(
-                    F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
-                )
-            )
-            hsrc = gram_frame.select(F.col(id_col), F.col("__h")).join(
-                reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-            )
-        else:
-            hsrc = gram_frame.select(F.col(id_col), F.col("__h"))
-        with_sig = (
-            hsrc.withColumn("__h32", _fold32(F.col("__h")))
-            .withColumn("__sig", _minhash_from_h32(F.col("__h32"), num_hashes))
-            .select(F.col(id_col), F.col("__sig"))
-        )
-        sh_src = hsrc
+    docs = df.filter(F.col(text_col).isNotNull())
+    own_g = gram_frame is None
+    if own_g:
+        gram_hash = _md5_hash32 if portable else (lambda s: F.xxhash64(s))
+        # spread so a single-row-group input can't serialize the
+        # O(k x shingles) arithmetic on one task
+        g = spread(docs.select(F.col(id_col), F.col(text_col)), key=id_col).select(
+            F.col(id_col),
+            F.transform(shingle(text_col, n=shingle_size), gram_hash).alias("__h"),
+        ).persist()
+        keep = None
     else:
-        base = spread(df.select(F.col(id_col), F.col(text_col)), key=id_col)
-        if collapse_exact:
-            # md5 (128-bit), not xxhash64: a fingerprint collision would
-            # silently merge two different texts, and at 10^10 docs the
-            # 64-bit birthday bound is no longer negligible.  NULL text
-            # is excluded: md5(NULL) is NULL, which would otherwise
-            # group every null-text doc into one false "family" (the
-            # uncollapsed path emits no pairs for them — null shingles
-            # never collide).
-            fam = base.filter(F.col(text_col).isNotNull()).select(
-                F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp")
-            )
-            reps = fam.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-            star = (
-                fam.join(reps, "__fp")
-                .filter(F.col(id_col) != F.col("__rep"))
-                .select(
-                    F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
-                )
-            )
-            base = base.join(
-                reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-            )
-        # Shingles are hashed ONCE to 64-bit longs; the signature
-        # derives its k functions by multiply-add over the hashes, and
-        # the exact verify intersects the hashed sets (long compares,
-        # dup-safe since array_intersect/union are distinct-set ops).
-        # Strings never leave the first projection.  The signature
-        # pipeline only needs (id, text) — projected above so the
-        # persisted set stays narrow — and is spread across the cluster
-        # so a single-row-group input can't serialize the
-        # O(k x shingles) arithmetic on one task.
-        with_sig = (
-            base.withColumn(
-                "__h",
-                F.transform(shingle(text_col, n=shingle_size), lambda s: F.xxhash64(s)),
-            )
-            .withColumn("__h32", _fold32(F.col("__h")))
-            .withColumn("__sig", _minhash_from_h32(F.col("__h32"), num_hashes))
-            .drop("__h32")
-        )
-        sh_src = None
-    with_sig = with_sig.persist()
+        g = gram_frame.select(F.col(id_col), F.col("__h"))
+        keep = docs.select(F.col(id_col))  # drops the frame's NULL-text rows
+    star = None
+    if collapse_exact:
+        keep, star = _exact_families(docs, id_col, text_col)
+    src = g if keep is None else g.join(keep, id_col, "left_semi")
+    sig = (
+        src.withColumn("__h32", _fold32(F.col("__h")))
+        .withColumn("__sig", _minhash_from_h32(F.col("__h32"), num_hashes))
+        .select(F.col(id_col), F.col("__sig"))
+        .persist()
+    )
     try:
-        pairs = lsh_candidate_pairs(
-            with_sig, id_col, "__sig", bands, rows_per_band,
-            max_bucket_size=max_bucket_size,
+        cand = lsh_candidate_pairs(
+            sig, id_col, "__sig", bands, rows_per_band,
+            max_bucket_size=max_bucket_size, portable=portable,
         )
-        # |A∪B| = |A|+|B|−|A∩B| over the shingle-hash SETS — same
-        # union-skip identity as jaccard_prefix_pairs' verify (r13):
-        # array_union was half the per-candidate set arithmetic.  The
-        # per-side set sizes are staged per document (array_intersect
-        # already dedups, so the identity stays exact under any
-        # within-document hash collision).
-        sh = (with_sig if sh_src is None else sh_src).select(
-            F.col(id_col), F.col("__h"),
-            F.size(F.array_distinct("__h")).alias("__hsz"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        verified = (
-            pairs.join(
-                sh.withColumnsRenamed(
-                    {id_col: "id_a", "__h": "sh_a", "__hsz": "__sa"}
-                ),
-                "id_a",
-            )
-            .join(
-                sh.withColumnsRenamed(
-                    {id_col: "id_b", "__h": "sh_b", "__hsz": "__sb"}
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "jaccard",
-                inter / (F.col("__sa") + F.col("__sb") - inter),
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b")
+        pairs = _verify_jaccard(cand, g, id_col, jaccard_threshold).select(
+            "id_a", "id_b"
         )
         if star is not None:
             # Disjoint by construction: star pairs have a non-rep id_b,
             # verified pairs connect two representatives.
-            verified = verified.unionByName(star)
-        # Materialize while the cached signatures are alive, then
-        # release executor storage — a long-lived driver calling this
-        # repeatedly must not accumulate cached shingle arrays.
-        return _ckpt(verified, label="dedup_result")
+            pairs = pairs.unionByName(star)
+        return _ckpt(pairs, label="dedup_result")
     finally:
-        with_sig.unpersist()
+        sig.unpersist()
+        if own_g:
+            g.unpersist()
 
 
 def minhash_dedup(
@@ -483,15 +494,6 @@ def _simhash_from_hashes(hashes: Column, n: Column, bits: int = 64) -> Column:
     return sig
 
 
-def _md5_hash32(tok: Column) -> Column:
-    """Engine-portable 32-bit token hash: the first 8 hex chars of the
-    md5, as a bigint — DuckDB computes the identical value via
-    ``('0x' || substring(md5(w), 1, 8))::BIGINT``.  Slower than
-    xxhash64 (string md5 per token) — use only where cross-engine
-    verifiability is the point."""
-    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("bigint")
-
-
 def with_simhash(
     df: DataFrame,
     text_col: str,
@@ -549,131 +551,6 @@ def with_minhash_portable(
         out_col, _minhash_from_h32(F.col("__mh_h32"), num_hashes)
     )
     return out.drop("__mh_h32")
-
-
-def minhash_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    shingle_size: int = 2,
-    jaccard_threshold: float = 0.8,
-    collapse_exact: bool = True,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Verified MinHash near-dup pairs (``id_a < id_b``) over the
-    ENGINE-PORTABLE hash family — the cross-engine-verifiable twin of
-    :func:`minhash_pairs`, byte-replayable in any ANSI-SQL engine.
-
-    Same three-stage pipeline as the production path — signature →
-    banded LSH candidates → exact Jaccard verify — with every
-    engine-specific ingredient swapped for its portable equivalent:
-
-    - word ``shingle_size``-gram shingles hashed with the md5-32
-      family (:func:`_md5_hash32` — the family whose signature
-      arithmetic is already hash-verified via
-      :func:`with_minhash_portable`) instead of xxhash64; the shingle
-      space itself is :func:`shingle`, same as production.  Word
-      2-grams by default: token-level SETS are degenerate on
-      small-vocabulary corpora (every long doc owns nearly the whole
-      vocabulary, so set-Jaccard chains the corpus into one cluster);
-    - band bucket keys are the raw signature-slice strings
-      (``lsh_candidate_pairs(portable=True)``) instead of their
-      xxhash64, so candidate proposal replays as a string_agg
-      equality join;
-    - the Jaccard verify intersects the md5-32 hash SETS — the same
-      set arithmetic both engines evaluate over identical values.
-
-    Used by the suite to hash-verify the pairs → connected-components
-    → survivor-census TRANSITIVE dedup pipeline end to end (VERDICT
-    r11 item 2); the production corpus path stays on
-    :func:`minhash_pairs` (xxhash64 is ~an order of magnitude cheaper
-    than per-token string md5).  Plan shape is identical to the
-    production twin: map-only signatures, vocabulary-bounded band
-    shuffle, candidate-sized verify join — INCLUDING ``collapse_exact``
-    (default on, same as production): an m-doc byte-identical family
-    collides in every band, so the uncollapsed self-join would emit
-    m(m-1)/2 candidates; collapsing to one representative per text
-    fingerprint and expanding the family as a star afterwards keeps
-    the pair set linear in family size.  The star reduction is
-    component-equivalent to the full clique (the :func:`minhash_pairs`
-    docstring carries the proof), so a connected-components census
-    over these pairs — the suite's registered form — is unchanged,
-    which is why the DuckDB oracle can stay on the simple uncollapsed
-    restatement.
-    """
-    base = spread(
-        df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col), F.col(text_col)
-        ),
-        key=id_col,
-    )
-    star = None
-    if collapse_exact:
-        # md5 fingerprint, min-id representative, star expansion —
-        # identical reasoning to minhash_pairs (NULL text already
-        # filtered above).
-        fam = base.select(
-            F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp")
-        )
-        reps = fam.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-        star = (
-            fam.join(reps, "__fp")
-            .filter(F.col(id_col) != F.col("__rep"))
-            .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
-        )
-        base = base.join(
-            reps.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-        )
-    grams = shingle(F.col(text_col), n=shingle_size)
-    with_sig = (
-        base.withColumn("__h32", F.transform(grams, _md5_hash32))
-        .withColumn("__sig", _minhash_from_h32(F.col("__h32"), num_hashes))
-        .drop(text_col)
-    )
-    with_sig = with_sig.persist()
-    try:
-        pairs = lsh_candidate_pairs(
-            with_sig, id_col, "__sig", bands, rows_per_band,
-            portable=True, max_bucket_size=max_bucket_size,
-        )
-        # union-skip verify (r13, see minhash_pairs): per-doc staged
-        # distinct set sizes keep the identity exact even under the
-        # md5-32 family's larger within-doc collision odds.
-        sh = with_sig.select(
-            F.col(id_col), F.col("__h32"),
-            F.size(F.array_distinct("__h32")).alias("__hsz"),
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        verified = (
-            pairs.join(
-                sh.withColumnsRenamed(
-                    {id_col: "id_a", "__h32": "sh_a", "__hsz": "__sa"}
-                ),
-                "id_a",
-            )
-            .join(
-                sh.withColumnsRenamed(
-                    {id_col: "id_b", "__h32": "sh_b", "__hsz": "__sb"}
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "jaccard",
-                inter / (F.col("__sa") + F.col("__sb") - inter),
-            )
-            .filter(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b")
-        )
-        if star is not None:
-            # disjoint by construction: star pairs have a non-rep id_b,
-            # verified pairs connect two representatives
-            verified = verified.unionByName(star)
-        return _ckpt(verified, label="dedup_portable_pairs")
-    finally:
-        with_sig.unpersist()
 
 
 def simhash_candidate_pairs(
@@ -1528,42 +1405,9 @@ def jaccard_prefix_pairs(
             )
             .distinct()
         )
-        # |A∪B| = |A|+|B|−|A∩B| for the gram SETS — skipping array_union
-        # halves the per-pair set arithmetic in the verify stage,
-        # measured r13 as the dominant cost of the whole operator (the
-        # candidate set on the narrow-vocabulary fixture is ~1.5M
-        # pairs).  array_intersect already returns the DISTINCT
-        # intersection, and the per-side set sizes are staged PER
-        # DOCUMENT (one array_distinct per doc, not per pair), so the
-        # identity is exact even if xxhash64 ever collided two grams of
-        # one document — the division consumes the identical pair of
-        # doubles and the emitted jaccard is bit-identical to the
-        # array_union form.
-        inter = F.size(F.array_intersect("__ha", "__hb"))
-        ga = g.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__h").alias("__ha"),
-            F.size(F.array_distinct("__h")).alias("__sa"),
+        return _ckpt(
+            _verify_jaccard(cand, g, id_col, threshold), label="dedup_result"
         )
-        gb = g.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__h").alias("__hb"),
-            F.size(F.array_distinct("__h")).alias("__sb"),
-        )
-        pairs = (
-            cand.join(ga, "id_a")
-            .join(gb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    inter.cast("double")
-                    / (F.col("__sa") + F.col("__sb") - inter).cast("double")
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-        return _ckpt(pairs, label="dedup_result")
     finally:
         if own_g:
             g.unpersist()

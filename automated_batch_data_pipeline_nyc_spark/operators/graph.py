@@ -272,11 +272,12 @@ def pagerank(
     The DataFrame-native Pregel formulation (GraphX is RDD/Scala-only):
     per iteration ONE shuffle joins static ``(src, dst, outdeg)`` edges
     to current ranks and aggregates mass by destination — edges and
-    degrees are computed once and persisted, ranks are a narrow
-    (node, double) frame, and ``localCheckpoint`` truncates lineage so
-    the plan stays O(1) per round.  Dangling nodes (no out-edges) leak
-    their mass — the textbook simplification; feed an undirected
-    (symmetrized) edge list if you need a stochastic matrix.  Fixed
+    degrees are computed once (behind a lazy ``localCheckpoint``) and
+    pre-partitioned by source, ranks are a narrow (node, double) frame,
+    and a ``localCheckpoint`` every third step keeps the plan shallow.
+    Dangling nodes (no out-edges) leak their mass — the textbook
+    simplification; feed an undirected (symmetrized) edge list if you
+    need a stochastic matrix.  Fixed
     iteration count (not convergence-tested) keeps the run cross-engine
     reproducible.  ``normalize=True`` returns rank·N (mean 1.0 —
     scale-free across corpus sizes, and 6dp-roundable for cross-engine
@@ -295,57 +296,53 @@ def pagerank(
     nodes = e.select(F.col("s").alias("node"))
     if not symmetric:
         nodes = nodes.union(e.select(F.col("d").alias("node")))
-    nodes = nodes.distinct().persist()
+    nodes = nodes.distinct()
     n = nodes.count()
     deg = e.groupBy("s").agg(F.count("*").alias("deg"))
     # Pre-partition the static edge side by its join key: every power
     # step then shuffles only the narrow (node, rank) frame, and the
     # mass aggregate's hash partitioning on d lines up with the final
-    # node join.  Both statics stay pinned in executor storage.
-    ed = e.join(deg, "s").repartition("s").persist()
-    try:
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        base = (1.0 - damping) / n
-        # NOTE (r13): a zero-union fusion of the mass aggregate and the
-        # node left-join (one exchange per power step instead of
-        # exchange + join) was measured and REVERTED: 3.6→4.2 s at
-        # sf0.1 — the left-join side is the cached pre-partitioned node
-        # set, already cheaper than widening the mass exchange — and
-        # the fusion changes the float summation order for no win.
-        # Checkpoint every THIRD power step (r14, VERDICT r13 item 6):
-        # the lazy localCheckpoint is pure lineage maintenance — values
-        # are bit-identical with or without it — and per-step
-        # checkpoints cost a per-round RDD materialization plus a
-        # per-round plan analysis.  Three chained steps keep the plan
-        # shallow (3 exchanges deep) while cutting the checkpoint count
-        # 3x; a 3-iteration caller (the suite query) now runs as ONE
-        # fused plan with no intermediate materialization at all.
-        for it in range(iterations):
-            mass = (
-                ed.join(ranks, ed.s == ranks.node)
-                .groupBy(F.col("d").alias("node2"))
-                .agg(F.sum(F.col("rank") / F.col("deg")).alias("mass"))
+    # node join.
+    ed = e.join(deg, "s").repartition("s")
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    base = (1.0 - damping) / n
+    # NOTE (r13): a zero-union fusion of the mass aggregate and the
+    # node left-join (one exchange per power step instead of
+    # exchange + join) was measured and REVERTED: 3.6→4.2 s at
+    # sf0.1 — the left-join side is the pre-partitioned node set,
+    # already cheaper than widening the mass exchange — and
+    # the fusion changes the float summation order for no win.
+    # Checkpoint every THIRD power step (r14, VERDICT r13 item 6):
+    # the lazy localCheckpoint is pure lineage maintenance — values
+    # are bit-identical with or without it — and per-step
+    # checkpoints cost a per-round RDD materialization plus a
+    # per-round plan analysis.  Three chained steps keep the plan
+    # shallow (3 exchanges deep) while cutting the checkpoint count
+    # 3x; a 3-iteration caller (the suite query) now runs as ONE
+    # fused plan with no intermediate materialization at all.
+    for it in range(iterations):
+        mass = (
+            ed.join(ranks, ed.s == ranks.node)
+            .groupBy(F.col("d").alias("node2"))
+            .agg(F.sum(F.col("rank") / F.col("deg")).alias("mass"))
+        )
+        ranks = (
+            nodes.join(mass, nodes.node == mass.node2, "left")
+            .select(
+                "node",
+                (
+                    F.lit(base)
+                    + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
+                ).alias("rank"),
             )
-            ranks = (
-                nodes.join(mass, nodes.node == mass.node2, "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            if (it + 1) % 3 == 0 and it + 1 < iterations:
-                ranks = _ckpt(ranks, eager=False, label="pagerank_iter")
-        if normalize:
-            return ranks.select(
-                "node", (F.col("rank") * F.lit(float(n))).alias("rank")
-            )
-        return ranks
-    finally:
-        ed.unpersist()
-        nodes.unpersist()
+        )
+        if (it + 1) % 3 == 0 and it + 1 < iterations:
+            ranks = _ckpt(ranks, eager=False, label="pagerank_iter")
+    if normalize:
+        return ranks.select(
+            "node", (F.col("rank") * F.lit(float(n))).alias("rank")
+        )
+    return ranks
 
 
 def k_core(

@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_session", "stop_session"]
+__all__ = ["get_session"]
 
 _DEFAULTS = {
     # Determinism / oracle parity
@@ -80,8 +80,3 @@ def get_session(app_name: str = "automated_batch_data_pipeline_nyc_spark", **ove
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def stop_session() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

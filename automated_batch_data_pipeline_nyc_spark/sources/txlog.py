@@ -12,9 +12,17 @@ snapshot, and any historical version stays readable until vacuumed
 Design (all public Delta-paper machinery, scoped to one filesystem):
 
 - ``<table>/_txlog/<version 10-digit>.json`` — one entry per commit:
-  ``{"version", "op", "add": [...], "remove": [...], "n_add"}`` with
-  file paths RELATIVE to the table root (the manifest_for_dir
-  location-independence rule).
+  ``{"version", "op", "add": [...], "remove": [...], "n_add",
+  "schema"}`` with file paths RELATIVE to the table root (the
+  manifest_for_dir location-independence rule) and the written
+  DataFrame's schema (Delta's ``metaData`` action).
+- An append must match the latest logged schema in column names and
+  types (nullability ignored), or ``commit`` raises ``ValueError``; an
+  overwrite may change it.  So every live file of a version has the
+  version's schema, and ``read_table`` hands Spark that schema — no
+  footer read, no job, and the same answer on every read.  Entries
+  written before the schema was logged keep the read of the first live
+  footer.
 - Data files land under ``<table>/data/v<version>-<uuid>/`` — each
   commit writes its own immutable directory first (a failed job leaves
   only unreferenced garbage, never a half-visible table), then
@@ -48,6 +56,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from .readers import _read_as_written
 
@@ -106,6 +115,19 @@ def _read_log(path: str, version: int | None = None) -> list[dict]:
     return entries
 
 
+def _shape(schema):
+    """A logged schema's column names and types: nullability and
+    metadata dropped, at every nesting level."""
+    if isinstance(schema, dict):
+        return {
+            k: _shape(v) for k, v in schema.items()
+            if k not in ("nullable", "containsNull", "valueContainsNull", "metadata")
+        }
+    if isinstance(schema, list):
+        return [_shape(v) for v in schema]
+    return schema
+
+
 def _live_files(entries: list[dict]) -> list[str]:
     live: list[str] = []
     for e in entries:
@@ -154,6 +176,11 @@ def commit(
     This is what turns at-least-once micro-batch replay (Structured
     Streaming restarts re-run the last unacknowledged batch) into
     exactly-once table contents.
+
+    Each entry logs ``df.schema``.  An append whose column names or
+    types differ from the latest logged schema raises ``ValueError``
+    (checked again after every lost race, since the winner may have
+    changed the schema) and deletes its staged files.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite; got {mode!r}")
@@ -162,6 +189,7 @@ def commit(
         return None
     commit_dir = f"v{uuid.uuid4().hex[:12]}"
     abs_dir = os.path.join(path, _DATA_DIR, commit_dir)
+    schema = json.loads(df.schema.json())
     df.write.mode("error").parquet(abs_dir)
     add = sorted(
         os.path.join(_DATA_DIR, commit_dir, f)
@@ -180,12 +208,23 @@ def commit(
             return None
         versions = _list_versions(path)
         version = (versions[-1] + 1) if versions else 0
+        if mode == "append" and versions:
+            with open(_entry_path(path, versions[-1])) as fh:
+                logged = json.load(fh).get("schema")
+            if logged is not None and _shape(logged) != _shape(schema):
+                shutil.rmtree(abs_dir, ignore_errors=True)
+                raise ValueError(
+                    f"append schema {StructType.fromJson(schema).simpleString()} "
+                    f"differs from version {versions[-1]}'s "
+                    f"{StructType.fromJson(logged).simpleString()} at {path}"
+                )
         entry = {
             "version": version,
             "op": mode,
             "add": add,
             "remove": [],
             "n_add": len(add),
+            "schema": schema,
         }
         if txn is not None:
             entry["txn_app"], entry["txn_batch"] = txn[0], int(txn[1])
@@ -214,7 +253,8 @@ def read_table(spark, path: str, version: int | None = None) -> DataFrame:
     """Snapshot read at ``version`` (default: latest).  Replays the log
     and hands Spark the explicit live-file list — never a directory
     listing, so concurrent writers, staging garbage, and vacuumed
-    history cannot leak into the snapshot."""
+    history cannot leak into the snapshot — with the version's logged
+    schema (the first live footer's for a log that predates it)."""
     entries = _read_log(path, version)
     if not entries:
         raise ValueError(f"no committed versions at {path}")
@@ -230,7 +270,11 @@ def read_table(spark, path: str, version: int | None = None) -> DataFrame:
             f"vacuumed files (e.g. {missing[0]}); time travel past the "
             "vacuum horizon is gone"
         )
-    return _read_as_written(spark, *[os.path.join(path, f) for f in files])
+    paths = [os.path.join(path, f) for f in files]
+    schema = entries[-1].get("schema")
+    if schema is None:
+        return _read_as_written(spark, *paths)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
 
 
 def table_history(spark, path: str) -> DataFrame:

@@ -422,7 +422,7 @@ def _minhash_transitive_portable_oracle(
         "the survivor/component CENSUS — one row per transitive duplicate "
         "cluster with its min-id survivor, size and survivor metadata — "
         "computed by the full pipeline over the ENGINE-PORTABLE hash "
-        "family (operators/dedup.py minhash_pairs_portable: md5-32 "
+        "family (operators/dedup.py minhash_pairs(portable=True): md5-32 "
         "word-2-gram signatures — the dedup_minhash_portable permutation "
         "family over shingle's whitespace-run word 2-grams — band keys as raw "
         "signature-slice strings, exact hash-set Jaccard verify at 0.8) "
@@ -440,8 +440,8 @@ def _minhash_transitive_portable_oracle(
 )
 def _dmincc(spark, sf_dir):
     (docs,) = _load(spark, sf_dir, "documents")
-    pairs = dd.minhash_pairs_portable(
-        docs, "text", "doc_id",
+    pairs = dd.minhash_pairs(
+        docs, "text", "doc_id", portable=True,
         num_hashes=16, bands=4, rows_per_band=4,
         shingle_size=2, jaccard_threshold=0.8,
     )

@@ -52,8 +52,9 @@ def _pagerank_sql(iters: int = 3, d: float = 0.85) -> str:
     "pagerank_order_part",
     _pagerank_sql(iters=3),
     doc="fixed-iteration PageRank on the symmetrized order-part graph — "
-        "DataFrame-native Pregel: static (src,dst,outdeg) persisted once, one "
-        "mass shuffle per power step, localCheckpoint lineage truncation; "
+        "DataFrame-native Pregel: static (src,dst,outdeg) built once and "
+        "pre-partitioned by src, one mass shuffle per power step, "
+        "localCheckpoint lineage truncation; "
         "oracle unrolls the 3 iterations into chained CTEs with repr'd float "
         "literals, rank normalized to mean 1.0 and 6dp-rounded",
 )

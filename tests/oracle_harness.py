@@ -6,6 +6,8 @@ cell-by-cell (exact for ints/strings/bools/timestamps; exact for
 doubles too — the suite is engineered for bit-identical float output,
 see the suite/__init__.py docstring — with a tiny epsilon fallback reported as a
 WARNING so drift is visible before it breaks the driver's hash).
+The Spark collect and the oracle are timed apart (``Comparison.spark_s``
+and ``oracle_s``).
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from __future__ import annotations
 import math
 import os
 import tempfile
+import time
 from dataclasses import dataclass, field
 
 import duckdb
@@ -59,12 +62,18 @@ class Comparison:
     row_count_oracle: int
     mismatches: list[str] = field(default_factory=list)
     float_drift: float = 0.0
+    spark_s: float = 0.0  # wall seconds of the Spark collect
+    oracle_s: float = 0.0  # wall seconds of the DuckDB oracle
 
 
 def compare(name: str, spark_df, oracle_sql: str, sf_dir: str) -> Comparison:
-    sp = canonicalize(spark_df.toPandas())
-    od = canonicalize(run_oracle(oracle_sql, sf_dir))
-    result = Comparison(name, True, len(sp), len(od))
+    t0 = time.perf_counter()
+    sp = spark_df.toPandas()
+    t1 = time.perf_counter()
+    od = run_oracle(oracle_sql, sf_dir)
+    t2 = time.perf_counter()
+    sp, od = canonicalize(sp), canonicalize(od)
+    result = Comparison(name, True, len(sp), len(od), spark_s=t1 - t0, oracle_s=t2 - t1)
     if len(sp) != len(od):
         result.ok = False
         result.mismatches.append(f"row count {len(sp)} != {len(od)}")

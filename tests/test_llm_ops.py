@@ -223,9 +223,16 @@ def test_minhash_transitive_keeps_one_per_chain(spark):
     assert set(kept_transitive) <= set(kept_fast)
 
 
+#: The portable MinHash parameters of the dedup_minhash_transitive query.
+_PORTABLE_KW = dict(
+    num_hashes=16, bands=4, rows_per_band=4, shingle_size=2,
+    jaccard_threshold=0.8,
+)
+
+
 def test_minhash_pairs_portable_matches_hashed_banding(spark):
-    """The engine-portable MinHash pair pipeline (md5-32 word-2-gram
-    family, string band keys) finds exact/near dups and skips unrelated
+    """minhash_pairs(portable=True) (md5-32 word-2-gram family, string
+    band keys) finds exact/near dups and skips unrelated
     docs; and `lsh_candidate_pairs(portable=True)` proposes the SAME
     candidate set as the xxhash64-keyed banding on identical signatures
     (hashing the band key is a pure size optimization)."""
@@ -240,8 +247,8 @@ def test_minhash_pairs_portable_matches_hashed_banding(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     pairs = {
         (r.id_a, r.id_b)
-        for r in dd.minhash_pairs_portable(
-            df, "text", "doc_id", jaccard_threshold=0.8
+        for r in dd.minhash_pairs(
+            df, "text", "doc_id", portable=True, **_PORTABLE_KW
         ).collect()
     }
     assert pairs == {(1, 2)}
@@ -262,8 +269,8 @@ def test_minhash_pairs_portable_matches_hashed_banding(spark):
 
 
 def test_minhash_pairs_portable_collapses_exact_families(spark):
-    """The portable twin carries the same exact-family star reduction
-    as production minhash_pairs (code-review r12): an m-identical-doc
+    """The portable hash family carries the same exact-family star
+    reduction as the xxhash64 default (code-review r12): an m-identical-doc
     family emits m-1 star pairs, not m(m-1)/2 — and the star induces
     the SAME connected components as the uncollapsed clique, which is
     why the suite's CC-census oracle needs no collapse restatement."""
@@ -275,12 +282,15 @@ def test_minhash_pairs_portable_collapses_exact_families(spark):
     fam = [(i, "the exact same boilerplate licence text") for i in range(50)]
     other = [(999, "completely different words about unrelated things")]
     df = spark.createDataFrame(fam + other, ["doc_id", "text"])
-    star = dd.minhash_pairs_portable(df, "text", "doc_id").collect()
+    star = dd.minhash_pairs(
+        df, "text", "doc_id", portable=True, **_PORTABLE_KW
+    ).collect()
     assert len(star) == 49
     assert all(r.id_a == 0 for r in star)
 
-    clique = dd.minhash_pairs_portable(
-        df, "text", "doc_id", collapse_exact=False
+    clique = dd.minhash_pairs(
+        df, "text", "doc_id", portable=True, collapse_exact=False,
+        **_PORTABLE_KW,
     ).collect()
     assert len(clique) == 49 * 50 // 2
 
@@ -1599,6 +1609,47 @@ def test_minhash_collapse_ignores_null_text(spark):
     assert dd.minhash_pairs(df, "text", "doc_id").count() == 0
     kept = sorted(r.doc_id for r in dd.minhash_dedup(df, "text", "doc_id").collect())
     assert kept == [1, 2, 3], "null-text docs all survive, never paired"
+
+
+@pytest.mark.parametrize("portable", [False, True])
+def test_minhash_null_text_pairs_with_nothing(spark, portable):
+    """Under both hash families and both collapse_exact values,
+    NULL-text docs pair with nothing — shingle(NULL) is [NULL], whose
+    xxhash64 is the constant 42, so two NULL docs once shared a one-hash
+    set and paired at Jaccard 1.0 when uncollapsed — and the collapsed
+    and uncollapsed pair sets give the same components."""
+    words = [f"w{i}" for i in range(40)]
+    texts = {
+        1: None,
+        2: None,
+        3: " ".join(words[0:20]),
+        4: " ".join(words[0:20]),             # exact dup of 3
+        5: " ".join(words[0:20] + ["extra"]),  # J(2-grams) = 19/20 vs 3
+        6: None,
+        7: " ".join(words[20:40]),
+    }
+    df = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
+    nulls = {d for d, t in texts.items() if t is None}
+
+    def comps(pairs):
+        return {
+            (r.doc_id, r.component)
+            for r in gr.assign_components(
+                df.select("doc_id"), "doc_id", pairs.select("id_a", "id_b")
+            ).collect()
+        }
+
+    got = {}
+    for collapse in (False, True):
+        pairs = dd.minhash_pairs(
+            df, "text", "doc_id", portable=portable, collapse_exact=collapse,
+            **_PORTABLE_KW,
+        )
+        ids = {i for r in pairs.collect() for i in (r.id_a, r.id_b)}
+        assert not ids & nulls, (collapse, ids)
+        got[collapse] = comps(pairs)
+    assert got[False] == got[True]
+    assert {c for d, c in got[True] if d in (3, 4, 5)} == {3}
 
 
 def test_portable_signatures_guard_and_discriminate(spark):

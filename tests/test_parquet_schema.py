@@ -13,6 +13,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import glob
+import json
 import os
 import sys
 
@@ -204,23 +205,55 @@ def _ids(spark, lo, hi):
 
 
 def test_txlog_reads_take_the_first_live_footer(spark, tmp_path):
-    appended, widened, overwritten = (
-        str(tmp_path / n) for n in ("appended", "widened", "overwritten")
+    """A version reads with its logged schema, in 0 jobs; an append that
+    would widen the table fails at commit, and an overwrite may change
+    the schema.  A log entry without a schema (written before the
+    schema was logged) reads the first live footer."""
+    appended, widened, overwritten, legacy = (
+        str(tmp_path / n) for n in ("appended", "widened", "overwritten", "legacy")
     )
     txlog.commit(_ids(spark, 0, 6), appended)
     txlog.commit(_ids(spark, 6, 9), appended)
-    # the live files disagree: Spark's inference reads the first sorted one
     txlog.commit(_ids(spark, 0, 6), widened)
-    txlog.commit(_ids(spark, 6, 9).selectExpr("id", "s", "id * 2 AS d"), widened)
+    with pytest.raises(ValueError, match="append schema"):
+        txlog.commit(_ids(spark, 6, 9).selectExpr("id", "s", "id * 2 AS d"), widened)
+    assert txlog.current_version(widened) == 0
+    assert len(os.listdir(os.path.join(widened, "data"))) == 1
     txlog.commit(_ids(spark, 0, 6), overwritten)
     txlog.commit(_ids(spark, 6, 9).selectExpr("s", "id * 2 AS d"), overwritten, mode="overwrite")
-    for table in (appended, widened, overwritten):
-        for version in (0, 1):
+    txlog.commit(_ids(spark, 0, 6), legacy)
+    txlog.commit(_ids(spark, 6, 9), legacy)
+    for version in (0, 1):
+        entry = os.path.join(legacy, "_txlog", f"{version:010d}.json")
+        with open(entry) as fh:
+            logged = json.load(fh)
+        assert logged.pop("schema")
+        with open(entry, "w") as fh:
+            json.dump(logged, fh)
+    for table, versions in ((appended, (0, 1)), (widened, (0,)), (overwritten, (0, 1)), (legacy, (0, 1))):
+        for version in versions:
             files = txlog._live_files(txlog._read_log(table, version))
             df, jobs = count_jobs(spark, lambda: txlog.read_table(spark, table, version))
             assert jobs == 0, (table, version)
             assert df.schema == spark.read.parquet(*[os.path.join(table, f) for f in files]).schema
     assert txlog.read_table(spark, overwritten).columns == ["s", "d"]
+
+
+def test_txlog_append_rejects_a_changed_schema(spark, tmp_path):
+    """Appending (id, s) and then (id, s, d) fails on every fresh table,
+    so a version can never read with the added column on one run and
+    without it on the next; an append that differs only in nullability
+    is the same schema."""
+    for i in range(4):
+        t = str(tmp_path / f"t{i}")
+        txlog.commit(_ids(spark, 0, 6), t)
+        with pytest.raises(ValueError, match="append schema"):
+            txlog.commit(_ids(spark, 6, 9).selectExpr("id", "s", "id * 2 AS d"), t)
+        assert txlog.read_table(spark, t).columns == ["id", "s"]
+    nullable = _ids(spark, 6, 9).selectExpr("IF(id > 100, NULL, id) AS id", "s")
+    assert not _ids(spark, 0, 1).schema["id"].nullable and nullable.schema["id"].nullable
+    assert txlog.commit(nullable, t) == 1
+    assert txlog.read_table(spark, t).count() == 9
 
 
 def test_compaction_and_manifest_read_the_flat_footer(spark, tmp_path):

@@ -628,9 +628,11 @@ def test_stream_txlog_sink_exactly_once(spark, staged_events, tmp_path):
         is None
     )
     assert txlog.read_table(spark, table).count() == want
-    # a NEW batch id from the same app does commit
+    # a NEW batch id from the same app does commit; its rows come from
+    # the table, since an append must match the logged schema (the
+    # stream declares ts as TIMESTAMP, the batch read infers TIMESTAMP_NTZ)
     v = txlog.commit(
-        batch.limit(5), table, mode="append",
+        txlog.read_table(spark, table).limit(5), table, mode="append",
         txn=("events-loader", last_batch + 1),
     )
     assert v == v_before + 1

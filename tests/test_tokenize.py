@@ -89,7 +89,7 @@ def test_oracle_gram_fragments_match_their_operators(spark):
 
 def test_minhash_transitive_oracle_pairs_match_on_any_whitespace(spark):
     """The dedup_minhash_transitive oracle's verified pairs equal
-    minhash_pairs_portable's on near-duplicates that differ only in
+    minhash_pairs(portable=True)'s on near-duplicates that differ only in
     their separators.  collapse_exact=False: the oracle restates the
     uncollapsed pair list (the star collapse is component-equivalent,
     not pair-identical)."""
@@ -107,8 +107,8 @@ def test_minhash_transitive_oracle_pairs_match_on_any_whitespace(spark):
         "",
     ]
     documents = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-    sp = dd.minhash_pairs_portable(
-        spark.createDataFrame(documents), "text", "doc_id",
+    sp = dd.minhash_pairs(
+        spark.createDataFrame(documents), "text", "doc_id", portable=True,
         num_hashes=16, bands=4, rows_per_band=4,
         shingle_size=2, jaccard_threshold=0.8, collapse_exact=False,
     )
